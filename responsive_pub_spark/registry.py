@@ -78,8 +78,13 @@ def _median_id(df: DataFrame, col: str = "doc_id"):
     """The id at sorted position n//2 — reproduces the streaming gate
     rows' historical ``rows[:half]`` / ``rows[half:]`` wave split as two
     source-side filters (ids are unique), so the corpus never round-trips
-    the driver as pickled rows (r15, guide §5)."""
+    the driver as pickled rows (r15, guide §5). An empty table has no
+    median: that raises a ValueError naming the column."""
     n = df.count()
+    if n == 0:
+        raise ValueError(
+            f"_median_id: no rows to split on {col!r} — the table is empty"
+        )
     return (
         df.select(col).orderBy(col).offset(n // 2).limit(1).collect()[0][0]
     )

@@ -29,6 +29,10 @@ def build_spark(
       vectorized, the analog of the reference's async batching
       (internal/async/AsyncThreadPool).
     - UTC session timezone: deterministic event-time semantics.
+    - Driver-side file listing up to 1024 paths: a file-stream micro-batch
+      names its new files, and past the default of 32 Spark launched a
+      distributed job per batch just to stat them (two 36-task jobs in an
+      FK-join advance that picked up 36 files).
     """
     # before the JVM launches: local-mode Python workers inherit the driver
     # environment at JVM start, so the transformWithState lane's protobuf
@@ -54,6 +58,7 @@ def build_spark(
             str(shuffle_partitions or int(cpus) if str(cpus).isdigit() else 32),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -77,7 +77,9 @@ def async_map_ordered(
         if order_by:
             pdf = pdf.sort_values(list(order_by), kind="mergesort")
         cols = list(pdf.columns)
-        records = [dict(zip(cols, r)) for r in pdf.itertuples(index=False, name=None)]
+        # object rows, not itertuples: the same values (as in
+        # state._replay) at a fraction of the cost
+        records = [dict(zip(cols, r)) for r in pdf.to_numpy(dtype=object).tolist()]
         # group row indices by key, preserving in-key input order
         by_key: dict[tuple, list[int]] = {}
         for i, rec in enumerate(records):

@@ -124,9 +124,9 @@ def run_concurrent(*thunks: Callable[[], None]) -> None:
     (source listing, planning, python-worker spawn) overlaps instead of
     serializing. ``inheritable_thread_target`` carries the driver
     thread's JVM-local properties (job group/description) into the
-    worker threads, per the PySpark docs. Raises the first failure
-    after all thunks settle — a crashed sibling never leaves a query
-    silently running."""
+    worker threads, per the PySpark docs. After all thunks settle — a
+    crashed sibling never leaves a query silently running — it raises an
+    ``ExceptionGroup`` holding every failure, in thunk order."""
     if len(thunks) == 1:
         thunks[0]()
         return
@@ -143,7 +143,9 @@ def run_concurrent(*thunks: Callable[[], None]) -> None:
             except Exception as e:  # settle all before raising
                 errs.append(e)
         if errs:
-            raise errs[0]
+            raise ExceptionGroup(
+                f"{len(errs)} of {len(thunks)} concurrent drains failed", errs
+            )
 
 
 def run_to_sink(

@@ -580,7 +580,15 @@ class ProcessorContext:
     def _to_pdf(self) -> pd.DataFrame:
         if self._out_cols is None:
             return pd.DataFrame()
-        return pd.DataFrame(dict(zip(self._out_cols, self._out_data)))
+        # copy=False skips block consolidation and a given index skips its
+        # inference: together a third of a small frame's cost. The dtypes
+        # are inferred as with the defaults.
+        n = len(self._out_data[0]) if self._out_data else 0
+        return pd.DataFrame(
+            dict(zip(self._out_cols, self._out_data)),
+            index=pd.RangeIndex(n),
+            copy=False,
+        )
 
     def schedule(
         self,
@@ -645,7 +653,9 @@ class ProcessorContext:
                 t.callback(self, t.next_fire)
                 t.next_fire += t.interval_s
         self.timestamp = ts
-        for st in self._all_stores():
+        # per record: the primary store inline, not through _all_stores()
+        self.store.stream_time = max(self.store.stream_time, ts)
+        for st in self._extra_stores.values():
             st.stream_time = max(st.stream_time, ts)
 
 
@@ -673,28 +683,54 @@ def _replay(
     """Replay records through the processor. Default order is event time
     (+tiebreaks); ``arrival_col`` replays in ARRIVAL order instead — records
     may then be out-of-order in event time, exactly like a Kafka partition,
-    which is what KS grace/lateness semantics are defined against."""
+    which is what KS grace/lateness semantics are defined against.
+
+    The order is that of a stable ``sort_values(order, kind="mergesort")``
+    with missing values last, and each record holds the values
+    ``itertuples`` would give. Most keys bring one or a few records per
+    micro-batch, so the body works on plain row lists: pandas' sort, row
+    iteration and Series access cost far more per key than the records
+    themselves (tests/test_property_state.py pins the equivalence)."""
     cols = list(pdf.columns)
-    if arrival_col is not None:
-        order = [arrival_col]
-    else:
-        order = [ts_col, *[c for c in order_by if c != ts_col]]
-    pdf = pdf.sort_values(order, kind="mergesort")
-    if str(pdf[ts_col].dtype).startswith("datetime64"):
-        # normalize to ns first: datetime64[us] would floor-div wrong
-        ts_vals = pdf[ts_col].astype("datetime64[ns]").astype("int64").to_numpy() / 1e9
-    else:
-        ts_vals = pdf[ts_col].astype("float64").to_numpy()
-    rows = pdf.itertuples(index=False, name=None)
+    order = [arrival_col] if arrival_col is not None else [
+        ts_col, *[c for c in order_by if c != ts_col]
+    ]
+    missing = [c for c in order if c not in cols]
+    if missing:
+        raise KeyError(missing[0])
+    if pdf.empty:
+        return
+    # dtype=object keeps each column's own scalars (int stays int)
+    rows = pdf.to_numpy(dtype=object).tolist()
+    ti = cols.index(ts_col)
+    ts_vals = [r[ti] for r in rows]
+    if not all(type(t) is float for t in ts_vals):
+        ts = pdf[ts_col]
+        if str(ts.dtype).startswith("datetime64"):
+            # normalize to ns first: datetime64[us] would floor-div wrong
+            ts = ts.astype("datetime64[ns]").astype("int64").to_numpy() / 1e9
+        ts_vals = ts.astype("float64").tolist()
+    recs = list(zip(ts_vals, rows))
+    if len(recs) > 1:
+        oi = [cols.index(c) for c in order]
+        recs.sort(key=lambda tr: [_na_last(tr[1][i]) for i in oi])
     has_headers = "headers" in cols
-    for ts_s, row in zip(ts_vals, rows):
-        ctx._advance(float(ts_s))
+    for ts_s, row in recs:
+        ctx._advance(ts_s)
         rec = dict(zip(cols, row))
         if has_headers:
             # the KS Record.headers() surface: current record's headers
             # visible on the context for the duration of process()
             ctx.headers = rec["headers"]
         proc.process(ctx, rec)
+
+
+def _na_last(v) -> tuple:
+    """Sort key of one value with pandas' ``na_position="last"``: None,
+    NaN, NaT and NA sort after every value and tie with each other."""
+    if v is None or v is pd.NA or v != v:
+        return (1, 0)
+    return (0, v)
 
 
 def process(
@@ -814,6 +850,15 @@ def _schema_field_names(schema: "StructType | str") -> list[str]:
     return names
 
 
+def _empty_output(schema: "StructType | str") -> pd.DataFrame:
+    """The output frame of a key that forwarded nothing: every schema
+    column, no rows. A lane builds it once and yields the same frame for
+    every such key (PySpark only reads it)."""
+    return pd.DataFrame(
+        {n: pd.Series(dtype="object") for n in _schema_field_names(schema)}
+    )
+
+
 def process_streaming(
     sdf: DataFrame,
     key: Sequence[str],
@@ -841,6 +886,7 @@ def process_streaming(
     from responsive_pub_spark.streaming.segstore import SegmentedKeyValueStore
 
     keys = list(key)
+    empty = _empty_output(output_schema)
 
     def run(key_vals, pdf_iter: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
         raw = state.get[0] if (state.exists and state.get[0]) else None
@@ -886,11 +932,7 @@ def process_streaming(
             )
         state.update((payload,))
         out = ctx._to_pdf()
-        if out.empty:
-            out = pd.DataFrame(
-                {n: pd.Series(dtype="object") for n in _schema_field_names(output_schema)}
-            )
-        yield out
+        yield empty if out.empty else out
 
     return sdf.groupBy(*keys).applyInPandasWithState(
         run, output_schema, _STATE_SCHEMA, output_mode, GroupStateTimeout.NoTimeout
@@ -944,6 +986,7 @@ def process_streaming_tws(
     keys = list(key)
     factory = processor_factory
     ttl = ttl_seconds
+    empty = _empty_output(output_schema)
 
     class _Tws(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -990,14 +1033,7 @@ def process_streaming_tws(
                 )
             self._blob.update((payload,))
             out = ctx._to_pdf()
-            if out.empty:
-                out = pd.DataFrame(
-                    {
-                        n: pd.Series(dtype="object")
-                        for n in _schema_field_names(output_schema)
-                    }
-                )
-            yield out
+            yield empty if out.empty else out
 
         def close(self) -> None:
             pass
@@ -1286,6 +1322,7 @@ def process_streaming_tws_map(
     ttl = ttl_seconds
 
     extra_names = [n for n in store_names if n != "default"]
+    empty = _empty_output(output_schema)
 
     class _TwsMap(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -1356,14 +1393,7 @@ def process_streaming_tws_map(
                 )
             )
             out = ctx._to_pdf()
-            if out.empty:
-                out = pd.DataFrame(
-                    {
-                        n: pd.Series(dtype="object")
-                        for n in _schema_field_names(output_schema)
-                    }
-                )
-            yield out
+            yield empty if out.empty else out
 
         def close(self) -> None:
             pass

@@ -274,3 +274,170 @@ def test_window_store_key_range_matches_bruteforce_model(
     assert list(
         ws.backward_fetch_key_range(key_from, key_to, float(t_from), float(t_to))
     ) == list(reversed(model))
+
+
+# ---------------------------------------------------------------------------
+# _replay vs the pandas replay it replaced (sort_values + itertuples)
+# ---------------------------------------------------------------------------
+
+
+def _pandas_replay(pdf, ts_col, order_by, arrival_col):
+    """The replay order and records as pandas gives them: a stable
+    mergesort with missing values last, then itertuples."""
+    import numpy as np
+
+    cols = list(pdf.columns)
+    if arrival_col is not None:
+        order = [arrival_col]
+    else:
+        order = [ts_col, *[c for c in order_by if c != ts_col]]
+    pdf = pdf.sort_values(order, kind="mergesort")
+    if str(pdf[ts_col].dtype).startswith("datetime64"):
+        ts_vals = pdf[ts_col].astype("datetime64[ns]").astype("int64").to_numpy() / 1e9
+    else:
+        ts_vals = pdf[ts_col].astype("float64").to_numpy()
+    return [
+        (float(t), dict(zip(cols, row)))
+        for t, row in zip(np.asarray(ts_vals), pdf.itertuples(index=False, name=None))
+    ]
+
+
+def _same(a, b) -> bool:
+    """Equal value of the same type; NaN/NaT equal themselves."""
+    if type(a) is not type(b):
+        return False
+    if a is None:
+        return True
+    eq = a == b
+    return bool(eq) or (a != a and b != b)
+
+
+_nan = float("nan")
+_ts_kinds = ("float64", "int64", "datetime64[us]", "datetime64[ns]")
+
+
+@st.composite
+def _replay_frames(draw):
+    import numpy as np
+    import pandas as pd
+
+    n = draw(st.integers(1, 7))
+    col = lambda elems: draw(st.lists(elems, min_size=n, max_size=n))  # noqa: E731
+    kind = draw(st.sampled_from(_ts_kinds))
+    if kind == "float64":
+        ts = np.array(col(st.sampled_from([0.0, -0.0, 1.5, 2.0, 1e12 + 0.5, _nan])))
+    elif kind == "int64":
+        ts = np.array(col(st.integers(-3, 3)), dtype="int64")
+    else:  # a few seconds apart, sub-second digits that round in /1e9
+        ts = np.array(
+            col(st.sampled_from([0, 1_000_001, 1_000_001, 1_700_000_000_123_457])),
+            dtype="datetime64[us]",
+        ).astype(kind)
+    pdf = pd.DataFrame({
+        "ts": ts,
+        # ties on purpose: small alphabets, and None and NaN in the keys
+        "a": col(st.sampled_from(["x", "y", "xy", None, _nan])),
+        "b": np.array(col(st.sampled_from([0.0, 1.0, -2.5, _nan])), dtype="float64"),
+        "c": col(st.integers(0, 2)),
+        "arrival": col(st.integers(0, 3)),
+        "payload": [f"p{i}" for i in range(n)],
+    })
+    if draw(st.booleans()):  # numeric-only frames too: ints stay ints
+        pdf = pdf.drop(columns=["a", "payload"])
+    if draw(st.booleans()):
+        pdf["headers"] = col(st.one_of(
+            st.none(),
+            st.lists(st.fixed_dictionaries({
+                "key": st.sampled_from(["h1", "h2"]),
+                "value": st.binary(max_size=2),
+            }), max_size=2),
+        ))
+    order_by = draw(st.lists(
+        st.sampled_from([c for c in ("a", "b", "c", "ts") if c in pdf]), unique=True
+    ))
+    arrival = draw(st.sampled_from([None, "arrival"]))
+    return pdf, order_by, arrival
+
+
+@settings(max_examples=400, deadline=None)
+@given(case=_replay_frames())
+def test_replay_feeds_records_exactly_like_pandas_sort_and_itertuples(case):
+    """``_replay`` walks plain row lists instead of sorting and iterating
+    a DataFrame: the processor must still see the same records, in the
+    same order, with the same values AND types, the same stream time, and
+    the same ``ctx.headers`` — for 1-row and multi-row groups, ties, None
+    and NaN in the order columns, float/int/datetime64[us|ns] time and
+    arrival order."""
+    from responsive_pub_spark.streaming.state import Processor, _replay
+
+    pdf, order_by, arrival = case
+
+    class _Record(Processor):
+        def __init__(self):
+            self.seen = []
+
+        def process(self, ctx, rec):
+            self.seen.append((ctx.timestamp, rec, ctx.headers))
+
+    proc = _Record()
+    ctx = ProcessorContext(("k",), KeyValueStore())
+    _replay(proc, ctx, pdf.copy(), "ts", order_by, arrival)
+    want = _pandas_replay(pdf, "ts", order_by, arrival)
+
+    assert len(proc.seen) == len(want)
+    for (ts, rec, headers), (want_ts, want_rec) in zip(proc.seen, want):
+        assert _same(ts, want_ts), (ts, want_ts)
+        assert list(rec) == list(want_rec)
+        for c in want_rec:
+            assert _same(rec[c], want_rec[c]), (c, rec[c], want_rec[c])
+        if "headers" in want_rec:
+            assert headers is rec["headers"]
+
+
+def test_replay_keeps_the_missing_order_column_error():
+    """A misspelled order column fails for a 1-row group too, not only
+    when a group is big enough to need sorting."""
+    import pandas as pd
+
+    from responsive_pub_spark.streaming.state import Processor, _replay
+
+    ctx = ProcessorContext(("k",), KeyValueStore())
+    with pytest.raises(KeyError, match="nope"):
+        _replay(Processor(), ctx, pd.DataFrame({"ts": [1.0]}), "ts", ["nope"])
+
+
+def test_streaming_lane_shares_one_empty_output_frame():
+    """Keys that forward nothing get the lane's one schema-typed empty
+    frame, built once per closure instead of once per key."""
+    import pandas as pd
+
+    from responsive_pub_spark.streaming import state as st_mod
+
+    class _Capture:
+        def groupBy(self, *keys):  # noqa: N802
+            return self
+
+        def applyInPandasWithState(self, fn, *args):  # noqa: N802
+            self.fn = fn
+
+    class _State:
+        exists, blob = False, None
+
+        def update(self, value):
+            self.blob = value[0]
+
+    class _Silent(st_mod.Processor):
+        def process(self, ctx, rec):
+            pass
+
+    cap = _Capture()
+    st_mod.process_streaming(
+        cap, key=["k"], processor_factory=_Silent,
+        output_schema="k STRING, n BIGINT",
+    )
+    frame = pd.DataFrame({"k": ["a"], "ts": [1.0]})
+    out1 = list(cap.fn(("a",), iter([frame]), _State()))
+    out2 = list(cap.fn(("b",), iter([frame]), _State()))
+    assert len(out1) == len(out2) == 1
+    assert out1[0] is out2[0]
+    assert list(out1[0].columns) == ["k", "n"] and out1[0].empty
