@@ -653,9 +653,7 @@ class ProcessorContext:
                 t.callback(self, t.next_fire)
                 t.next_fire += t.interval_s
         self.timestamp = ts
-        # per record: the primary store inline, not through _all_stores()
-        self.store.stream_time = max(self.store.stream_time, ts)
-        for st in self._extra_stores.values():
+        for st in self._all_stores():
             st.stream_time = max(st.stream_time, ts)
 
 
