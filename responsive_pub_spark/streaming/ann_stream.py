@@ -31,23 +31,22 @@ PARTITIONED BY cid, and ``topk`` resolves the probed cids up front into
 a static partition filter — the candidate scan reads n_probes cells,
 never the whole index; queries shuffle nothing but the candidate rows of
 the probed lists. ``compact()`` collapses replay duplicates and
-micro-batch small files through the same crash-atomic version publish as
-retrain. foreachBatch appends are at-least-once across a mid-batch
-crash — dedup on vec_id at read time if exact-once matters
-(``lists(dedup=True)``).
+micro-batch small files through the same versioned publish as retrain
+(``commitlog.VersionedSnapshot``). foreachBatch appends are
+at-least-once across a mid-batch crash — dedup on vec_id at read time
+if exact-once matters (``lists(dedup=True)``).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from responsive_pub_spark.operators import similarity
 from responsive_pub_spark.streaming.commitlog import (
-    fsync_dir,
+    VersionedSnapshot,
     maintenance_lock,
 )
 
@@ -80,15 +79,14 @@ class IvfIncremental:
     for a given ``workdir`` — it is frozen into the index directory;
     later instances (restarts) read the frozen copy.
 
-    Crash-safety: the serving index {centroids, lists} lives in a
-    VERSIONED directory (``index/v000000``, ``v000001``, ...) selected by
-    a one-line ``CURRENT`` pointer file. A retrain stages the complete
-    next version (lists AND centroids) in its own directory, then
-    publishes with a single atomic ``os.replace`` of the pointer — a
-    crash at ANY point serves a self-consistent pair: before the flip the
-    old version (old centroids + old lists, the staged dir is invisible),
-    after it the new one. Orphaned stage dirs from crashed retrains are
-    garbage-collected on the next construction. Appends are EPOCH-FENCED
+    Crash-safety: the serving index {centroids, lists, codes} lives in
+    a VERSIONED directory (``index/v000000``, ``v000001``, ...) named by
+    the ``CURRENT`` pointer and published through
+    ``commitlog.VersionedSnapshot`` (protocol and crash windows in the
+    ``commitlog`` module docstring): a crash at ANY point serves a
+    self-consistent set, the old version before the flip and the new one
+    after it. Orphans are collected by the next locked maintenance call,
+    never by a reader's construction. Appends are EPOCH-FENCED
     against the maintenance publishes (:meth:`maybe_retrain` /
     :meth:`compact`): each append batch re-checks the version pointer
     after its write and fails loudly (pre-checkpoint-commit, so the
@@ -111,67 +109,28 @@ class IvfIncremental:
         #: lazy (m_sub, subdim) for this corpus's embedding dim
         self._pq_dims_cache: "tuple[int, int] | None" = None
         os.makedirs(self.vecs_dir, exist_ok=True)
-        os.makedirs(self.index_root, exist_ok=True)
-        # NO construction-time GC (r12 verdict: reader-GC hazard) —
-        # constructing a handle is a READER action; a reader collecting
-        # while a retrain/compact has the next version staged would
-        # delete it right before the maintainer's pointer flip. Orphans
-        # are collected by the next LOCKED maintenance call.
-        if self._current() is None:
+        self.index = VersionedSnapshot(
+            self.index_root,
+            self.pointer,
+            "v",
+            chaos=_chaos_kill,
+            labels=("staged-all", "post-flip"),
+        )
+        if self.index.current() is None:
             if centroids is None:
                 raise ValueError(
                     "IvfIncremental: first build needs centroids= "
                     "(e.g. similarity.train_centroids(corpus_sample))"
                 )
             with maintenance_lock(self.maint_lock, "IVF initial build"):
-                v0 = os.path.join(self.index_root, "v000000")
-                os.makedirs(os.path.join(v0, "lists"), exist_ok=True)
-                centroids.select(
-                    "cid",
-                    F.col("centv").cast("array<double>").alias("centv"),
-                ).coalesce(1).write.mode("overwrite").parquet(
-                    os.path.join(v0, "centroids")
-                )
-                self._publish("v000000")
-
-    # -- versioned-pointer protocol ------------------------------------
-    def _current(self) -> "str | None":
-        try:
-            with open(self.pointer) as f:
-                v = f.read().strip()
-            return v or None
-        except FileNotFoundError:
-            return None
-
-    def _publish(self, version: str) -> None:
-        """Atomically flip the serving pointer: write-temp + fsync +
-        os.replace (atomic on POSIX) — readers see either the old or the
-        new version string, never a partial write."""
-        tmp = self.pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(version)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.pointer)
-        fsync_dir(os.path.dirname(self.pointer) or ".")
-
-    def _gc_unpublished(self) -> None:
-        """Remove version dirs the pointer does not reference — staged
-        next-versions from a crash before the flip, and superseded old
-        versions from a crash after it. Safe by construction: the
-        pointed-to version is never touched. INTERNAL — callers hold the
-        maintenance flock (readers must never GC: a reader collecting
-        mid-retrain deletes the staged next version right before the
-        maintainer's flip)."""
-        cur = self._current()
-        for name in os.listdir(self.index_root):
-            if name != cur:
-                shutil.rmtree(
-                    os.path.join(self.index_root, name), ignore_errors=True
-                )
-        tmp = self.pointer + ".tmp"
-        if os.path.exists(tmp):
-            os.remove(tmp)
+                with self.index.publish() as v0:
+                    os.makedirs(os.path.join(v0, "lists"))
+                    centroids.select(
+                        "cid",
+                        F.col("centv").cast("array<double>").alias("centv"),
+                    ).coalesce(1).write.mode("overwrite").parquet(
+                        os.path.join(v0, "centroids")
+                    )
 
     def gc(self) -> None:
         """LOCKED orphan collection — a maintainer action: collect
@@ -180,19 +139,19 @@ class IvfIncremental:
         (fails loudly if another maintainer holds it; readers never
         GC)."""
         with maintenance_lock(self.maint_lock, "IVF maintenance"):
-            self._gc_unpublished()
+            self.index.gc()
 
     @property
     def cent_dir(self) -> str:
-        return os.path.join(self.index_root, self._current(), "centroids")
+        return os.path.join(self.index.current(), "centroids")
 
     @property
     def lists_dir(self) -> str:
-        return os.path.join(self.index_root, self._current(), "lists")
+        return os.path.join(self.index.current(), "lists")
 
     @property
     def codes_dir(self) -> str:
-        return os.path.join(self.index_root, self._current(), "codes")
+        return os.path.join(self.index.current(), "codes")
 
     def centroids(self) -> DataFrame:
         return self.spark.read.schema(CENT_SCHEMA).parquet(self.cent_dir)
@@ -295,8 +254,7 @@ class IvfIncremental:
         read contract."""
 
         def assign_batch(batch_df: DataFrame, _epoch: int) -> None:
-            v0 = self._current()
-            vdir = os.path.join(self.index_root, v0)
+            vdir = self.index.current()
             cent = self.spark.read.schema(CENT_SCHEMA).parquet(
                 os.path.join(vdir, "centroids")
             )
@@ -322,10 +280,11 @@ class IvfIncremental:
             ).partitionBy("cid").parquet(os.path.join(vdir, "codes"))
             if IvfIncremental._mid_append_hook is not None:
                 IvfIncremental._mid_append_hook(self)
-            v1 = self._current()
-            if v1 != v0:
+            now = self.index.current()
+            if now != vdir:
                 raise RuntimeError(
-                    f"IvfIncremental: index version flipped {v0}->{v1} "
+                    "IvfIncremental: index version flipped "
+                    f"{os.path.basename(vdir)}->{os.path.basename(now)} "
                     "during an append — the batch's rows target a retired "
                     "version and would be lost; failing before the "
                     "checkpoint commit so the batch replays into the new "
@@ -527,9 +486,9 @@ class IvfIncremental:
     def compact(self) -> int:
         """Collapse at-least-once replay duplicates and micro-batch small
         files by rewriting the list table (still cid-partitioned) as a
-        NEW index version — published with the same crash-atomic pointer
-        flip as :meth:`maybe_retrain` (centroids copied unchanged, so the
-        serving pair stays self-consistent at every instant). Run it on
+        NEW index version — published like :meth:`maybe_retrain`
+        (centroids copied unchanged, so the serving pair stays
+        self-consistent at every instant). Run it on
         the maintenance cadence of any LSM-ish store's compaction (the
         reference's analog: changelog compaction). Returns the compacted
         row count.
@@ -540,27 +499,22 @@ class IvfIncremental:
         ``advance`` is fenced by the epoch check (fails pre-commit and
         replays into the new version)."""
         with maintenance_lock(self.maint_lock, "IVF maintenance"):
-            cur = self._current()
-            nxt = f"v{int(cur[1:]) + 1:06d}"
-            stage = os.path.join(self.index_root, nxt)
-            if os.path.isdir(stage):
-                shutil.rmtree(stage)
             compacted = self.lists(dedup=True)
-            compacted.write.mode("overwrite").partitionBy("cid").parquet(
-                os.path.join(stage, "lists")
-            )
             cent = self.centroids()
-            # codes RE-ENCODED from the deduped lists (not merely
-            # deduped): compaction heals any code gap and keeps exactly
-            # one code row set per surviving vector
-            self._encode(compacted, cent).write.mode(
-                "overwrite"
-            ).partitionBy("cid").parquet(os.path.join(stage, "codes"))
-            cent.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(stage, "centroids")
-            )
-            self._publish(nxt)
-            self._gc_unpublished()
+            with self.index.publish() as stage:
+                compacted.write.mode("overwrite").partitionBy("cid").parquet(
+                    os.path.join(stage, "lists")
+                )
+                # codes RE-ENCODED from the deduped lists (not merely
+                # deduped): compaction heals any code gap and keeps
+                # exactly one code row set per surviving vector
+                self._encode(compacted, cent).write.mode(
+                    "overwrite"
+                ).partitionBy("cid").parquet(os.path.join(stage, "codes"))
+                cent.coalesce(1).write.mode("overwrite").parquet(
+                    os.path.join(stage, "centroids")
+                )
+            self.index.gc()
             return self.lists().count()
 
     def drift(self, retrain_pm: int = 1200, dedup: bool = True) -> DataFrame:
@@ -580,12 +534,12 @@ class IvfIncremental:
         n_centroids: int = similarity.IVF_CENTROIDS,
         iters: int = 2,
     ) -> bool:
-        """The CLOSED maintenance loop the drift trigger exists for (r9
-        VERDICT task 6): if :meth:`drift` flags at least ``min_flagged``
-        centroids, retrain on every stored vector, freeze the NEW
-        centroids, and rebuild the inverted lists by re-assigning the
-        stored corpus — after which queries probe lists that actually
-        cover the drifted distribution. Returns True iff a retrain ran.
+        """The CLOSED maintenance loop the drift trigger exists for: if
+        :meth:`drift` flags at least ``min_flagged`` centroids, retrain
+        on every stored vector, freeze the NEW centroids, and rebuild
+        the inverted lists by re-assigning the stored corpus — after
+        which queries probe lists that actually cover the drifted
+        distribution. Returns True iff a retrain ran.
 
         Scale posture: the flagged-count check is a 1-row control-plane
         scalar (centroid-count-sized aggregate — the sanctioned driver
@@ -593,15 +547,10 @@ class IvfIncremental:
         ``train_centroids`` (at 100 TB: on a corpus SAMPLE) and the
         rebuild is ONE broadcast-assign pass over the stored vectors.
 
-        Crash-atomic publish (r10 VERDICT task 4): the COMPLETE next
-        version — rebuilt lists AND the centroids that produced them —
-        is staged in its own ``index/vNNNNNN`` directory while the
-        pointer still serves the old pair; the flip is one atomic
-        ``os.replace`` of the pointer file. A crash anywhere leaves a
-        self-consistent index: old+old before the flip, new+new after;
-        never new centroids over old lists. The superseded version is
-        removed AFTER the flip (a crash between flip and cleanup just
-        leaves an orphan for the next construction's GC). Verified by a
+        The COMPLETE next version — rebuilt lists AND the centroids that
+        produced them — is one versioned publish, so a crash anywhere
+        leaves a self-consistent index: old+old before the flip, new+new
+        after; never new centroids over old lists. Verified by a
         SIGKILL-at-every-stage chaos e2e (tests/test_chaos_sigkill.py)."""
         flagged = (
             self.drift(retrain_pm=retrain_pm).filter("retrain").count()
@@ -609,11 +558,6 @@ class IvfIncremental:
         if flagged < min_flagged:
             return False
         with maintenance_lock(self.maint_lock, "IVF maintenance"):
-            cur = self._current()
-            nxt = f"v{int(cur[1:]) + 1:06d}"
-            stage = os.path.join(self.index_root, nxt)
-            if os.path.isdir(stage):  # leftover from a crashed attempt
-                shutil.rmtree(stage)
             vecs = self.lists(dedup=True).select("vec_id", "embedding")
             cent = similarity.train_centroids(
                 vecs, n_centroids=n_centroids, iters=iters
@@ -622,23 +566,21 @@ class IvfIncremental:
             reassigned = similarity.ivf_assign(vecs, cent).localCheckpoint(
                 eager=True
             )  # pin: the codes encode below reads it after the lists write
-            reassigned.write.mode("overwrite").partitionBy("cid").parquet(
-                os.path.join(stage, "lists")
-            )
-            # codebooks follow the NEW centroids (they are derived from
-            # them), so a retrain re-encodes every stored vector — the
-            # r13 task-8 ask: codes never serve against stale codebooks
-            self._encode(reassigned, cent).write.mode(
-                "overwrite"
-            ).partitionBy("cid").parquet(os.path.join(stage, "codes"))
-            _chaos_kill("staged-lists")
-            cent.select(
-                "cid", F.col("centv").cast("array<double>").alias("centv")
-            ).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(stage, "centroids")
-            )
-            _chaos_kill("staged-all")
-            self._publish(nxt)
-            _chaos_kill("post-flip")
-            self._gc_unpublished()
+            with self.index.publish() as stage:
+                reassigned.write.mode("overwrite").partitionBy(
+                    "cid"
+                ).parquet(os.path.join(stage, "lists"))
+                # codebooks follow the NEW centroids (they are derived
+                # from them), so a retrain re-encodes every stored
+                # vector: codes never serve against stale codebooks
+                self._encode(reassigned, cent).write.mode(
+                    "overwrite"
+                ).partitionBy("cid").parquet(os.path.join(stage, "codes"))
+                _chaos_kill("staged-lists")
+                cent.select(
+                    "cid", F.col("centv").cast("array<double>").alias("centv")
+                ).coalesce(1).write.mode("overwrite").parquet(
+                    os.path.join(stage, "centroids")
+                )
+            self.index.gc()
             return True

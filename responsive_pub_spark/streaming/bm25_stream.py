@@ -19,16 +19,12 @@ Three checkpointed availableNow queries over file topics:
    KeyValueTableSink — state is vocab-sized, the same bound as the batch
    df table.
 3. **corpus stats** (STATEFUL streaming aggregation, complete mode):
-   n_docs / total_dl — a 1-row aggregate, republished per batch through
-   a CRASH-ATOMIC versioned publish: each batch stages the new snapshot
-   in its own ``stats_v/vNNNNNN`` directory and flips a fsync'd pointer
-   file (the ``IvfIncremental`` protocol — ann_stream.py). The previous
-   in-place overwrite was a torn-write window: a SIGKILL mid-overwrite
-   left garbage stats while postings and df were committed, and a
-   ``topk()`` before the next advance read it. Now a crash at any
-   instant serves the previous complete snapshot; the complete-mode
-   re-aggregation republishes on resume. SIGKILL-verified in
-   tests/test_chaos_sigkill.py.
+   n_docs / total_dl — a 1-row aggregate, republished per batch as a
+   ``stats_v/vNNNNNN`` version through ``commitlog.VersionedSnapshot``
+   (protocol and crash windows in the ``commitlog`` module docstring):
+   a crash at any instant serves the previous complete snapshot, and
+   the complete-mode re-aggregation republishes on resume.
+   SIGKILL-verified in tests/test_chaos_sigkill.py.
 
 :meth:`topk` feeds the MAINTAINED tables into the IDENTICAL integer
 scoring expression ``bm25_topk`` uses (k1=1.2, b=0.75 as exact
@@ -38,8 +34,7 @@ sequence of ingest waves, ``topk()`` row-equals ``bm25_topk`` over the
 union of the waves. :meth:`hybrid_topk` extends the contract to the
 full two-stage retrieval stack: the maintained statistics feed stage 1
 and ``similarity.hybrid_rerank`` re-ranks by embedding cosine — query
-time never re-aggregates corpus df/dl (the r11 VERDICT task-2
-composition gap).
+time never re-aggregates corpus df/dl.
 
 Reference anchor: the materialized-view posture of KTable aggregations
 (kafka-client KGroupedStream.count/aggregate) applied to retrieval
@@ -57,7 +52,6 @@ aggregates at query time.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,9 +65,8 @@ from responsive_pub_spark.operators.textops import (
     BM25_TOP,
 )
 from responsive_pub_spark.streaming.commitlog import (
+    VersionedSnapshot,
     maintenance_lock,
-    publish_pointer,
-    read_pointer,
 )
 from responsive_pub_spark.streaming.kv_sink import KeyValueTableSink
 from responsive_pub_spark.streaming.runtime import run_concurrent, run_to_sink
@@ -105,29 +98,18 @@ class Bm25Streaming:
         self.maint_lock = os.path.join(workdir, "maint.lock")
         os.makedirs(self.docs_dir, exist_ok=True)
         os.makedirs(self.postings_dir, exist_ok=True)
-        os.makedirs(self.stats_root, exist_ok=True)
-        # NO construction-time GC (r12 verdict: reader-GC hazard) — a
-        # reader constructing while the lane has the next stats version
-        # staged would delete it right before the publish flip; orphans
-        # are collected inside the next LOCKED publish.
+        # construction never GCs: orphans are collected inside the next
+        # LOCKED publish (see the commitlog module docstring)
+        self.stats_base = VersionedSnapshot(
+            self.stats_root,
+            self.stats_pointer,
+            "v",
+            chaos=_chaos_kill,
+            labels=("staged-stats", "post-flip"),
+        )
         self.df_sink = KeyValueTableSink(
             os.path.join(workdir, "term_df"), ["w"], ["df"]
         )
-
-    def _gc_stats(self) -> None:
-        """Remove stats versions the pointer does not reference (staged-
-        then-crashed and superseded) — the ann_stream GC posture.
-        INTERNAL: callers hold the maintenance flock (readers never
-        GC)."""
-        cur = read_pointer(self.stats_pointer)
-        for name in os.listdir(self.stats_root):
-            if name != cur:
-                shutil.rmtree(
-                    os.path.join(self.stats_root, name), ignore_errors=True
-                )
-        tmp = self.stats_pointer + ".tmp"
-        if os.path.exists(tmp):
-            os.remove(tmp)
 
     def ingest(self, docs: DataFrame) -> None:
         """Append a wave of (doc_id, text) docs to the topic."""
@@ -192,25 +174,13 @@ class Bm25Streaming:
             F.count("*").cast("bigint").alias("n_docs"),
         )
         def write_stats(bdf: DataFrame, _bid: int) -> None:
-            # crash-atomic versioned publish (never an in-place
-            # overwrite of the serving snapshot): stage the new 1-row
-            # frame in its own version dir, then flip the fsync'd
-            # pointer — a SIGKILL anywhere serves the previous snapshot.
-            # The stage-flip-GC cycle holds the maintenance flock: a
-            # second concurrent maintainer fails LOUDLY instead of
-            # interleaving writes into the same staged version (r13
-            # single-maintainer-by-mechanism).
+            # a new stats version per batch, never an in-place overwrite
+            # of the serving snapshot
             _chaos_kill("pre-stats")
             with maintenance_lock(self.maint_lock, "BM25 stats publish"):
-                cur = read_pointer(self.stats_pointer)
-                nxt = f"v{(int(cur[1:]) + 1) if cur else 0:06d}"
-                stage = os.path.join(self.stats_root, nxt)
-                shutil.rmtree(stage, ignore_errors=True)
-                bdf.coalesce(1).write.mode("overwrite").parquet(stage)
-                _chaos_kill("staged-stats")
-                publish_pointer(self.stats_pointer, nxt)
-                _chaos_kill("post-flip")
-                self._gc_stats()
+                with self.stats_base.publish() as stage:
+                    bdf.coalesce(1).write.mode("overwrite").parquet(stage)
+                self.stats_base.gc()
 
         def drain_stats() -> None:
             q = (
@@ -223,7 +193,7 @@ class Bm25Streaming:
             q.awaitTermination()
 
         # the (postings -> df) chain and the stats drain are independent
-        # legs — overlap them in driver threads (r15, guide §2.6): the
+        # legs — overlap them in driver threads: the
         # per-query-start machinery of the stats leg rides inside the
         # postings leg's wall time instead of after it
         run_concurrent(drain_postings_then_df, drain_stats)
@@ -247,14 +217,14 @@ class Bm25Streaming:
         return self.df_sink.read(self.spark)
 
     def stats(self) -> DataFrame:
-        cur = read_pointer(self.stats_pointer)
+        cur = self.stats_base.current()
         if cur is None:  # nothing published yet
             return self.spark.createDataFrame(
                 [], "total_dl BIGINT, n_docs BIGINT"
             )
         return self.spark.read.schema(
             "total_dl BIGINT, n_docs BIGINT"
-        ).parquet(os.path.join(self.stats_root, cur))
+        ).parquet(cur)
 
     def topk(
         self, n_queries: int = BM25_N_QUERIES, top: int = BM25_TOP

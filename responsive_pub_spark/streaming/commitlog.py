@@ -1,63 +1,55 @@
-"""Delta+marker commit log with compaction — the shared exactly-once
-substrate of the incremental exporters (``streaming/shard_stream.py``,
-``streaming/pack_stream.py``).
+"""Crash-safe publish primitives shared by every maintained table.
 
-Protocol (unchanged from the lanes' original inline form, hardened):
+**Versioned-snapshot publish** (:class:`VersionedSnapshot`). A
+maintained table that is rewritten as a whole (a compacted base, a
+rebuilt decision table, an IVF index version, the BM25 corpus stats)
+lives in numbered version directories ``{prefix}NNNNNN`` under one
+root, and a one-line pointer file names the served version plus the
+highest input stamp it covers. Every publish runs the same steps:
 
-- each micro-batch writes its assignment rows to ``delta-{batch}`` and
-  THEN commits ``total-{batch}`` (the carried totals snapshot). The
-  marker is the commit point: a redelivered batch whose marker exists is
-  skipped; a crash between delta and marker replays the same rows and
-  overwrites the torn delta.
-- **the marker commit is ATOMIC**: the totals frame is written to a
-  ``.tmp`` staging directory and ``os.rename``d into its final name
-  (atomic on POSIX). Spark creates an output directory BEFORE job
-  commit, so bare directory existence was a torn-marker hazard — a
-  SIGKILL mid-write must never leave a half-marker that readers count
-  as committed (an empty marker silently zeroes the carried totals; a
-  truncated one wedges the lane).
-- **compaction** (the r11 verdict's one perf-weak item): without it the
-  log grows one delta dir + one marker per micro-batch FOREVER, and
-  readers glob + multi-path-read every one — at a realistic horizon the
-  read path is driver-side file-enumeration-bound. ``compact()`` rolls
-  every committed delta into a ``base-vNNNNNN`` segment (rows + the
-  totals snapshot at the compaction point) published by a single
-  fsync'd ``os.replace`` of the ``BASE`` pointer file — the
-  ``IvfIncremental`` versioned-publish posture (ann_stream.py) applied
-  to the log. Readers then enumerate ONE base path plus the
-  post-compaction tail; compacted deltas/markers are GC'd after the
-  flip (a crash between flip and GC leaves harmless orphans for the
-  next GC). A crash before the flip leaves the staged version
-  unreferenced — also GC'd.
+1. clear any leftover at the next version's name (a crashed attempt);
+2. the lane writes the new version into that directory;
+3. ``fsync_tree`` the version, then ``fsync_dir`` the root;
+4. ``publish_pointer``: write-temp + fsync + ``os.replace`` + directory
+   fsync. This flip is the only commit point;
+5. the lane runs its own post-flip steps (markers, flags);
+6. GC removes every version directory the pointer does not name, the
+   pointer's ``.tmp`` and older ``.{prefix}NNNNNN.stage`` leftovers;
+   the lane then collects its folded tail (deltas, markers).
 
-Reference anchor: changelog truncation
-(kafka-client internal/stores/CommitBuffer.java:97,480 — deleteRecords
-after flush) — the same durability-log-bounding concern; the marker
-protocol itself mirrors the CommitBuffer offset-fencing posture
-(CommitBuffer.java:340-423).
+Readers find a version only through the pointer, so the crash windows
+are: mid-write or staged (steps 2-3) — the old version serves and the
+unreferenced directory is cleared by the next publish or GC; flipped or
+pre-GC (steps 4-6) — the new version serves and the superseded one is
+an orphan for the next GC. Step 3 makes the flip safe across power
+loss, not just process death: a pointer never names torn data. The
+lane's chaos hook fires at the staged and flipped windows, so the
+SIGKILL end-to-end tests land a crash inside each.
 
-Durability: every commit point (marker rename, pointer flip) is followed
-by an fsync of the containing directory, so the protocol is crash-safe
-across POWER LOSS, not merely process SIGKILL (POSIX makes the rename
-atomic but only the directory fsync makes it persistent).
+Publish and GC are single-maintainer BY MECHANISM: callers hold
+:func:`maintenance_lock` from the publish through the GC, and readers
+never GC (a reader collecting while a maintainer has a version staged
+would delete it right before the flip).
 
-Single-maintainer BY MECHANISM: ``compact()`` and ``gc()`` hold an
-exclusive non-blocking flock (``maint.lock``) — a second concurrent
-maintainer fails loudly — and CONSTRUCTION never GCs: a log handle is a
-reader, and a reader collecting while a maintainer has a base staged
-would delete the segment right before the pointer flip.
-
-Scale posture: the base segment is written once per maintenance cycle by
-a distributed job (no driver data path); the tail stays
-micro-batch-sized; ``read_all`` lists O(1) + O(tail) paths instead of
-O(total batches ever).
+**Delta+marker commit log** (:class:`DeltaCommitLog`), the exactly-once
+substrate of the incremental exporters (``shard_stream``,
+``pack_stream``, ``pack_ids_stream``): each micro-batch writes
+``delta-{batch}`` and then commits ``total-{batch}`` (the carried
+totals) by an fsynced ``.tmp`` write and one ``os.rename`` — the marker
+is the commit point, a redelivered batch whose marker exists is
+skipped, and a torn attempt is overwritten on replay. ``compact()``
+folds the committed tail into a ``base-vNNNNNN`` snapshot through the
+versioned publish above, so readers list one base plus the tail instead
+of one path per batch ever committed. Reference anchor: changelog
+truncation after flush and offset fencing
+(kafka-client internal/stores/CommitBuffer.java:97,340-423,480).
 """
 
 from __future__ import annotations
 
 import fcntl
-import glob
 import os
+import re
 import shutil
 from contextlib import contextmanager
 
@@ -82,7 +74,7 @@ def fsync_tree(path: str) -> None:
     rename publishes its name — renaming first would let a power loss
     persist the committed name over torn data, which every
     name-is-the-commit-point protocol here (handoff directories, marker
-    dirs, base segments) silently trusts on replay (r13 ADVICE)."""
+    dirs, versioned snapshots) silently trusts on replay."""
     for root, _dirs, files in os.walk(path):
         for f in files:
             fd = os.open(os.path.join(root, f), os.O_RDONLY)
@@ -121,8 +113,7 @@ def maintenance_lock(lock_path: str, what: str):
 def publish_pointer(path: str, value: str) -> None:
     """Atomic pointer publish: write-temp + fsync + ``os.replace`` +
     parent-directory fsync — readers see the old or the new value, never
-    a partial write, and the flip survives power loss (the
-    ann_stream._publish contract, shared)."""
+    a partial write, and the flip survives power loss."""
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         f.write(value)
@@ -141,6 +132,106 @@ def read_pointer(path: str) -> "str | None":
         return None
 
 
+class VersionedSnapshot:
+    """One maintained table's versioned publish (see module docstring).
+
+    ``root`` holds the version directories ``{prefix}NNNNNN``, numbered
+    from ``first``; ``pointer`` names the served one. ``chaos`` is the
+    lane's kill hook, called with ``labels[0]`` once the staged version
+    is durable and with ``labels[1]`` right after the flip.
+
+    The pointer is written as ``"{name}"`` or ``"{name} {covered}"``;
+    :meth:`info` also reads the older ``"{version}:{covered}"`` form."""
+
+    def __init__(
+        self,
+        root: str,
+        pointer: str,
+        prefix: str,
+        first: int = 0,
+        chaos=None,
+        labels: "tuple[str, str]" = ("staged", "flipped"),
+    ):
+        self.root = root
+        self.pointer = pointer
+        self.prefix = prefix
+        self.first = first
+        self.chaos = chaos or (lambda label: None)
+        self.labels = labels
+        self._version_re = re.compile(
+            rf"\.?{re.escape(prefix)}\d{{6}}(\.stage)?"
+        )
+        os.makedirs(root, exist_ok=True)
+
+    def path(self, version: int) -> str:
+        return os.path.join(self.root, f"{self.prefix}{version:06d}")
+
+    def info(self) -> "tuple[int, int]":
+        """(served version, highest stamp it covers); ``(first - 1,
+        -1)`` before the first publish."""
+        v = read_pointer(self.pointer)
+        if v is None:
+            return self.first - 1, -1
+        if ":" in v:
+            ver, cov = v.split(":")
+            return int(ver), int(cov)
+        name, *cov = v.split()
+        return int(name[len(self.prefix):]), int(cov[0]) if cov else -1
+
+    def current(self) -> "str | None":
+        """The served version directory; None before the first publish."""
+        ver, _ = self.info()
+        return self.path(ver) if ver >= self.first else None
+
+    def listing(
+        self, tail_dir: str, stamp_re
+    ) -> "tuple[str | None, int, list[tuple[int, str]]]":
+        """(served version directory, its coverage, ``[(stamp, path)]``
+        of the entries in ``tail_dir`` past that coverage, in stamp
+        order) from ONE pointer read. ``stamp_re`` matches a tail entry
+        name and captures its stamp as group 1."""
+        ver, covered = self.info()
+        tail = sorted(
+            (int(m.group(1)), os.path.join(tail_dir, n))
+            for n in os.listdir(tail_dir)
+            for m in [stamp_re.match(n)]
+            if m and int(m.group(1)) > covered
+        )
+        return (self.path(ver) if ver >= self.first else None), covered, tail
+
+    @contextmanager
+    def publish(self, covered: int = -1):
+        """Stage the next version and flip the pointer to it. The body
+        writes into the yielded directory; an exception there leaves the
+        old version serving. Callers hold the maintenance lock."""
+        ver, _ = self.info()
+        name = f"{self.prefix}{ver + 1:06d}"
+        stage = os.path.join(self.root, name)
+        shutil.rmtree(stage, ignore_errors=True)
+        yield stage
+        fsync_tree(stage)
+        self.chaos(self.labels[0])
+        fsync_dir(self.root)
+        publish_pointer(
+            self.pointer, name if covered < 0 else f"{name} {covered}"
+        )
+        self.chaos(self.labels[1])
+
+    def gc(self) -> None:
+        """Remove every version directory the pointer does not name and
+        any staging leftover. Callers hold the maintenance lock."""
+        cur = self.current()
+        for name in os.listdir(self.root):
+            path = os.path.join(self.root, name)
+            if path != cur and self._version_re.fullmatch(name):
+                shutil.rmtree(path, ignore_errors=True)
+        if os.path.exists(self.pointer + ".tmp"):
+            os.remove(self.pointer + ".tmp")
+
+
+_MARKER_RE = re.compile(r"^total-(\d{20})\.parquet$")
+
+
 class DeltaCommitLog:
     """One lane's commit log under ``log_dir`` (see module docstring).
 
@@ -148,6 +239,10 @@ class DeltaCommitLog:
     log calls it at the named windows of the marker commit and the
     compaction publish so the SIGKILL chaos e2es can land a crash inside
     every window.
+
+    Constructing a log never GCs: a handle is a reader (see module
+    docstring); orphans wait for the next locked :meth:`compact` or
+    :meth:`gc`.
     """
 
     def __init__(
@@ -168,15 +263,13 @@ class DeltaCommitLog:
         # file count stays exactly base+pointer after a compaction —
         # the plateau the soak artifact tracks
         self.maint_lock = log_dir.rstrip("/") + ".maint.lock"
-        os.makedirs(log_dir, exist_ok=True)
-        # NO construction-time GC: constructing a log handle is a READER
-        # action, and a reader GC'ing while a maintainer has a base
-        # staged (pointer not yet flipped) would delete the staged
-        # segment out from under the imminent flip — the flip + delta GC
-        # would then destroy the log. Orphans (torn marker .tmp dirs,
-        # staged-then-crashed base versions) are harmless to every read
-        # path and are collected by the next LOCKED maintenance call
-        # (compact()/gc()).
+        self.base = VersionedSnapshot(
+            log_dir,
+            self.pointer,
+            "base-v",
+            chaos=lambda label: self.chaos(label),
+            labels=("compact-staged-all", "compact-post-flip"),
+        )
 
     # -- paths -----------------------------------------------------------
     def delta_path(self, batch_id: int) -> str:
@@ -185,35 +278,15 @@ class DeltaCommitLog:
     def marker_path(self, batch_id: int) -> str:
         return os.path.join(self.log_dir, f"total-{int(batch_id):020d}.parquet")
 
-    # -- base segment ----------------------------------------------------
-    def base_info(self) -> "tuple[str | None, int]":
-        """(base version dir name, highest batch_id folded into it);
-        (None, -1) before the first compaction."""
-        v = read_pointer(self.pointer)
-        if not v:
-            return None, -1
-        name, upto = v.split()
-        return name, int(upto)
-
     # -- committed state -------------------------------------------------
     def tail_ids(self) -> "list[int]":
         """Committed batch ids still in the delta tail (markers present;
         ids at or below the compaction point excluded — their files are
         GC-pending or gone)."""
-        _, upto = self.base_info()
-        return sorted(
-            i
-            for i in (
-                int(os.path.basename(p)[len("total-"):].split(".")[0])
-                for p in glob.glob(
-                    os.path.join(self.log_dir, "total-*.parquet")
-                )
-            )
-            if i > upto
-        )
+        return [i for i, _ in self.base.listing(self.log_dir, _MARKER_RE)[2]]
 
     def is_committed(self, batch_id: int) -> bool:
-        _, upto = self.base_info()
+        _, upto = self.base.info()
         return int(batch_id) <= upto or os.path.exists(
             self.marker_path(batch_id)
         )
@@ -248,100 +321,66 @@ class DeltaCommitLog:
         """The carried-totals snapshot as of the latest commit below
         ``batch_id``: the newest tail marker under it, else the base
         segment's snapshot, else None (nothing committed yet)."""
-        _, upto = self.base_info()
-        prior = [i for i in self.tail_ids() if i < int(batch_id)]
+        base, upto, tail = self.base.listing(self.log_dir, _MARKER_RE)
+        prior = [p for i, p in tail if i < int(batch_id)]
         if prior:
             return self.spark.read.schema(self.totals_schema).parquet(
-                self.marker_path(prior[-1])
+                prior[-1]
             )
-        if upto >= 0 and upto < int(batch_id):
-            ver, _ = self.base_info()
+        if base is not None and upto < int(batch_id):
             return self.spark.read.schema(self.totals_schema).parquet(
-                os.path.join(self.log_dir, ver, "totals")
+                os.path.join(base, "totals")
             )
         return None
+
+    def _rows_paths(self, base: "str | None", ids: "list[int]") -> "list[str]":
+        return ([os.path.join(base, "rows")] if base else []) + [
+            self.delta_path(i) for i in ids
+        ]
 
     def read_all(self) -> DataFrame:
         """Every committed assignment row: the base segment (if any) plus
         the committed tail deltas — O(1) + O(tail) paths, never one per
         batch ever committed."""
-        ver, _ = self.base_info()
-        paths = []
-        if ver is not None:
-            paths.append(os.path.join(self.log_dir, ver, "rows"))
-        paths += [self.delta_path(i) for i in self.tail_ids()]
+        base, _, tail = self.base.listing(self.log_dir, _MARKER_RE)
+        paths = self._rows_paths(base, [i for i, _ in tail])
         if not paths:
             return self.spark.createDataFrame([], self.assign_schema)
         return self.spark.read.schema(self.assign_schema).parquet(*paths)
 
     # -- compaction ------------------------------------------------------
     def compact(self) -> int:
-        """Roll the committed tail (plus any existing base) into a new
-        ``base-vNNNNNN`` segment and flip the ``BASE`` pointer
-        atomically; GC the folded deltas/markers and the superseded base
-        after the flip. Returns the number of committed batches folded
-        in this call (0 == nothing to do).
+        """Fold the committed tail (plus any existing base) into the next
+        ``base-vNNNNNN`` snapshot through the versioned publish, then GC
+        the folded deltas/markers. Returns the number of committed
+        batches folded (0 == nothing to do).
 
-        Crash-safe at every instant: before the flip readers serve the
-        old base + full tail (the staged dir is unreferenced); after it
-        the new base + empty tail. Verified by the SIGKILL-at-every-
-        stage chaos e2e (tests/test_chaos_sigkill.py).
-
-        Single-maintainer BY MECHANISM: the whole call holds the
-        exclusive ``maint.lock`` flock — a second concurrent maintainer
-        (compact or gc, any process) fails LOUDLY instead of
-        interleaving writes into the same staged version dir. Racing
-        the lane's OWN ``_apply`` is safe by construction: the tail is
-        CAPTURED once up front and every staged path derives from that
-        capture (a marker committed after the capture folds next time
-        — its delta stays in the tail because ``upto`` records only the
-        captured tail's last id), an uncommitted batch's base lookup
-        falls through to the published base, and a reader that loses a
-        marker to GC mid-plan fails loudly and replays."""
+        Racing the lane's own ``_apply`` is safe: the tail is CAPTURED
+        once and every staged path derives from that capture, so a
+        marker committed after it stays in the tail (``upto`` records
+        only the captured tail's last id) and folds next time. Reading
+        ``read_all()`` here instead would fold that marker's rows while
+        leaving its delta in the tail — served twice after the flip."""
         with maintenance_lock(self.maint_lock, "commit-log maintenance"):
-            tail = self.tail_ids()
-            if not tail:
-                # nothing to fold, but still collect orphans — a crash
-                # after a previous flip (pre-GC) leaves folded deltas/
-                # markers that only a maintenance call may reclaim
-                self._gc()
-                return 0
-            cur, _ = self.base_info()
-            nxt = (
-                f"base-v{(int(cur.split('-v')[1]) + 1) if cur else 0:06d}"
-            )
-            new_upto = tail[-1]
-            stage = os.path.join(self.log_dir, nxt)
-            shutil.rmtree(stage, ignore_errors=True)
-            # staged rows come from the CAPTURED tail explicitly — NOT
-            # read_all(), which re-enumerates tail_ids() and would fold
-            # a marker committed between the capture and the read while
-            # ``upto`` (new_upto) excluded it: its delta would stay in
-            # the tail and read_all() would return those rows TWICE
-            # after the flip.
-            paths = []
-            ver, _ = self.base_info()
-            if ver is not None:
-                paths.append(os.path.join(self.log_dir, ver, "rows"))
-            paths += [self.delta_path(i) for i in tail]
-            self.spark.read.schema(self.assign_schema).parquet(
-                *paths
-            ).write.mode("overwrite").parquet(os.path.join(stage, "rows"))
-            self.chaos("compact-staged-rows")
-            # totals snapshot AS OF the captured tail's last marker —
-            # read it directly (latest_totals() would re-enumerate the
-            # tail and could pick up a marker past the capture)
-            totals = self.spark.read.schema(self.totals_schema).parquet(
-                self.marker_path(new_upto)
-            )
-            totals.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(stage, "totals")
-            )
-            self.chaos("compact-staged-all")
-            publish_pointer(self.pointer, f"{nxt} {new_upto}")
-            self.chaos("compact-post-flip")
+            base, _, tail = self.base.listing(self.log_dir, _MARKER_RE)
+            ids = [i for i, _ in tail]
+            if ids:
+                with self.base.publish(ids[-1]) as stage:
+                    self.spark.read.schema(self.assign_schema).parquet(
+                        *self._rows_paths(base, ids)
+                    ).write.mode("overwrite").parquet(
+                        os.path.join(stage, "rows")
+                    )
+                    self.chaos("compact-staged-rows")
+                    self.spark.read.schema(self.totals_schema).parquet(
+                        self.marker_path(ids[-1])
+                    ).coalesce(1).write.mode("overwrite").parquet(
+                        os.path.join(stage, "totals")
+                    )
+            # even with nothing to fold, collect the orphans a crash
+            # after a previous flip left behind
             self._gc()
-            return len(tail)
+            return len(ids)
 
     def gc(self) -> None:
         """LOCKED orphan collection (see :meth:`_gc`) — a maintainer
@@ -351,20 +390,15 @@ class DeltaCommitLog:
             self._gc()
 
     def _gc(self) -> None:
-        """Remove everything no longer referenced: base versions the
-        pointer does not name (staged-then-crashed and superseded),
-        deltas/markers folded into the base, and ``.tmp`` staging
-        leftovers (torn marker commits — their batch is uncommitted and
-        will be replayed). Never touches the pointed-to base or the
-        committed tail. INTERNAL — callers hold the maintenance lock
-        (readers must never GC: a reader collecting mid-compact would
-        delete the staged base right before the maintainer's flip)."""
-        cur, upto = self.base_info()
+        """Remove unserved base versions, deltas/markers folded into the
+        base, and ``.tmp`` marker leftovers (torn commits — their batch
+        is uncommitted and replays). Callers hold the maintenance
+        lock."""
+        self.base.gc()
+        _, upto = self.base.info()
         for name in os.listdir(self.log_dir):
             path = os.path.join(self.log_dir, name)
-            if name.startswith("base-v") and name != cur:
-                shutil.rmtree(path, ignore_errors=True)
-            elif name.endswith(".tmp"):
+            if name.endswith(".tmp"):
                 if os.path.isdir(path):
                     shutil.rmtree(path, ignore_errors=True)
                 else:
@@ -372,6 +406,5 @@ class DeltaCommitLog:
             elif name.startswith(("delta-", "total-")) and name.endswith(
                 ".parquet"
             ):
-                bid = int(name.split("-")[1].split(".")[0])
-                if bid <= upto:
+                if int(name.split("-")[1].split(".")[0]) <= upto:
                     shutil.rmtree(path, ignore_errors=True)

@@ -17,11 +17,11 @@ fingerprint tables current so neither side is ever re-tokenized:
   only;
 - **eval postings** (stateless, append): each arriving eval doc
   shingled once into (eval_id, h) rows;
-- **decision table** (r13 verdict task 1b): the per-doc contamination
-  report MAINTAINED as a versioned BASE snapshot plus
-  handoff-watermarked per-wave DELTAS, so the gate a composed pipeline
-  consults every advance reads a maintained table instead of re-running
-  the corpus-postings aggregation:
+- **decision table**: the per-doc contamination report MAINTAINED as
+  a versioned BASE snapshot plus handoff-watermarked per-wave DELTAS,
+  so the gate a composed pipeline consults every advance reads a
+  maintained table instead of re-running the corpus-postings
+  aggregation:
 
   - per advance, a carried-watermark handoff (``streaming/handoff.py``)
     ships the report rows for the NEW postings only (new corpus docs
@@ -30,10 +30,10 @@ fingerprint tables current so neither side is ever re-tokenized:
   - :meth:`ingest_evals` arms a REBUILD flag: the next advance re-runs
     the full aggregation ONCE (the inherently O(corpus) retroactive
     re-check — a join over maintained postings, never a re-shingle)
-    into a new base version published by the fsync'd pointer flip
-    (the IvfIncremental posture, under ``maintenance_lock``), and the
-    delta watermark jumps to the rebuild's coverage. Deltas the base
-    supersedes are ignored by name-stamp and GC'd.
+    into a new base version published through
+    ``commitlog.VersionedSnapshot``, and the delta watermark jumps to
+    the rebuild's coverage. Deltas the base supersedes are ignored by
+    name-stamp and GC'd.
   - :meth:`decision` = base + post-base deltas; it row-equals the
     derived :meth:`report` whenever advances followed each ingest
     (parity asserted in tests), and every doc is decided exactly once
@@ -41,15 +41,16 @@ fingerprint tables current so neither side is ever re-tokenized:
     stamps, a delta covers a contiguous stamp range, and the base
     covers everything at or below its recorded stamp).
 
-Crash windows (all replay-safe): flag-before-evals ordering makes a
-torn ``ingest_evals`` at worst a spurious rebuild; a crash after the
-base rename but before the pointer flip leaves an unreferenced staged
-version (overwritten by the retry — the flag is still set); after the
-flip but before the flag removal, the retry rebuilds idempotently; the
-delta handoff inherits ``ship``'s exactly-once contract, and its
-watermark floor is re-derived from the published base coverage on
-every advance, so a crash between the flip and the marker publish
-cannot re-derive based docs into a delta.
+Crash windows: the base publish has the windows of the shared
+versioned publish (``commitlog`` module docstring); the lane adds the
+REBUILD flag and the delta marker around it, all replay-safe.
+Flag-before-evals ordering makes a torn ``ingest_evals`` at worst a
+spurious rebuild; a crash before the flip leaves the flag set, so the
+retry rebuilds; after the flip but before the flag removal, the retry
+rebuilds idempotently; the delta handoff inherits ``ship``'s
+exactly-once contract, and its watermark floor is re-derived from the
+published base coverage on every advance, so a crash between the flip
+and the marker publish cannot re-derive based docs into a delta.
 
 Parity contract (tests/test_streaming.py): with the fixture's
 ``doc_id % eval_mod`` split ingested as the two topics, ``report()``
@@ -71,7 +72,6 @@ re-derives, it reads).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,15 +79,15 @@ from pyspark.sql import functions as F
 from responsive_pub_spark.functions import text as T
 from responsive_pub_spark.functions.portable import pround
 from responsive_pub_spark.streaming.commitlog import (
+    VersionedSnapshot,
     fsync_dir,
     maintenance_lock,
     publish_pointer,
-    read_pointer,
 )
 from responsive_pub_spark.streaming.handoff import (
     _HANDOFF_RE,
     StampedTopic,
-    fsync_tree,
+    drop_covered,
     read_marker,
     ship,
 )
@@ -124,12 +124,18 @@ class DecontamStreaming:
         self.ck_evals = os.path.join(workdir, "ck-evals")
         self.decision_dir = os.path.join(workdir, "decision")
         self.deltas_dir = os.path.join(self.decision_dir, "deltas")
-        self.base_pointer = os.path.join(self.decision_dir, "BASE")
         self.delta_marker = os.path.join(self.decision_dir, "delta.upto")
         self.rebuild_flag = os.path.join(self.decision_dir, "REBUILD")
         self.maint_lock = os.path.join(self.decision_dir, "maint.lock")
         for d in (self.corpus_dir, self.evals_dir, self.deltas_dir):
             os.makedirs(d, exist_ok=True)
+        self.decision_base = VersionedSnapshot(
+            self.decision_dir,
+            os.path.join(self.decision_dir, "BASE"),
+            "base-v",
+            first=1,
+            chaos=_chaos_kill,
+        )
         self._post_topic = StampedTopic(
             os.path.join(workdir, "post-meta"), self.corpus_post_dir
         )
@@ -184,8 +190,8 @@ class DecontamStreaming:
             .select("eval_id", F.explode("hs").alias("h"))
         )
         # the corpus and eval postings drains are independent topics with
-        # independent sinks/checkpoints — overlap them in driver threads
-        # (r15, guide §2.6); the decision maintenance below needs both
+        # independent sinks/checkpoints — overlap them in driver threads;
+        # the decision maintenance below needs both
         run_concurrent(
             lambda: self._post_topic.append(
                 lambda: run_to_sink(
@@ -200,64 +206,25 @@ class DecontamStreaming:
         self._ship_delta()
 
     # -- decision maintenance ----------------------------------------------
-    def _base_info(self) -> "tuple[int, int]":
-        """(base version, highest postings stamp the base covers);
-        (0, -1) before the first rebuild."""
-        v = read_pointer(self.base_pointer)
-        if not v:
-            return 0, -1
-        ver, cov = v.split(":")
-        return int(ver), int(cov)
-
-    def _base_path(self, ver: int) -> str:
-        return os.path.join(self.decision_dir, f"base-v{ver:06d}")
-
     def _rebuild_base(self) -> None:
         """The inherently O(corpus) retroactive re-check, run ONLY when
         a benchmark was registered: the full report over the maintained
-        postings becomes the new base snapshot behind an fsync'd
-        pointer flip; the delta watermark jumps to the rebuild's
-        coverage; superseded state is GC'd after the flip."""
+        postings becomes the next base version; the delta watermark
+        jumps to the rebuild's coverage; superseded state is GC'd after
+        the flip."""
         with maintenance_lock(self.maint_lock, "decontam decision rebuild"):
-            ver, _ = self._base_info()
             covered = max(
                 [s for s, _ in self._post_topic.stamped_files()] + [-1]
             )
-            name = self._base_path(ver + 1)
-            stage = os.path.join(
-                self.decision_dir, f".base-v{ver + 1:06d}.stage"
-            )
-            shutil.rmtree(stage, ignore_errors=True)
-            # a crash after a previous rename left `name` unreferenced
-            # (the pointer still names ver) — the retry overwrites it
-            shutil.rmtree(name, ignore_errors=True)
-            self.report().write.mode("overwrite").parquet(stage)
-            fsync_tree(stage)
-            _chaos_kill("staged")
-            os.rename(stage, name)
-            fsync_dir(self.decision_dir)
-            _chaos_kill("renamed")
-            publish_pointer(self.base_pointer, f"{ver + 1}:{covered}")
-            _chaos_kill("flipped")
+            with self.decision_base.publish(covered) as stage:
+                self.report().write.mode("overwrite").parquet(stage)
             if read_marker(self.delta_marker) < covered:
                 publish_pointer(self.delta_marker, str(covered))
             os.remove(self.rebuild_flag)
             fsync_dir(self.decision_dir)
             _chaos_kill("flag-removed")
-            # GC superseded state — a crash anywhere above leaves only
-            # harmless orphans for the next locked rebuild
-            for n in os.listdir(self.decision_dir):
-                if n.startswith("base-v") and n != os.path.basename(name):
-                    shutil.rmtree(
-                        os.path.join(self.decision_dir, n),
-                        ignore_errors=True,
-                    )
-            for n in os.listdir(self.deltas_dir):
-                m = _HANDOFF_RE.match(n)
-                if m and int(m.group(1)) <= covered:
-                    shutil.rmtree(
-                        os.path.join(self.deltas_dir, n), ignore_errors=True
-                    )
+            self.decision_base.gc()
+            drop_covered(self.deltas_dir, covered)
 
     def _ship_delta(self) -> None:
         """Wave-sized decision delta: the report aggregation over ONLY
@@ -266,7 +233,7 @@ class DecontamStreaming:
         the published base coverage first, so a crash between a
         rebuild's pointer flip and its marker publish can never
         re-derive based docs into a delta."""
-        _, covered = self._base_info()
+        _, covered = self.decision_base.info()
         if read_marker(self.delta_marker) < covered:
             publish_pointer(self.delta_marker, str(covered))
 
@@ -334,14 +301,10 @@ class DecontamStreaming:
         """The MAINTAINED per-doc contamination decision (same rows as
         :meth:`report` as of the last advance): the base snapshot plus
         the post-base deltas — never a corpus-postings scan."""
-        ver, covered = self._base_info()
-        paths = []
-        if ver > 0:
-            paths.append(self._base_path(ver))
-        for n in sorted(os.listdir(self.deltas_dir)):
-            m = _HANDOFF_RE.match(n)
-            if m and int(m.group(1)) > covered:
-                paths.append(os.path.join(self.deltas_dir, n))
+        base, _, tail = self.decision_base.listing(
+            self.deltas_dir, _HANDOFF_RE
+        )
+        paths = ([base] if base else []) + [p for _, p in tail]
         self.last_decision_paths = list(paths)
         if not paths:
             return self.spark.createDataFrame([], REPORT_SCHEMA)

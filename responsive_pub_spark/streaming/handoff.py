@@ -90,7 +90,7 @@ from responsive_pub_spark.streaming.shard_stream import _FileTopicMixin
 __all__ = [
     "StampedTopic",
     "assert_handoff_layout",
-    "fsync_tree",
+    "drop_covered",
     "read_marker",
     "ship",
 ]
@@ -137,6 +137,18 @@ def _covered_upto(dest_dir: str) -> int:
             if m:
                 best = max(best, int(m.group(1)))
     return best
+
+
+def drop_covered(dest_dir: str, upto: int) -> int:
+    """Remove the handoff entries a published base covers (stamp <=
+    ``upto``) — the tail GC after a fold; returns how many went."""
+    gone = 0
+    for n in os.listdir(dest_dir):
+        m = _HANDOFF_RE.match(n)
+        if m and int(m.group(1)) <= upto:
+            shutil.rmtree(os.path.join(dest_dir, n), ignore_errors=True)
+            gone += 1
+    return gone
 
 
 def read_marker(path: str) -> int:

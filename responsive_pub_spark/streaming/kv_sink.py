@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from responsive_pub_spark.streaming.commitlog import (
     fsync_dir,
+    fsync_tree,
     maintenance_lock,
 )
 
@@ -87,7 +88,10 @@ class KeyValueTableSink:
             "overwrite"
         ).parquet(staged)
         # atomic publish: the rename IS the commit point; a crash before it
-        # leaves only staging, which the retry overwrites deterministically
+        # leaves only staging, which the retry overwrites deterministically.
+        # Contents durable first, so a power loss never keeps the name
+        # over torn data
+        fsync_tree(staged)
         os.rename(staged, target)
         fsync_dir(self.path)
 
@@ -149,7 +153,7 @@ class KeyValueTableSink:
         ``batch_id <= last_applied`` guard in ``__call__`` still rejects
         redeliveries of folded batches.
 
-        Crash-safe at every instant (r13): the fold is staged OUTSIDE
+        Crash-safe at every instant: the fold is staged OUTSIDE
         the delta glob space, renamed in as ``delta-{max}.g{N}.parquet``
         (a generation suffix — the plain ``delta-{max}`` name is taken
         by the delta being folded) BEFORE any old file is deleted, and
@@ -200,6 +204,7 @@ class KeyValueTableSink:
                     self.ts_col, F.lit(None).cast(ts_type)
                 )
             out.write.mode("overwrite").parquet(staged)
+            fsync_tree(staged)
             os.rename(staged, target)  # commit point: fold now visible
             fsync_dir(self.path)
             for f in files:

@@ -55,7 +55,11 @@ from responsive_pub_spark.operators.pipeline_ops import (
     PACK_BUDGET_TOKENS,
     bucketed_running_sum,
 )
-from responsive_pub_spark.streaming.commitlog import DeltaCommitLog, fsync_dir
+from responsive_pub_spark.streaming.commitlog import (
+    DeltaCommitLog,
+    fsync_dir,
+    fsync_tree,
+)
 from responsive_pub_spark.streaming.shard_stream import (
     _chaos_kill_env,
     _FileTopicMixin,
@@ -118,7 +122,7 @@ class PackIdsStreaming(_FileTopicMixin):
         (vocab-sized), and the token->id table (bpe_token_ids's
         lexicographic-rank contract).
 
-        ATOMIC publish (r12 ADVICE): the three pieces are staged under
+        ATOMIC publish: the three pieces are staged under
         ``tokenizer.staging`` and the COMPLETE directory is renamed into
         place in one ``os.rename`` — Spark creates output directories
         before job commit, so a bare-existence check on a directly
@@ -152,6 +156,7 @@ class PackIdsStreaming(_FileTopicMixin):
         vocab.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(stage, "vocab")
         )
+        fsync_tree(stage)  # contents durable BEFORE the name
         _chaos_kill("mid-freeze")
         os.rename(stage, self.tok_dir)
         fsync_dir(os.path.dirname(self.tok_dir) or ".")

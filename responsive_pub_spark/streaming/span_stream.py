@@ -28,10 +28,9 @@ alone, so it belongs in a maintained table written ONCE per doc (the
   gram hashing and the canonical-occurrence election run on maintained
   state. First-by-(doc_id, pos) canonicalization makes the kept text
   deterministic at any corpus prefix.
-- **materialized strip sink** (r14, the r13 verdict's task-7 stretch):
-  :meth:`strip` recomputes the full corpus-wide decision per call —
-  inherent for a one-shot full-corpus output, wrong for a training-side
-  consumer polling per wave. ``advance()`` therefore ALSO maintains a
+- **materialized strip sink**: :meth:`strip` recomputes the full
+  corpus-wide decision per call — inherent for a one-shot full-corpus
+  output, wrong for a training-side consumer polling per wave. ``advance()`` therefore ALSO maintains a
   stripped-text table incrementally via the carried-watermark handoff
   (``streaming/handoff.py``): each wave's delta re-strips ONLY the
   AFFECTED docs — the wave's docs plus every earlier doc sharing a gram
@@ -53,7 +52,7 @@ Both maintenance queries are checkpointed availableNow drains through
 Spark's transactional file sink (exactly-once). There is ZERO
 aggregation state — the maintained tables ARE the fingerprints.
 
-Documented crash window (r13 ADVICE): the base and grams tables drain
+Documented crash window: the base and grams tables drain
 through two INDEPENDENTLY checkpointed queries, so a crash between them
 leaves one table a wave ahead of the other until the next ``advance()``
 re-drains the laggard (exactly-once per table is unaffected). In that
@@ -77,7 +76,7 @@ are the audited batch plan's (gram-keyed agg with map-side partials,
 equi-join marking, coverage distinct) over an already-materialized
 table, saving the tokenize+gram scan every run.
 
-r14 hot-loop posture on top of that: the posting table is written
+Hot-loop posture on top of that: the posting table is written
 PARTITIONED by ``gb = pmod(gh, SPAN_GB)`` (one file per touched bucket
 per wave via the pre-write repartition), the strip build re-derives
 the wave's grams IN-FLIGHT from the wave texts (no corpus read to
@@ -92,17 +91,17 @@ collision volume requires anyway. Full-corpus
 readers (:meth:`report`/:meth:`strip`) still scan everything —
 inherent to their corpus-wide outputs. The maintained stripped-text
 table additionally compacts (:meth:`compact_stripped`): the
-last-writer-wins deltas fold into a versioned base snapshot behind an
-fsync'd pointer flip (the decision-table protocol), bounding the
-training-side read to base + post-base deltas. Pre-r14 unpartitioned
-gram layouts are REFUSED at the next maintenance call (fail-loud
+last-writer-wins deltas fold into a base snapshot published through
+``commitlog.VersionedSnapshot`` (publish protocol and crash windows in
+the ``commitlog`` module docstring), bounding the training-side read
+to base + post-base deltas. Unpartitioned gram layouts from before the
+bucketing are REFUSED at the next maintenance call (fail-loud
 migration posture; rebuild derived state in a fresh workdir).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -116,15 +115,13 @@ from responsive_pub_spark.operators.pipeline_ops import (
     strip_spans_from,
 )
 from responsive_pub_spark.streaming.commitlog import (
-    fsync_dir,
-    fsync_tree,
+    VersionedSnapshot,
     maintenance_lock,
-    publish_pointer,
-    read_pointer,
 )
 from responsive_pub_spark.streaming.handoff import (
     _HANDOFF_RE,
     StampedTopic,
+    drop_covered,
     ship,
 )
 from responsive_pub_spark.streaming.runtime import run_concurrent, run_to_sink
@@ -132,7 +129,7 @@ from responsive_pub_spark.streaming.runtime import run_concurrent, run_to_sink
 DOCS_SCHEMA = "doc_id BIGINT, text STRING"
 BASE_SCHEMA = "doc_id BIGINT, n_tokens BIGINT"
 GRAMS_SCHEMA = "doc_id BIGINT, pos BIGINT, gh BIGINT"
-#: gram-posting bucket count (r14): the maintained gram table is
+#: gram-posting bucket count: the maintained gram table is
 #: written PARTITIONED by ``gb = pmod(gh, SPAN_GB)`` so the per-advance
 #: collision/context reads prune to the buckets the wave's grams can
 #: land in — a static partition filter, the ivf probe-prune posture.
@@ -169,10 +166,15 @@ class SpanDedupStreaming:
         self.strip_root = os.path.join(workdir, "strip")
         self.strip_deltas = os.path.join(self.strip_root, "deltas")
         self.strip_marker = os.path.join(self.strip_root, "delta.upto")
-        self.strip_base_pointer = os.path.join(self.strip_root, "BASE")
         self.strip_maint_lock = os.path.join(self.strip_root, "maint.lock")
         os.makedirs(self.docs_dir, exist_ok=True)
         os.makedirs(self.strip_deltas, exist_ok=True)
+        self.strip_base = VersionedSnapshot(
+            self.strip_root,
+            os.path.join(self.strip_root, "BASE"),
+            "base-v",
+            first=1,
+        )
         # the base table under the stamp discipline: it is the strip
         # sink's handoff SOURCE (every doc has a base row — gram rows
         # only exist for docs with >= w tokens)
@@ -258,7 +260,7 @@ class SpanDedupStreaming:
         )
         # base + grams are INDEPENDENT drains of the same docs topic
         # (own checkpoints, own sink dirs, own single-writer locks) —
-        # overlap them in driver threads (r15, guide §2.6) so the two
+        # overlap them in driver threads so the two
         # per-query-start spawns pay once in wall time; _ship_strip
         # needs both drained and runs after the barrier
         run_concurrent(
@@ -292,7 +294,7 @@ class SpanDedupStreaming:
         the wave's docs plus the earlier docs their grams collide with,
         through the SHARED batch tail over the exact gram context.
 
-        Scale posture (r14): the wave's own grams are re-derived
+        Scale posture: the wave's own grams are re-derived
         IN-FLIGHT from the wave texts (identical to the maintained rows
         — ``_gram_rows`` is the one shared expression), so discovering
         them needs NO corpus read; both corpus-gram reads (collision
@@ -388,18 +390,6 @@ class SpanDedupStreaming:
         )
         return strip_spans_from(self.base(), self.grams(), positions, self.w)
 
-    def _strip_base_info(self) -> "tuple[int, int]":
-        """(compacted-base version, highest delta stamp it covers);
-        (0, -1) before the first compaction."""
-        v = read_pointer(self.strip_base_pointer)
-        if not v:
-            return 0, -1
-        ver, cov = v.split(":")
-        return int(ver), int(cov)
-
-    def _strip_base_path(self, ver: int) -> str:
-        return os.path.join(self.strip_root, f"base-v{ver:06d}")
-
     def stripped(self) -> DataFrame:
         """The MAINTAINED stripped-text table (the training-side read):
         the compacted base snapshot (if any) plus the post-base handoff
@@ -410,26 +400,22 @@ class SpanDedupStreaming:
         advance; never re-derives the corpus-wide decision."""
         from pyspark.sql.window import Window
 
-        ver, cov = self._strip_base_info()
+        base, cov, tail = self.strip_base.listing(
+            self.strip_deltas, _HANDOFF_RE
+        )
         parts = []
-        if ver > 0:
+        if base:
             parts.append(
                 self.spark.read.schema(STRIP_SCHEMA)
-                .parquet(self._strip_base_path(ver))
+                .parquet(base)
                 # base rows carry the coverage stamp: any delta past it
                 # wins, any delta at/below it was folded in and GC'd
                 .withColumn("_stamp", F.lit(cov).cast("bigint"))
             )
-        delta_paths = sorted(
-            os.path.join(self.strip_deltas, n)
-            for n in os.listdir(self.strip_deltas)
-            if _HANDOFF_RE.match(n)
-            and int(_HANDOFF_RE.match(n).group(1)) > cov
-        )
-        if delta_paths:
+        if tail:
             parts.append(
                 self.spark.read.schema(STRIP_SCHEMA)
-                .parquet(*delta_paths)
+                .parquet(*[p for _, p in tail])
                 .withColumn(
                     "_stamp",
                     F.regexp_extract(
@@ -450,50 +436,19 @@ class SpanDedupStreaming:
         )
 
     def compact_stripped(self) -> int:
-        """Bounded-metadata compaction for the stripped-text table (the
-        r12 'every maintained lane compacts' posture, the decision-table
-        protocol verbatim): fold the last-writer-wins view of base +
-        deltas into the next versioned base snapshot behind the fsync'd
-        pointer flip, then GC the folded deltas and the superseded
-        base. Crash-safe at every point — the pointer names a complete
-        snapshot or the old state keeps serving, and orphans are
-        collected by the next locked compaction. Returns the number of
-        delta directories folded."""
+        """Bounded-metadata compaction for the stripped-text table: fold
+        the last-writer-wins view of base + deltas into the next base
+        version (``commitlog.VersionedSnapshot``), then GC the folded
+        deltas and the superseded base. Returns the number of delta
+        directories folded."""
         with maintenance_lock(self.strip_maint_lock, "strip compaction"):
-            ver, cov = self._strip_base_info()
-            deltas = [
-                (int(_HANDOFF_RE.match(n).group(1)), n)
-                for n in os.listdir(self.strip_deltas)
-                if _HANDOFF_RE.match(n)
-            ]
-            newer = [s for s, _ in deltas if s > cov]
-            if not newer:
-                return 0
-            covered = max(newer)
-            name = self._strip_base_path(ver + 1)
-            stage = os.path.join(
-                self.strip_root, f".base-v{ver + 1:06d}.stage"
+            _, _, tail = self.strip_base.listing(
+                self.strip_deltas, _HANDOFF_RE
             )
-            shutil.rmtree(stage, ignore_errors=True)
-            # a crashed previous attempt left `name` unreferenced (the
-            # pointer still names ver) — the retry overwrites it
-            shutil.rmtree(name, ignore_errors=True)
-            self.stripped().write.mode("overwrite").parquet(stage)
-            fsync_tree(stage)
-            os.rename(stage, name)
-            fsync_dir(self.strip_root)
-            publish_pointer(self.strip_base_pointer, f"{ver + 1}:{covered}")
-            folded = 0
-            for s, n in deltas:
-                if s <= covered:
-                    shutil.rmtree(
-                        os.path.join(self.strip_deltas, n),
-                        ignore_errors=True,
-                    )
-                    folded += 1
-            for n in os.listdir(self.strip_root):
-                if n.startswith("base-v") and n != os.path.basename(name):
-                    shutil.rmtree(
-                        os.path.join(self.strip_root, n), ignore_errors=True
-                    )
-            return folded
+            if not tail:
+                return 0
+            covered = tail[-1][0]
+            with self.strip_base.publish(covered) as stage:
+                self.stripped().write.mode("overwrite").parquet(stage)
+            self.strip_base.gc()
+            return drop_covered(self.strip_deltas, covered)

@@ -80,7 +80,7 @@ def main() -> None:
         lane.advance()
         print("ADVANCE-DONE", flush=True)
     else:  # dump
-        ver, cov = lane._base_info()
+        ver, cov = lane.decision_base.info()
         print(f"VER {ver} {cov}", flush=True)
         print(f"FLAG {int(os.path.exists(lane.rebuild_flag))}", flush=True)
         bases = sorted(

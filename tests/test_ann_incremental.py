@@ -339,7 +339,7 @@ def test_append_fenced_against_concurrent_publish(spark, sf_dir, tmp_path):
     half = len(rows) // 2
     _feed(spark, lane, rows[:half])
     lane.advance()
-    v_before = lane._current()
+    v_before = lane.index.current()
     want_first = {r[0] for r in rows[:half]}
     assert {
         r.vec_id for r in lane.lists(dedup=True).collect()
@@ -361,7 +361,7 @@ def test_append_fenced_against_concurrent_publish(spark, sf_dir, tmp_path):
     finally:
         IvfIncremental._mid_append_hook = None
     assert fired and fired[0] >= 0
-    assert lane._current() != v_before  # the publish won the race
+    assert lane.index.current() != v_before  # the publish won the race
 
     # nothing lost: the failed batch replays into the NEW version
     lane.advance()

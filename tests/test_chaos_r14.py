@@ -90,8 +90,7 @@ def test_sigkill_mid_decision_rebuild_never_serves_torn_base(tmp_path):
     still armed so nothing is silently stale); after it the NEW one
     serves; the crashed retry converges to ``report()`` idempotently."""
     for label, flipped in (
-        ("staged", False),        # stage written, not yet renamed in
-        ("renamed", False),       # renamed in, pointer not yet flipped
+        ("staged", False),        # next version written, pointer not flipped
         ("flipped", True),        # pointer flipped, flag still armed
         ("flag-removed", True),   # complete except superseded-state GC
     ):

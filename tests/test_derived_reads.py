@@ -180,12 +180,12 @@ def test_decontam_decision_parity_retroactivity_and_cold_restart(
     # corpus wave 2: a delta over the new postings only — never a
     # rebuild, never a wave-1 read
     w1_posts = {p for _s, p in lane._post_topic.stamped_files()}
-    ver_before, _ = lane._base_info()
+    ver_before, _ = lane.decision_base.info()
     lane.ingest_corpus(
         spark.createDataFrame([(3, _T2 + " extra"), (4, _T4)], docs)
     )
     lane.advance()
-    assert lane._base_info()[0] == ver_before, "no benchmark -> no rebuild"
+    assert lane.decision_base.info()[0] == ver_before, "no benchmark -> no rebuild"
     assert lane.last_delta_reads
     assert not (set(lane.last_delta_reads) & w1_posts)
     d2 = _rows_set(lane.decision())
@@ -195,7 +195,7 @@ def test_decontam_decision_parity_retroactivity_and_cold_restart(
     # second benchmark: retroactive rebuild flags wave-1/2 docs anew
     lane.ingest_evals(spark.createDataFrame([(101, _T1)], docs))
     lane.advance()
-    assert lane._base_info()[0] == ver_before + 1
+    assert lane.decision_base.info()[0] == ver_before + 1
     d3 = _rows_set(lane.decision())
     assert d3 == _rows_set(lane.report())
     assert {int(r[0]) for r in d3} == {1, 2, 3}
@@ -206,7 +206,7 @@ def test_decontam_decision_parity_retroactivity_and_cold_restart(
     # and keeps maintaining it incrementally
     lane2.ingest_corpus(spark.createDataFrame([(5, _T1 + " tail")], docs))
     lane2.advance()
-    assert lane2._base_info()[0] == ver_before + 1
+    assert lane2.decision_base.info()[0] == ver_before + 1
     assert _rows_set(lane2.decision()) == _rows_set(lane2.report())
 
 

@@ -176,7 +176,7 @@ def test_torn_compact_leftovers_never_disturb_serving_and_retry_heals(
     asserted on this lane directly."""
     lane = _two_wave_lane(spark, tmp_path, "span-torn")
     before = {tuple(r) for r in lane.stripped().collect()}
-    ver0, _ = lane._strip_base_info()
+    ver0, _ = lane.strip_base.info()
 
     # crash-before-rename leftover: a stale staged dir with garbage
     stage = os.path.join(lane.strip_root, f".base-v{ver0 + 1:06d}.stage")
@@ -186,7 +186,7 @@ def test_torn_compact_leftovers_never_disturb_serving_and_retry_heals(
     # crash-after-rename leftover: a renamed-but-unreferenced base dir
     # holding WRONG rows (the pointer still names ver0, so it must be
     # invisible to readers and overwritten by the retry)
-    orphan = lane._strip_base_path(ver0 + 1)
+    orphan = lane.strip_base.path(ver0 + 1)
     spark.createDataFrame(
         [(999, 1, 1, "bogus")],
         "doc_id BIGINT, n_tokens BIGINT, kept_tokens BIGINT, kept_text STRING",
@@ -198,7 +198,7 @@ def test_torn_compact_leftovers_never_disturb_serving_and_retry_heals(
 
     folded = lane.compact_stripped()
     assert folded > 0
-    ver1, _ = lane._strip_base_info()
+    ver1, _ = lane.strip_base.info()
     assert ver1 == ver0 + 1
     assert {tuple(r) for r in lane.stripped().collect()} == before
     assert not os.path.exists(stage)
