@@ -755,20 +755,14 @@ class KTable:
         SURVEY.md §3.2). Returns the sink; ``sink.read(spark)`` is the
         interactive-query surface over the materialized table."""
         from responsive_pub_spark.streaming.kv_sink import KeyValueTableSink
+        from responsive_pub_spark.streaming.runtime import run_to_sink
 
         value_cols = [c for c in self.df.columns if c not in self.key and c != ts_col]
         sink = KeyValueTableSink(path, list(self.key), value_cols, ts_col=ts_col)
         if self.df.isStreaming:
             if checkpoint is None:
                 raise ValueError("streaming materialize requires a checkpoint dir")
-            q = (
-                self.df.writeStream.foreachBatch(sink)
-                .outputMode("update")
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            run_to_sink(self.df, sink, checkpoint, output_mode="update")
         else:
             sink(self.df, sink._last_applied() + 1)
         return sink

@@ -35,7 +35,7 @@ The reference analog is the async-enrich posture of
 e2etest/E2ETestApplication.java:120-148 composed with FACT-store dedup
 (api/stores/ResponsiveStores.java:79-96): an ingest topology whose state
 feeds interactive queries. Spark-first mapping: each stage is its own
-checkpointed availableNow drain; every handoff is a parquet topic.
+checkpointed ``runtime.run_to_sink`` drain; every handoff is a parquet topic.
 
 Scale posture: the dedup lane shuffles (band, band_hash) keyed bucket
 state holding member IDS only; each handoff leg reads the NEW wave's

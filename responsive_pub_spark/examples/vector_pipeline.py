@@ -68,7 +68,3 @@ def referee_topk(
     """Exact brute-force top-k over the same index — the recall referee."""
     return similarity.brute_force_topk(index, k=k, n_queries=n_queries)
 
-
-def build_and_serve(emb: DataFrame, k: int = 5, n_queries: int = 25) -> DataFrame:
-    """The full pipeline: dedup -> PQ index -> serve."""
-    return serve_topk(dedup_vectors(emb), k=k, n_queries=n_queries)

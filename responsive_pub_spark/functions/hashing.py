@@ -73,29 +73,6 @@ def poly_hash_duck(expr: str) -> str:
     )
 
 
-def minhash_sig(hash_arr_expr: str) -> list[Column]:
-    """MinHash signature columns from an array<long> of element hashes.
-
-    One column per hash function: min over elements of (a*h+b) % P.
-    Pure array expressions — per-row compute, no shuffle, scales linearly.
-    """
-    return [
-        F.expr(
-            f"array_min(transform({hash_arr_expr}, "
-            f"h -> ({MINHASH_A[j]} * h + {MINHASH_B[j]}) % {P}))"
-        ).alias(f"mh{j}")
-        for j in range(NUM_HASHES)
-    ]
-
-
-def minhash_sig_duck(hash_arr_expr: str, j: int) -> str:
-    """DuckDB SQL for minhash component j over a BIGINT[] expression."""
-    return (
-        f"list_min(list_transform({hash_arr_expr}, "
-        f"h -> ({MINHASH_A[j]} * h + {MINHASH_B[j]}) % {P}))"
-    )
-
-
 def band_hash_sql(sig_cols: list[str]) -> str:
     """Fold a band's signature values into one bucket hash: h=(h*31+v)%P.
 

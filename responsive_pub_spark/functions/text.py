@@ -11,9 +11,6 @@ built on the portable hash family in ``hashing.py``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from responsive_pub_spark.functions.hashing import P, poly_hash_duck, poly_hash_sql
 
 #: Word-shingle width for minhash/jaccard dedup.
@@ -224,12 +221,6 @@ def fingerprint_sql(text_expr: str, dialect: str) -> str:
         return poly_hash_sql(norm)
     norm = f"array_to_string({tokens_duck(text_expr)}, ' ')"
     return poly_hash_duck(norm)
-
-
-def token_count(text_expr: str) -> Column:
-    """Whitespace+symbol (BPE-ish) token count as a Spark Column."""
-    arr = F.expr(f"regexp_extract_all({text_expr}, '{spark_re(BPE_TOKEN_REGEX)}', 0)")
-    return F.size(arr)
 
 
 def chunk_hashes_sql(text_expr: str, size: int) -> str:

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from responsive_pub_spark.cache import scoped_persist
 from responsive_pub_spark.functions.portable import ts_to_double
 from responsive_pub_spark.streaming import state
+from responsive_pub_spark.streaming.runtime import run_to_sink
 
 
 class _FkTransitionProcessor(state.Processor):
@@ -368,8 +369,8 @@ class FkJoinStreaming:
                subscription-store processor -> join-changelog sink.
 
     Both stores checkpoint independently; ``advance()`` drains both
-    queries with availableNow (each call is a cold start from the
-    checkpoints — the restart path is exercised on every advance)."""
+    queries through ``runtime.run_to_sink`` (a cold start from the
+    checkpoints on every call)."""
 
     def __init__(
         self,
@@ -401,17 +402,6 @@ class FkJoinStreaming:
         self.left_payload, self.right_payload = left_payload, right_payload
         self.ts_col = ts_col
 
-    def _run(self, out_df, path, ckpt):
-        q = (
-            out_df.writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .option("path", path)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     def advance(self) -> None:
         """Drain stage 0 (left -> subscriptions), then stage 1
         (subscriptions + right -> changelog)."""
@@ -430,7 +420,7 @@ class FkJoinStreaming:
             ts_col="ts",
             order_by=["join_key", "payload"],
         )
-        self._run(subs, self.sub_topic, self.ck0)
+        run_to_sink(subs, self.sub_topic, self.ck0)
 
         sub_stream = self.spark.readStream.schema(_STAGE1_SCHEMA).parquet(
             self.sub_topic
@@ -454,7 +444,7 @@ class FkJoinStreaming:
             ts_col="ts",
             order_by=["kind", "left_key", "payload"],
         )
-        self._run(out, self.out_dir, self.ck1)
+        run_to_sink(out, self.out_dir, self.ck1)
 
     def changelog(self) -> DataFrame:
         return self.spark.read.schema(_OUT_SCHEMA).parquet(self.out_dir)

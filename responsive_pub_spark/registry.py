@@ -48,6 +48,7 @@ from responsive_pub_spark.operators import (
 from responsive_pub_spark.operators.ttl import ttl_filter
 from responsive_pub_spark.sources.readers import read_table
 from responsive_pub_spark.streaming import async_stage, multimodal, state
+from responsive_pub_spark.streaming.runtime import run_to_sink
 from responsive_pub_spark.windows import JoinWindows, SessionWindows, TimeWindows
 from responsive_pub_spark.functions.portable import pround, ts_to_double
 
@@ -1187,7 +1188,7 @@ ORACLE_PAPI_RUNNING_COUNT = f"""
 def q_papi_tws_running_count(spark, sf_dir):
     """The Spark-4 transformWithStateInPandas MAP-STATE lane at the gate
     (unblocked in r4 via compat.ensure_protobuf_runtime): the same
-    _RunningCountProcessor drained through a checkpointed availableNow
+    _RunningCountProcessor drained through one ``runtime.run_to_sink``
     query on state.process_streaming_tws_map — one RocksDB row per store
     entry, per-entry delta writes (the CommitBuffer delta-flush analog,
     CommitBuffer.java:340-395). Must equal the batch-replay oracle."""
@@ -1225,15 +1226,7 @@ def q_papi_tws_running_count(spark, sf_dir):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        q = (
-            out.writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .option("path", outdir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_to_sink(out, outdir, ck)
     finally:
         if prev is None:
             spark.conf.unset(conf_key)
@@ -2226,14 +2219,7 @@ def q_iq_store_dump(spark, sf_dir):
         order_by=("event_id",),
     )
     ck = tempfile.mkdtemp(prefix="iq_ck_")
-    q = (
-        out.writeStream.format("noop")
-        .outputMode("append")
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_to_sink(out, None, ck, fmt="noop")
     dump = iq.query_processor_state(spark, ck, ["user_id"], store_key=("n",))
     return dump.select("user_id", F.col("store_value").alias("running_cnt"))
 
@@ -2534,7 +2520,7 @@ def q_shard_stream(spark, sf_dir):
         # do almost no data work')
         for parity in (0, 1):
             lane.ingest(docs.filter(F.col("doc_id") % 2 == parity))
-        # ONE availableNow start drains both waves as SEPARATE
+        # ONE drain (one query start) covers both waves as SEPARATE
         # micro-batches (maxFilesPerTrigger=1 + the mixin's mtime-stamped
         # wave order): identical per-batch commits and carried totals,
         # minus one per-query-start python-worker/planning spawn (r15,

@@ -48,21 +48,3 @@ def compact_changelog(
         snap = snap.filter(F.col(drop_tombstones).isNotNull())
     return snap
 
-
-def migrate_changelog(
-    changelog: DataFrame,
-    dest_path: str,
-    key: Sequence[str],
-    ts_col: str = "ts",
-    tiebreak: Sequence[str] = (),
-    mode: str = "latest",
-    partition_by: Sequence[str] = (),
-) -> None:
-    """One-shot migration job: compact and write the store image. At scale,
-    ``partition_by`` buckets the output so the consuming job's first read
-    is partition-pruned."""
-    out = compact_changelog(changelog, key, ts_col, tiebreak, mode)
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(dest_path)

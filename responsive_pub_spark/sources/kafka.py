@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from responsive_pub_spark.sources import serde
+from responsive_pub_spark.streaming.runtime import run_to_sink
 
 #: Columns the Spark Kafka sink consumes (timestamp is broker-assigned);
 #: a ``headers`` column, when present, is carried too — the connector
@@ -69,14 +70,14 @@ def to_kafka(
     bootstrap_servers: str | None = None,
     path: str | None = None,
     checkpoint: str | None = None,
-    available_now: bool = True,
     headers_col: str | None = None,
 ):
     """Write a (batch or streaming) DataFrame to a Kafka topic (or the
-    file-broker contract sink). Returns the StreamingQuery for streaming
-    input, else None. ``headers_col`` adds the record-headers column to
-    the wire rows: the real connector writes it as Kafka record headers;
-    the file broker persists it verbatim (round-trip pinned by
+    file-broker contract sink). Streaming input is drained once through
+    ``runtime.run_to_sink`` and the terminated StreamingQuery returned;
+    batch input returns None. ``headers_col`` adds the record-headers
+    column to the wire rows: the real connector writes it as Kafka record
+    headers; the file broker persists it verbatim (round-trip pinned by
     tests/test_kafka_headers.py)."""
     wire = kafka_wire(df, key_cols, value_cols, topic, ts_col, headers_col)
     sink_cols = list(KAFKA_SINK_COLUMNS) + (
@@ -93,17 +94,7 @@ def to_kafka(
                 # one append per micro-batch == one producer flush per commit
                 bdf.write.mode("append").parquet(path)
 
-            writer = (
-                wire.writeStream.foreachBatch(_emit)
-                .outputMode("append")
-                .option("checkpointLocation", checkpoint)
-            )
-            if available_now:
-                writer = writer.trigger(availableNow=True)
-            q = writer.start()
-            if available_now:
-                q.awaitTermination()
-            return q
+            return run_to_sink(wire, _emit, checkpoint)
         wire.write.mode("append").parquet(path)
         return None
     # real broker path (requires spark-sql-kafka connector on classpath)
@@ -121,17 +112,7 @@ def to_kafka(
                 .save()
             )
 
-        writer = (
-            wire.writeStream.foreachBatch(_produce)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-        if available_now:
-            q.awaitTermination()
-        return q
+        return run_to_sink(wire, _produce, checkpoint)
     (
         wire.select(*sink_cols)
         .write.format("kafka")

@@ -4,7 +4,8 @@ The reference's only source is a Kafka topic (builder.stream/table,
 STJoinExample.java:58-64). Our engine reads any Spark source; the test
 fixtures are parquet tables (TESTDATA.md). ``read_stream_parquet`` gives the
 file-based streaming analog of a topic: new files == new records, usable
-with availableNow/maxFilesPerTrigger for deterministic micro-batching.
+with ``maxFilesPerTrigger`` and the ``streaming.runtime.run_to_sink`` drain
+for deterministic micro-batching.
 """
 
 from __future__ import annotations
@@ -13,20 +14,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-#: Canonical fixture tables (TESTDATA.md).
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -117,10 +104,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
-
-
 def read_stream_parquet(
     spark: SparkSession, path: str, schema=None, max_files_per_trigger: int | None = None
 ) -> DataFrame:
@@ -132,22 +115,6 @@ def read_stream_parquet(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def read_kafka_stream(
-    spark: SparkSession, bootstrap_servers: str, topic: str, starting_offsets: str = "earliest"
-) -> DataFrame:
-    """Kafka source with the reference's exact record model: key BINARY,
-    value BINARY, timestamp TIMESTAMP (SURVEY.md §1.1). Requires the Spark
-    Kafka connector on the classpath; not exercised in the offline test env.
-    """
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )
 
 
 #: Explicit JSONL document schema — corpus interchange format. Schema is

@@ -8,7 +8,8 @@ BM25-scored candidates from live state without a corpus-wide
 recomputation per query — the same batch/streaming parity contract as
 the CMS/HLL sketch lanes (tests/test_streaming.py).
 
-Three checkpointed availableNow queries over file topics:
+Three checkpointed queries over file topics, each drained by
+``runtime.run_to_sink``:
 
 1. **postings** (stateless, append): each arriving doc is tokenized ONCE
    into (doc_id, w, tf, dl) rows — term frequency and doc length are
@@ -151,14 +152,7 @@ class Bm25Streaming:
             dfreq = post_stream.groupBy("w").agg(
                 F.count("*").cast("bigint").alias("df")
             )
-            q = (
-                dfreq.writeStream.foreachBatch(self.df_sink)
-                .outputMode("update")
-                .option("checkpointLocation", self.ck_df)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            run_to_sink(dfreq, self.df_sink, self.ck_df, output_mode="update")
 
         # 3) stateful corpus scalars: 1-row complete-mode aggregate —
         # reads the docs topic, independent of the postings/df chain
@@ -183,14 +177,7 @@ class Bm25Streaming:
                 self.stats_base.gc()
 
         def drain_stats() -> None:
-            q = (
-                stats.writeStream.foreachBatch(write_stats)
-                .outputMode("complete")
-                .option("checkpointLocation", self.ck_stats)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            run_to_sink(stats, write_stats, self.ck_stats, output_mode="complete")
 
         # the (postings -> df) chain and the stats drain are independent
         # legs — overlap them in driver threads: the

@@ -41,11 +41,11 @@ Retention (watermark/TTL eviction): members with
 touched, and a bucket whose members ALL aged out removes its state entry
 entirely — so a long-running stream's state is bounded by the dup
 horizon, not the corpus. A bucket that is never touched again keeps its
-last entry; on a continuous (non-availableNow) runner, pair this with
+last entry; on a continuous runner, pair this with
 ``GroupStateTimeout.EventTimeTimeout`` + a watermark to reap those too
-(processing-time timeouts stall availableNow draining — the
-MultiBatchExecutor waits out pending timers — so this harness prunes on
-access only).
+(processing-time timeouts stall the one-shot drain of
+``runtime.run_to_sink`` — the MultiBatchExecutor waits out pending
+timers — so this harness prunes on access only).
 
 Scale posture: the bucket shuffle is on (band_id, band_hash) — the same
 key the batch band join shuffles on; candidate traffic is (id, id) pairs;
@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from responsive_pub_spark.operators import dedup
+from responsive_pub_spark.streaming.runtime import run_to_sink
 
 DOCS_SCHEMA = "doc_id BIGINT, text STRING, ts DOUBLE"
 SIG_SCHEMA = (
@@ -102,7 +103,7 @@ def _bucket_stage(
     passes it, the bucket's state entry is REAPED even though the bucket
     was never touched again — closing the prune-on-access leak where a
     bucket that stops colliding keeps its last members forever.
-    availableNow drains remain correct: event-time timers fire on the
+    ``run_to_sink`` drains remain correct: event-time timers fire on the
     data batches that advance the watermark (only processing-time timers
     stall the MultiBatchExecutor)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -235,9 +236,9 @@ def _make_bucket_fn(
 class NearDupStreaming:
     """Checkpointed streaming near-dup dedup lane (see module docstring).
 
-    ``advance()`` drains all three queries with availableNow — every
-    advance is a cold start from the checkpoints, so the restart path is
-    exercised on each call. ``retention`` (event-time seconds) bounds how
+    ``advance()`` drains all three queries through
+    ``runtime.run_to_sink`` (a cold start from the checkpoints on every
+    call). ``retention`` (event-time seconds) bounds how
     far back a doc can be deduplicated against; ``None`` keeps the full
     horizon (the parity-with-batch configuration).
 
@@ -299,21 +300,10 @@ class NearDupStreaming:
             os.path.join(workdir, "drops-meta"), self.drops_dir
         )
 
-    def _run(self, out_df: DataFrame, path: str, ckpt: str) -> None:
-        q = (
-            out_df.writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .option("path", path)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     def advance(self) -> None:
         # query S: docs -> signature topic (write-once signature table)
         docs = self.spark.readStream.schema(DOCS_SCHEMA).parquet(self.docs_dir)
-        self._run(dedup._sig_df(docs, extra=("ts",)), self.sig_dir, self.ck_sig)
+        run_to_sink(dedup._sig_df(docs, extra=("ts",)), self.sig_dir, self.ck_sig)
 
         # query C: signatures -> band explode -> bucket state -> candidates
         sig = self.spark.readStream.schema(SIG_SCHEMA).parquet(self.sig_dir)
@@ -336,7 +326,7 @@ class NearDupStreaming:
             ).withWatermark(
                 "event_ts", f"{int(self.retention * 1000)} milliseconds"
             )
-        self._run(
+        run_to_sink(
             _bucket_stage(
                 bands, self.retention, self.probe_depth, self.continuous
             ),
@@ -359,7 +349,7 @@ class NearDupStreaming:
         # the strictly-increasing sequence, so drop_ids_since() can
         # serve verdicts-since-a-watermark from new files only
         self.drops_topic.append(
-            lambda: self._run(drops, self.drops_dir, self.ck_drop)
+            lambda: run_to_sink(drops, self.drops_dir, self.ck_drop)
         )
 
     def drops(self) -> DataFrame:

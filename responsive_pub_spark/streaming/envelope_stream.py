@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from responsive_pub_spark.operators.timeseries import json_envelope_audit
 from responsive_pub_spark.streaming.kv_sink import KeyValueTableSink
+from responsive_pub_spark.streaming.runtime import run_to_sink
 
 EVENTS_SCHEMA = "event_type STRING, props STRING"
 COUNT_COLS = ["n_present", "n_null", "n_num", "n_str", "n_bool", "n_nested"]
@@ -78,14 +79,7 @@ class EnvelopeAuditStreaming:
         # parity holds BY CONSTRUCTION instead of by keeping a 50-line
         # copy in sync (r12 ADVICE)
         counts = json_envelope_audit(ev)
-        q = (
-            counts.writeStream.foreachBatch(self.sink)
-            .outputMode("update")
-            .option("checkpointLocation", self.ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_to_sink(counts, self.sink, self.ck, output_mode="update")
 
     def compact(self) -> None:
         """Fold the audit KV table's delta log into one base delta

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from responsive_pub_spark.streaming.runtime import run_to_sink
+
 
 def stream_global_join(
     stream: DataFrame,
@@ -31,10 +33,10 @@ def stream_global_join(
     key_extractor: "Column | str | None" = None,
     stream_key: "list[str] | None" = None,
     how: str = "inner",
-    available_now: bool = True,
 ):
-    """Run the refreshing global join; joined rows append to ``out_path``
-    (parquet). Returns the StreamingQuery."""
+    """Drain the refreshing global join through ``runtime.run_to_sink``;
+    joined rows append to ``out_path`` (parquet). Returns the terminated
+    StreamingQuery."""
 
     def _join_batch(bdf: DataFrame, batch_id: int) -> None:
         t = table.refresh()
@@ -57,14 +59,4 @@ def stream_global_join(
             joined = joined.drop(t.df[rk])
         joined.write.mode("append").parquet(out_path)
 
-    writer = (
-        stream.writeStream.foreachBatch(_join_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    if available_now:
-        q.awaitTermination()
-    return q
+    return run_to_sink(stream, _join_batch, checkpoint)

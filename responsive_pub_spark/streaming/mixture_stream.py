@@ -43,6 +43,7 @@ from responsive_pub_spark.operators.pipeline_ops import (
     mixture_resample_tokens,
 )
 from responsive_pub_spark.streaming.kv_sink import KeyValueTableSink
+from responsive_pub_spark.streaming.runtime import run_to_sink
 
 DOCS_SCHEMA = "doc_id BIGINT, lang STRING, text STRING"
 
@@ -84,14 +85,7 @@ class MixtureStreaming:
             .groupBy("lang")
             .agg(F.sum("n_tokens").cast("bigint").alias("n_d"))
         )
-        q = (
-            masses.writeStream.foreachBatch(self.sink)
-            .outputMode("update")
-            .option("checkpointLocation", self.ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_to_sink(masses, self.sink, self.ck, output_mode="update")
 
     def compact(self) -> None:
         """Fold the masses KV table's delta log into one base delta

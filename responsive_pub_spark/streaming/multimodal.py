@@ -388,17 +388,6 @@ def ppm_decode_features_oracle() -> str:
 
 # -- DuckDB oracles (identical arithmetic) ----------------------------------
 
-def decode_features_oracle() -> str:
-    feats = ", ".join(
-        f"CAST((doc_id * 31 + {j} * octet_length(encode(text))) % {FAKE_MOD} AS DOUBLE)"
-        for j in range(FAKE_FEATURE_DIM)
-    )
-    return f"""
-        SELECT CAST(doc_id AS BIGINT) AS doc_id, [{feats}] AS features
-        FROM documents
-    """
-
-
 def decode_features_long_oracle() -> str:
     return f"""
         WITH m AS (

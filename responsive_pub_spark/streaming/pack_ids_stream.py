@@ -60,6 +60,7 @@ from responsive_pub_spark.streaming.commitlog import (
     fsync_dir,
     fsync_tree,
 )
+from responsive_pub_spark.streaming.runtime import run_to_sink
 from responsive_pub_spark.streaming.shard_stream import (
     _chaos_kill_env,
     _FileTopicMixin,
@@ -310,14 +311,7 @@ class PackIdsStreaming(_FileTopicMixin):
             .option("recursiveFileLookup", "true")
             .parquet(self.docs_dir)
         )
-        q = (
-            docs.writeStream.foreachBatch(self._apply)
-            .outputMode("append")
-            .option("checkpointLocation", self.ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_to_sink(docs, self._apply, self.ck)
 
     # -- maintenance -------------------------------------------------------
     def compact(self) -> int:

@@ -52,6 +52,7 @@ from responsive_pub_spark.operators.pipeline_ops import (
     bucketed_running_sum,
 )
 from responsive_pub_spark.streaming.commitlog import DeltaCommitLog
+from responsive_pub_spark.streaming.runtime import run_to_sink
 from responsive_pub_spark.streaming.shard_stream import (
     _chaos_kill_env,
     _FileTopicMixin,
@@ -183,14 +184,7 @@ class PackStreaming(_FileTopicMixin):
             .option("recursiveFileLookup", "true")
             .parquet(self.docs_dir)
         )
-        q = (
-            docs.writeStream.foreachBatch(self._apply)
-            .outputMode("append")
-            .option("checkpointLocation", self.ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_to_sink(docs, self._apply, self.ck)
 
     # -- maintenance -------------------------------------------------------
     def compact(self) -> int:

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from responsive_pub_spark.streaming import state
+from responsive_pub_spark.streaming.runtime import run_to_sink
 
 #: retraction-topic schema (query A -> query B)
 RETRACT_SCHEMA = "grp STRING, cnt_delta BIGINT, val_delta BIGINT, ts DOUBLE"
@@ -223,9 +224,9 @@ class RegroupStreaming:
 
     ``input_schema`` must expose ``key_col`` (the table's primary key),
     ``grp`` (the re-grouping column), ``val`` (BIGINT fixed-point value)
-    and ``ts`` (DOUBLE event time).  ``advance()`` drains both queries with
-    availableNow — every advance is a cold start from the checkpoints, so
-    the restart path is exercised on each call.
+    and ``ts`` (DOUBLE event time).  ``advance()`` drains both queries
+    through ``runtime.run_to_sink`` (a cold start from the checkpoints on
+    every call).
 
     ``engine="vectorized"`` (default) runs both stages as whole-batch
     numpy/pandas ops seeded from checkpointed per-key heads — emissions
@@ -260,17 +261,6 @@ class RegroupStreaming:
         self.key_col = key_col
         self.order_by = tuple(order_by)
 
-    def _run(self, out_df, path, ckpt) -> None:
-        q = (
-            out_df.writeStream.format("parquet")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .option("path", path)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     def advance(self) -> None:
         changelog = self.spark.readStream.schema(self.input_schema).parquet(
             self.input_dir
@@ -290,7 +280,7 @@ class RegroupStreaming:
                 ts_col="ts",
                 order_by=self.order_by,
             )
-        self._run(retract, self.retract_topic, self.ck0)
+        run_to_sink(retract, self.retract_topic, self.ck0)
 
         deltas = self.spark.readStream.schema(RETRACT_SCHEMA).parquet(
             self.retract_topic
@@ -308,7 +298,7 @@ class RegroupStreaming:
                 # intermediate emissions (and emit_seq assignment) bit-stable
                 order_by=("cnt_delta", "val_delta"),
             )
-        self._run(reagg, self.out_dir, self.ck1)
+        run_to_sink(reagg, self.out_dir, self.ck1)
 
     def changelog(self) -> DataFrame:
         return self.spark.read.schema(REAGG_SCHEMA).parquet(self.out_dir)

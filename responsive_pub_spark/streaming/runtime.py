@@ -1,24 +1,43 @@
-"""Streaming runtime helpers: deterministic topology test driver and
-checkpointed execution.
+"""Streaming runtime: the one drain, a deterministic topology test driver,
+and concurrent drains.
+
+The drain (``run_to_sink``) is the engine's commit-aligned step — the
+reference's flush-then-commit — and every finite streaming query in the
+package runs through it:
+
+- **availableNow cold start.** Each call starts the query from its
+  checkpoint with ``trigger(availableNow=True)``, processes everything
+  pending at start (file topics honour ``maxFilesPerTrigger``, so one
+  file can stay one micro-batch) and returns only after the query
+  terminates. State is restored from the checkpoint on every call, so
+  the restart path is exercised on each advance.
+- **Checkpoint.** Offsets and state commit per micro-batch under the
+  ``checkpoint`` directory; a crash re-runs at most the uncommitted
+  batch.
+- **Sink.** A directory gives Spark's file sink, exactly-once through
+  its transactional sink log (the reference's commit-aligned flush plus
+  offset fencing, SURVEY.md §3.2). A callable gives ``foreachBatch``:
+  a replayed batch arrives again with the same batch id, so the callable
+  must be idempotent per batch id (the KV sink and the commit logs fence
+  on it). ``None`` starts a path-less format sink such as ``noop``.
+- **Failure.** A failed batch makes the call raise; a drain never
+  returns silently with work undone.
 
 ``TopologyTestDriver`` is the analog of the reference's
 ``ResponsiveTopologyTestDriver`` (responsive-test-utils/.../
 ResponsiveTopologyTestDriver.java:47-90): pipe records in, advance the
 topology deterministically, read outputs — no brokers, no wall clock.
-
-Implementation: a parquet file-source directory is the topic; each
-``pipe(rows)`` writes one new file (one "producer batch"); ``advance()``
-runs the streaming query with ``trigger(availableNow=True)`` against a
-checkpoint, so every advance processes exactly the new files and state
-carries over — which also makes kill/restart exactly-once tests trivial
-(SURVEY.md §5: chaos = restart from checkpoint asserting exactly-once).
+A parquet file-source directory is the topic; each ``pipe(rows)``
+writes one new file (one "producer batch"); ``advance()`` is one drain,
+so every advance processes exactly the new files and state carries over
+— which also makes kill/restart exactly-once tests trivial (SURVEY.md
+§5: chaos = restart from checkpoint asserting exactly-once).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -54,7 +73,6 @@ class TopologyTestDriver:
         self.input_dir = os.path.join(workdir, "input")
         self.checkpoint = os.path.join(workdir, "checkpoint")
         os.makedirs(self.input_dir, exist_ok=True)
-        self._advance_n = 0
         self._pipe_n = 0
         self._stamped: set[str] = set()
         self._total_rows: list = []
@@ -82,7 +100,6 @@ class TopologyTestDriver:
             "maxFilesPerTrigger", "1"
         ).parquet(self.input_dir)
         out = self.build(sdf)
-        self._advance_n += 1
         # foreachBatch: the only driver-collectable sink that supports
         # checkpoint recovery (memory sink does not), which is the point —
         # every advance() restores state like a process restart would
@@ -91,14 +108,7 @@ class TopologyTestDriver:
         def sink(bdf: DataFrame, batch_id: int) -> None:
             per_batch.append((batch_id, bdf.collect()))
 
-        q = (
-            out.writeStream.foreachBatch(sink)
-            .outputMode(self.output_mode)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_to_sink(out, sink, self.checkpoint, output_mode=self.output_mode)
         if self.output_mode == "complete":
             rows = per_batch[-1][1] if per_batch else list(self._total_rows)
             self._total_rows = rows
@@ -150,31 +160,32 @@ def run_concurrent(*thunks: Callable[[], None]) -> None:
 
 def run_to_sink(
     df: DataFrame,
-    path: str,
+    sink: "str | Callable[[DataFrame, int], None] | None",
     checkpoint: str,
     fmt: str = "parquet",
     output_mode: str = "append",
-    available_now: bool = True,
     partition_by: "list[str] | None" = None,
 ):
-    """Run a streaming DF to a durable sink with exactly-once file-sink
-    semantics (Spark's transactional file sink log == the reference's
-    commit-aligned flush + offset fencing, SURVEY.md §3.2).
+    """Drain a streaming DF once (protocol in the module docstring) and
+    return the terminated query. ``sink`` is an output directory (``fmt``
+    file sink), a ``foreachBatch`` function, or ``None`` for a path-less
+    format such as ``noop``.
 
     ``partition_by`` lays the sink out as partition directories so
     batch readers can carry static partition filters (PartitionFilters
     over the MetadataLogFileIndex — the span lane's bucket-pruned gram
     reads)."""
-    writer = (
-        df.writeStream.format(fmt)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
+    writer = df.writeStream.outputMode(output_mode).option(
+        "checkpointLocation", checkpoint
     )
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format(fmt)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start(path)
-    if available_now:
-        q.awaitTermination()
+    q = writer.trigger(availableNow=True).start(
+        sink if isinstance(sink, str) else None
+    )
+    q.awaitTermination()
     return q

@@ -57,6 +57,7 @@ from responsive_pub_spark.operators.pipeline_ops import (
 )
 from responsive_pub_spark.functions import text as T
 from responsive_pub_spark.streaming.commitlog import DeltaCommitLog
+from responsive_pub_spark.streaming.runtime import run_to_sink
 
 DOCS_SCHEMA = "doc_id BIGINT, text STRING"
 ASSIGN_SCHEMA = (
@@ -292,14 +293,7 @@ class ShardStreaming(_FileTopicMixin):
             .option("recursiveFileLookup", "true")
             .parquet(self.docs_dir)
         )
-        q = (
-            docs.writeStream.foreachBatch(self._apply)
-            .outputMode("append")
-            .option("checkpointLocation", self.ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_to_sink(docs, self._apply, self.ck)
 
     # -- maintenance -------------------------------------------------------
     def compact(self) -> int:

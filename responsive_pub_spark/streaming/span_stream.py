@@ -48,7 +48,7 @@ alone, so it belongs in a maintained table written ONCE per doc (the
   rows), over columnar maintained tables, never a re-gram of the
   corpus.
 
-Both maintenance queries are checkpointed availableNow drains through
+Both maintenance queries are ``runtime.run_to_sink`` drains into
 Spark's transactional file sink (exactly-once). There is ZERO
 aggregation state — the maintained tables ARE the fingerprints.
 

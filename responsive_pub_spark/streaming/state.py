@@ -670,6 +670,11 @@ class Processor:
         pass
 
 
+#: partition-id column of the task-model lanes (process_partitioned and
+#: its streaming twin); ``_replay`` drops it, so records never carry it
+_PART_COL = "__part__"
+
+
 def _replay(
     proc: Processor,
     ctx: ProcessorContext,
@@ -689,6 +694,9 @@ def _replay(
     micro-batch, so the body works on plain row lists: pandas' sort, row
     iteration and Series access cost far more per key than the records
     themselves (tests/test_property_state.py pins the equivalence)."""
+    if _PART_COL in pdf.columns:
+        # the task-model lanes' partition tag is routing, not record data
+        pdf = pdf.drop(columns=[_PART_COL])
     cols = list(pdf.columns)
     order = [arrival_col] if arrival_col is not None else [
         ts_col, *[c for c in order_by if c != ts_col]
@@ -809,20 +817,19 @@ def process_partitioned(
         partitioner = F.pmod(
             F.hash(*[F.col(k) for k in keys]), F.lit(int(num_partitions))
         )
-    df2 = df.withColumn("__part__", partitioner.cast("int"))
-    df2 = df2.repartition(int(num_partitions), F.col("__part__"))
+    df2 = df.withColumn(_PART_COL, partitioner.cast("int"))
+    df2 = df2.repartition(int(num_partitions), F.col(_PART_COL))
 
     def run(key_vals: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         proc = processor_factory()
         store = KeyValueStore(ttl_seconds)
         ctx = ProcessorContext((int(key_vals[0]),), store)
         proc.init(ctx)
-        pdf = pdf.drop(columns=["__part__"])
         _replay(proc, ctx, pdf, ts_col, order_by, arrival_col)
         proc.close(ctx)
         return ctx._to_pdf()
 
-    return df2.groupBy("__part__").applyInPandas(run, output_schema)
+    return df2.groupBy(_PART_COL).applyInPandas(run, output_schema)
 
 
 _STATE_SCHEMA = StructType([StructField("blob", BinaryType())])
@@ -1009,8 +1016,6 @@ class TwsMapStateStore:
     #: ~misses x (_PAGE/chunk) round trips while keeping the
     #: touch-everything case at one full sweep
     _PAGE = 4096
-    #: back-compat alias (r6 name; tests and docs reference it)
-    _PRELOAD_MAX = _PAGE
 
     @staticmethod
     def _k(key) -> bytes:
@@ -1326,10 +1331,10 @@ def process_streaming_partitioned(
         partitioner = F.pmod(
             F.hash(*[F.col(k) for k in keys]), F.lit(int(num_partitions))
         )
-    tagged = sdf.withColumn("__part__", partitioner.cast("int"))
+    tagged = sdf.withColumn(_PART_COL, partitioner.cast("int"))
     return process_streaming(
         tagged,
-        key=["__part__"],
+        key=[_PART_COL],
         processor_factory=processor_factory,
         output_schema=output_schema,
         ts_col=ts_col,

@@ -12,6 +12,10 @@ from responsive_pub_spark.operators import similarity
 from responsive_pub_spark.sources.readers import read_table
 from responsive_pub_spark.streaming.ann_stream import IvfIncremental, VECS_SCHEMA
 
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
+
 
 def _topk_sets(rows):
     out: dict[int, set[int]] = {}
@@ -535,11 +539,3 @@ def test_small_dim_embeddings_adapt_pq_subspaces(spark, tmp_path):
     # single-subspace ADC ranks by the same geometry class; the exact
     # re-rank makes shared hits score-identical
     assert _recall(pq, raw) >= 0.5
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

@@ -37,6 +37,10 @@ from responsive_pub_spark.operators.pipeline_ops import _shard_coeffs
 from responsive_pub_spark.streaming.pack_stream import PackStreaming
 from responsive_pub_spark.streaming.shard_stream import ShardStreaming
 
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
+
 BUDGET = 97
 
 
@@ -358,11 +362,3 @@ def test_crash_leftover_part_file_restamps_in_order(spark, tmp_path):
     # and the lane drains all three waves in that order, batch-parity
     lane2.advance()
     assert lane2.assignments().count() == 120
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

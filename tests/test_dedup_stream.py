@@ -9,6 +9,7 @@ advance a cold start from the checkpoints."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from responsive_pub_spark.operators import dedup
@@ -17,6 +18,11 @@ from responsive_pub_spark.streaming.dedup_stream import (
     DOCS_SCHEMA,
     NearDupStreaming,
 )
+
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
+
 
 def _feed(spark, lane, rows):
     spark.createDataFrame(rows, DOCS_SCHEMA).coalesce(1).write.mode(
@@ -280,11 +286,3 @@ def test_continuous_mode_requires_retention(spark, tmp_path):
 
     with pytest.raises(ValueError, match="retention"):
         NearDupStreaming(spark, str(tmp_path / "x"), continuous=True)
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

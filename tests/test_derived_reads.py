@@ -25,10 +25,15 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from responsive_pub_spark.examples.pretrain_stream import PretrainStream
 from responsive_pub_spark.streaming.decontam_stream import DecontamStreaming
+
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
 
 SCHEMA = "doc_id BIGINT, lang STRING, text STRING, ts DOUBLE"
 
@@ -229,11 +234,3 @@ def test_decontam_rebuild_flag_is_idempotent_across_a_torn_advance(
     lane.advance()
     assert _rows_set(lane.decision()) == want
     assert _rows_set(lane.decision()) == _rows_set(lane.report())
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

@@ -2,8 +2,14 @@
 
 from __future__ import annotations
 
+import pytest
+
 from responsive_pub_spark.examples import key_batch, stjoin
 from responsive_pub_spark.sources.readers import read_table
+
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
 
 
 def test_key_batch_example_partitions_stream(spark, sf_dir):
@@ -571,11 +577,3 @@ def test_pretrain_stream_shards_survivors_across_restart(
             if lg == a_lang and s == int(r.seq_id)
         ]
         assert list(r.toks) == want and len(want) == 512
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

@@ -13,6 +13,10 @@ from pyspark.sql import functions as F
 
 from responsive_pub_spark.operators import fk_join
 
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
+
 LEFT_SCHEMA = "user STRING, team STRING, name STRING, ts DOUBLE"
 RIGHT_SCHEMA = "team STRING, org STRING, ts DOUBLE"
 
@@ -96,11 +100,3 @@ def test_single_query_streaming_raises_with_pointer(spark):
             left_payload=F.col("name"), right_payload=F.col("name"),
             streaming=True,
         )
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

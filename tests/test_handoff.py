@@ -36,6 +36,10 @@ from responsive_pub_spark.streaming.handoff import (
     ship,
 )
 
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
+
 SCHEMA = "doc_id BIGINT, text STRING"
 
 
@@ -268,11 +272,3 @@ def test_pre_handoff_layout_is_refused(spark, tmp_path):
     _append(spark, src, 1)
     ship(spark, src, SCHEMA, marker2, dest2, lambda d: d)
     assert_handoff_layout(dest2, marker2, "test leg")
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

@@ -9,6 +9,10 @@ import pytest
 from responsive_pub_spark.streaming import iq, state
 from responsive_pub_spark.streaming.runtime import TopologyTestDriver
 
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
+
 
 @pytest.fixture
 def workdir(tmp_path):
@@ -333,11 +337,3 @@ def test_session_store_find_sessions_iq(spark, workdir):
         (1, 0.0), (1, 40.0), (2, 100.0)
     }
     drv.close()
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

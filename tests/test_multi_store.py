@@ -7,8 +7,14 @@ start), per-store IQ, and the multi-store blob's delta-passthrough
 
 from __future__ import annotations
 
+import pytest
+
 from responsive_pub_spark.streaming import iq, state
 from responsive_pub_spark.streaming.runtime import TopologyTestDriver
+
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
 
 
 def _make_two_store():
@@ -181,11 +187,3 @@ def test_cancellable_cancellation_survives_streaming_restarts(spark, tmp_path):
         drv.pipe([{"user_id": 1, "ts": ts}])
         assert drv.advance() == []
     drv.close()
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

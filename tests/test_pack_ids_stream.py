@@ -16,6 +16,10 @@ from pyspark.sql.window import Window
 from responsive_pub_spark.operators import bpe
 from responsive_pub_spark.streaming.pack_ids_stream import PackIdsStreaming
 
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
+
 BUDGET = 23
 K = 4
 
@@ -195,11 +199,3 @@ def test_sequences_reader_and_compact(spark, tmp_path):
     assert {
         r.lang: r.post_total for r in lane.totals().collect()
     } == totals_before
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

@@ -18,6 +18,10 @@ from responsive_pub_spark.functions import text as T
 from responsive_pub_spark.sources.readers import read_table
 from responsive_pub_spark.streaming.pack_stream import PackStreaming
 
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
+
 
 @pytest.fixture
 def workdir(tmp_path):
@@ -136,11 +140,3 @@ def test_lang_absent_from_wave_carries_forward(spark, workdir):
         ("en", 5),
         ("de", 6),
     }
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

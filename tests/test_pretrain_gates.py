@@ -20,10 +20,15 @@ Contracts under test:
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from responsive_pub_spark.examples.pretrain_stream import PretrainStream
 from responsive_pub_spark.functions import text as T
+
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
 
 SCHEMA = "doc_id BIGINT, lang STRING, text STRING, ts DOUBLE"
 
@@ -290,11 +295,3 @@ def test_mask_quarantined_reader_drops_exactly_the_flagged_sequences(
             "en", closed_only=False, mask_quarantined=True
         ).collect()
     } == masked
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

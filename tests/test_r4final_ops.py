@@ -15,6 +15,10 @@ from responsive_pub_spark.plans import audit
 from responsive_pub_spark.sources.readers import read_table
 from responsive_pub_spark.streaming.state import VersionedKeyValueStore
 
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
+
 
 # ---------------------------------------------------------------------------
 # VersionedKeyValueStore (KS 3.5 surface)
@@ -455,11 +459,3 @@ def test_heavy_hitters_contract(spark, sf_dir):
             (est_all.cms_est >= theta) & (est_all.exact_count < theta)
         ]
         assert len(fp_band) > 0, "fixture never exercised the FP band"
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

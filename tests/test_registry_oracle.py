@@ -11,6 +11,10 @@ from responsive_pub_spark.registry import REGISTRY
 
 from tests.oracle_util import compare
 
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
+
 CASES = [(name, spec) for name, spec in REGISTRY.items() if spec.oracle]
 
 
@@ -67,11 +71,3 @@ def test_every_query_has_oracle_or_reason():
     # all current queries are batch-expressible; streaming-only entries may
     # be oracle-less later
     assert len(qs) >= 30
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

@@ -1,14 +1,16 @@
 """Edge inputs of the streaming runtime and the registry's wave split:
-every failure surfaces, and an empty table fails with a clear message."""
+every failure surfaces, a drain resumes from its checkpoint, and an
+empty table fails with a clear message."""
 
 from __future__ import annotations
 
 import threading
 
 import pytest
+from pyspark.errors import StreamingQueryException
 
 from responsive_pub_spark.registry import _median_id
-from responsive_pub_spark.streaming.runtime import run_concurrent
+from responsive_pub_spark.streaming.runtime import run_concurrent, run_to_sink
 
 
 def test_run_concurrent_raises_every_failed_thunk(spark):
@@ -56,3 +58,59 @@ def test_median_id_keeps_the_rows_half_boundary(spark, ids, median):
     got = _median_id(df, "event_id")
     assert got == median
     assert sorted(ids)[: len(ids) // 2] == [i for i in sorted(ids) if i < got]
+
+
+def _produce(spark, topic, *values) -> None:
+    """One new file per value in the file topic."""
+    for v in values:
+        spark.createDataFrame([(v,)], "v BIGINT").coalesce(1).write.mode(
+            "append"
+        ).parquet(str(topic))
+
+
+def _drain(spark, topic, ck, sink):
+    stream = (
+        spark.readStream.schema("v BIGINT")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(topic))
+    )
+    return run_to_sink(stream, sink, str(ck))
+
+
+def _collecting_sink():
+    batches: dict[int, list[int]] = {}
+
+    def sink(bdf, batch_id):
+        batches[batch_id] = [r.v for r in bdf.collect()]
+
+    return batches, sink
+
+
+def test_run_to_sink_callable_drains_every_pending_file(spark, tmp_path):
+    _produce(spark, tmp_path / "topic", 1, 2, 3)
+    batches, sink = _collecting_sink()
+    q = _drain(spark, tmp_path / "topic", tmp_path / "ck", sink)
+    assert not q.isActive
+    # one micro-batch per file, all inside the one call
+    assert sorted(batches.values()) == [[1], [2], [3]]
+
+
+def test_run_to_sink_resumes_from_the_checkpoint(spark, tmp_path):
+    _produce(spark, tmp_path / "topic", 1, 2)
+    first, sink = _collecting_sink()
+    _drain(spark, tmp_path / "topic", tmp_path / "ck", sink)
+    _produce(spark, tmp_path / "topic", 3)
+    second, sink = _collecting_sink()
+    _drain(spark, tmp_path / "topic", tmp_path / "ck", sink)
+    assert list(second.values()) == [[3]]
+    assert min(second) > max(first)  # batch ids continue, not restart
+
+
+def test_run_to_sink_raises_when_the_sink_fails(spark, tmp_path):
+    _produce(spark, tmp_path / "topic", 1)
+
+    def sink(bdf, batch_id):
+        raise ValueError("sink refused the batch")
+
+    with pytest.raises(StreamingQueryException, match="sink refused the batch"):
+        _drain(spark, tmp_path / "topic", tmp_path / "ck", sink)

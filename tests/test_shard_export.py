@@ -25,6 +25,10 @@ from responsive_pub_spark.sources.readers import read_table
 
 from oracle_util import compare
 
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
+
 
 def test_oracle_parity_nondefault_params(spark, sf_dir, duck):
     docs = read_table(spark, sf_dir, "documents")
@@ -235,11 +239,3 @@ def test_export_shards_budgets_on_learned_bpe(spark, sf_dir, tmp_path):
     )
     got = assignment.agg(F.sum("n_tokens")).collect()[0][0]
     assert got == expect
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

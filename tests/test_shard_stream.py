@@ -22,6 +22,10 @@ from responsive_pub_spark.operators.pipeline_ops import _shard_coeffs
 from responsive_pub_spark.sources.readers import read_table
 from responsive_pub_spark.streaming.shard_stream import ShardStreaming
 
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
+
 
 @pytest.fixture
 def workdir(tmp_path):
@@ -164,11 +168,3 @@ def test_redelivered_batch_is_skipped_and_torn_delta_replays(
     assert min(
         r[2] * lane.budget + r[3] for r in replayed
     ) == base if replayed else True
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

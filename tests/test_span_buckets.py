@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from responsive_pub_spark.streaming.span_stream import (
@@ -27,6 +28,10 @@ from responsive_pub_spark.streaming.span_stream import (
     SPAN_GB,
     SpanDedupStreaming,
 )
+
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
 
 
 def _docs(spark, rows):
@@ -210,11 +215,3 @@ def test_torn_compact_leftovers_never_disturb_serving_and_retry_heals(
     ]
     assert bases == [f"base-v{ver1:06d}"], bases
     assert 999 not in {int(r[0]) for r in lane.stripped().collect()}
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow

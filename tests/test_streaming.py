@@ -12,6 +12,10 @@ from pyspark.sql import functions as F
 from responsive_pub_spark.streaming import state
 from responsive_pub_spark.streaming.runtime import TopologyTestDriver
 
+# slow tier: measured >60 s per module (OPTIMIZATION_r15.md); deselected
+# by default, run with -m "slow or not slow"
+pytestmark = pytest.mark.slow
+
 
 @pytest.fixture
 def workdir(tmp_path):
@@ -606,7 +610,8 @@ def test_process_streaming_partitioned_task_model(spark, tmp_path):
     """Streaming task model: the partition-shared store persists across
     micro-batch restarts — a key arriving in batch 2 sees keys registered
     by OTHER keys in batch 1 (per-key state cannot), and the result equals
-    the batch replay through process_partitioned."""
+    the batch replay through process_partitioned. Both twins hand the
+    processor the same record keys: the partition tag is not one."""
     from responsive_pub_spark.streaming import state
     from responsive_pub_spark.streaming.runtime import TopologyTestDriver
 
@@ -620,42 +625,51 @@ def test_process_streaming_partitioned_task_model(spark, tmp_path):
             ctx.store.put(("u", int(rec["k"])), 1)
             ctx.forward(k=int(rec["k"]), others=others)
 
-    def build(sdf):
-        return state.process_streaming_partitioned(
-            sdf,
-            key=["k"],
-            num_partitions=2,
-            processor_factory=SeenBefore,
-            output_schema="k LONG, others BIGINT",
-            ts_col="ts",
-            order_by=("k",),
-            partitioner=F.expr("k % 2"),
-        )
+    class RecKeys(state.Processor):
+        def process(self, ctx, rec):
+            ctx.forward(k=int(rec["k"]), keys=",".join(sorted(rec)))
 
-    drv = TopologyTestDriver(
-        spark, "k LONG, ts DOUBLE", build, str(tmp_path / "taskstream")
-    )
-    drv.pipe([{"k": 0, "ts": 1.0}, {"k": 1, "ts": 1.5}])
-    out = [tuple(r) for r in drv.advance()]
-    drv.pipe([{"k": 2, "ts": 2.0}, {"k": 3, "ts": 2.5}, {"k": 4, "ts": 3.0}])
-    out += [tuple(r) for r in drv.advance()]
-    drv.close()
-    assert set(out) == {(0, 0), (1, 0), (2, 1), (3, 1), (4, 2)}
+    lane = dict(key=["k"], num_partitions=2, ts_col="ts", order_by=("k",),
+                partitioner=F.expr("k % 2"))
 
-    batch = state.process_partitioned(
-        spark.createDataFrame(
-            [(0, 1.0), (1, 1.5), (2, 2.0), (3, 2.5), (4, 3.0)],
+    def streamed(factory, schema, name):
+        drv = TopologyTestDriver(
+            spark,
             "k LONG, ts DOUBLE",
-        ),
-        key=["k"],
-        num_partitions=2,
-        processor_factory=SeenBefore,
-        output_schema="k LONG, others BIGINT",
-        ts_col="ts",
-        order_by=("k",),
-        partitioner=F.expr("k % 2"),
-    )
-    assert set(out) == {tuple(r) for r in batch.collect()}
+            lambda sdf: state.process_streaming_partitioned(
+                sdf, processor_factory=factory, output_schema=schema, **lane
+            ),
+            str(tmp_path / name),
+        )
+        drv.pipe([{"k": 0, "ts": 1.0}, {"k": 1, "ts": 1.5}])
+        out = [tuple(r) for r in drv.advance()]
+        drv.pipe([{"k": 2, "ts": 2.0}, {"k": 3, "ts": 2.5}, {"k": 4, "ts": 3.0}])
+        out += [tuple(r) for r in drv.advance()]
+        drv.close()
+        return set(out)
+
+    def batched(factory, schema):
+        return {
+            tuple(r)
+            for r in state.process_partitioned(
+                spark.createDataFrame(
+                    [(0, 1.0), (1, 1.5), (2, 2.0), (3, 2.5), (4, 3.0)],
+                    "k LONG, ts DOUBLE",
+                ),
+                processor_factory=factory,
+                output_schema=schema,
+                **lane,
+            ).collect()
+        }
+
+    seen = "k LONG, others BIGINT"
+    out = streamed(SeenBefore, seen, "taskstream")
+    assert out == {(0, 0), (1, 0), (2, 1), (3, 1), (4, 2)}
+    assert out == batched(SeenBefore, seen)
+
+    keys = "k LONG, keys STRING"
+    assert streamed(RecKeys, keys, "reckeys") == {(k, "k,ts") for k in range(5)}
+    assert batched(RecKeys, keys) == {(k, "k,ts") for k in range(5)}
 
 
 def test_kstream_deduplicate(spark, tmp_path):
@@ -1592,11 +1606,3 @@ def test_span_stripped_sink_is_incremental_lastwins_and_batch_equal(
     # cold restart: identical maintained read
     lane2 = SpanDedupStreaming(spark, wd)
     assert {tuple(r) for r in lane2.stripped().collect()} == want2
-
-
-# measured >60s per-module (r15 tier audit, OPTIMIZATION_r15.md): slow
-# tier, deselected under the driver default run; round-close runs the
-# full tier with -m "slow or not slow"
-import pytest as _pytest_tier  # noqa: E402
-
-pytestmark = _pytest_tier.mark.slow
