@@ -2985,98 +2985,54 @@ def q_bm25_stream_stats(spark, sf_dir):
 # runs the identical comparison over ALL entries, so they stay guarded.
 REGISTRY: dict[str, QuerySpec] = {
     "flagship_stjoin_window": QuerySpec(q_flagship, ORACLE_FLAGSHIP, bench=True),
-    # --- new in r5 (r4 VERDICT tasks 5-6): the last §2-surface ops with
-    # --- pytest-only evidence get driver gates — emit strategies
-    # --- (suppress), the KS 3.5 temporal join on the DSL, dedup-as-
-    # --- stream-op, and the streaming KTable re-agg RETRACTION lane ---
     "suppress_emit_final": QuerySpec(
         q_suppress_emit_final,
         ORACLE_SUPPRESS_EMIT_FINAL,
         doc="suppress(untilWindowCloses): final-only emission — windows "
-        "still inside grace when the stream ends never emit; NEW gate r5",
+        "still inside grace when the stream ends never emit",
     ),
     "join_versioned_stream": QuerySpec(
         q_join_versioned_stream,
         ORACLE_JOIN_VERSIONED_STREAM,
-        doc="KS 3.5 temporal stream-table join on the DSL (version active "
-        "at the record's own ts, same-instant version wins, pre-first-"
-        "version NULLs); oracle = DuckDB ASOF JOIN; NEW gate r5",
+        doc="KS 3.5 temporal stream-table join on the DSL (version active at "
+        "the record's own ts, same-instant version wins, pre-first-version "
+        "NULLs); oracle = DuckDB ASOF JOIN",
     ),
     "dedup_stream_first": QuerySpec(
         q_dedup_stream_first,
         ORACLE_DEDUP_STREAM_FIRST,
         doc="KStream.deduplicate — FACT-store first-arrival-wins as a DSL "
-        "stream op; NEW gate r5",
+        "stream op",
     ),
     "table_regroup_streaming": QuerySpec(
         q_table_regroup_streaming,
         ORACLE_TABLE_REGROUP_STREAMING,
-        doc="STREAMING KGroupedTable re-agg with retraction (get-before-"
-        "put subtract/add over a two-stage checkpointed topology, cold "
-        "restart mid-replay); NEW gate r5",
+        doc="STREAMING KGroupedTable re-agg with retraction (get-before-put "
+        "subtract/add over a two-stage checkpointed topology, cold restart "
+        "mid-replay)",
     ),
-    # (sim_search_ivf_trained, sketch_hll_setops, split_leakage_safe,
-    # zorder_layout, bloom_semi_join — green r4 — rotate past 50; ANN,
-    # sketch and split/layout families keep in-window coverage via
-    # sketch_hll/sketch_hll_windowed/heavy_hitters and the dedup rows)
-    # --- new in r4-final (first gating required; fk_join_changelog and
-    # --- papi_running_count rotate past 50 — fk_join_streaming and
-    # --- papi_tws_running_count gate the IDENTICAL oracles in-window)
-    # (sketch_hll and trending_decay rotate past 50 in r7 — parked in the
-    # r7 rotation-OUT block below; papi_session_concat, green r3, rotated
-    # past 50 earlier — PAPI-store family keeps 4 in-window rows)
     "async_enrich": QuerySpec(q_async_enrich, ORACLE_ASYNC_ENRICH),
-    # (multimodal_decode_features — green r1-r10, bench row stays in the
-    # frozen set — rotates past 50; the decode family gates in-window via
-    # the REAL wav + ppm codec rows below)
     "multimodal_ppm_decode": QuerySpec(
         lambda spark, sf_dir: multimodal.ppm_decode_features(
             _t(spark, sf_dir, "documents")
         ),
         multimodal.ppm_decode_features_oracle(),
-        doc="REAL image decode with zero dependencies: genuine binary P6 "
-        "PPM containers parsed (ASCII dims + RGB24 raster walk) to "
-        "integer channel sums; same planted-fixture referee scheme as "
-        "multimodal_wav_decode; first gate r11",
+        doc="REAL image decode with zero dependencies: genuine binary P6 PPM "
+        "containers parsed (ASCII dims + RGB24 raster walk) to integer "
+        "channel sums; same planted-fixture referee scheme as "
+        "multimodal_wav_decode",
     ),
     "multimodal_wav_decode": QuerySpec(
         lambda spark, sf_dir: multimodal.wav_decode_features(
             _t(spark, sf_dir, "documents")
         ),
         multimodal.wav_decode_features_oracle(),
-        doc="REAL audio decode with zero dependencies (r9 VERDICT task "
-        "10): plant genuine RIFF/WAVE PCM16 containers per doc, parse the "
-        "actual header+samples in the Arrow-batched stage, aggregate "
-        "integer-exact energy/peak; the oracle recomputes from the "
-        "fixtures' generative formula so a parser bug (offset, "
-        "endianness, width) hash-mismatches; NEW gate r10",
+        doc="REAL audio decode with zero dependencies: plant genuine "
+        "RIFF/WAVE PCM16 containers per doc, parse the actual header+samples "
+        "in the Arrow-batched stage, aggregate integer-exact energy/peak; "
+        "the oracle recomputes from the fixtures' generative formula so a "
+        "parser bug (offset, endianness, width) hash-mismatches",
     ),
-    # (multimodal_audio_chunks / multimodal_frame_sample, green r3, rotate
-    # past 50 — the multimodal family stays in-window via decode_features)
-    # --- r2-green substantial operators ---
-    # --- never driver-gated until r4 (r3 VERDICT task 2): the four KS DSL
-    # --- surface rows that sat at positions 53-56 move INSIDE the window;
-    # --- multi-round-green veterans (window_hopping/grace, join_stream_table,
-    # --- dedup_exact/fact, sim_search_lsh, bootstrap_compact) rotate out ---
-    # --- new in r5: SQ8 quantization (join_range, corpus_stats — green
-    # --- r4/r5 — rotate past 50 in r6 per the documented plan;
-    # --- agg_pricing_summary, window_tumbling, join_global rotated in
-    # --- r5; bench membership is unaffected by rotation)
-    # (corpus_stats, text_entropy, bpe_merges — green through r5 —
-    # rotate past 50 in r6; the text family keeps unigram_ppl, novelty
-    # and the r6-new bm25 row in-window; bpe_vocab keeps the BPE family
-    # gated in-window)
-    # --- new in r4-final: iterative + OLAP + collocation surfaces
-    # --- (dedup_simhash/dedup_ngram_jaccard/sim_search_pq, multi-round
-    # --- green, rotate past 50; their bench flags travel with them)
-    # (text_collocations, olap_cube_pricing — green r4+r5 — rotate past
-    # 50 in r6 per the documented plan)
-    # (sketch_quantile_hist rotates past 50 in r7 — parked in the r7
-    # rotation-OUT block; sketch family keeps cms, cms_windowed,
-    # hll_windowed, heavy_hitters in-window)
-    # (sketch_lc_distinct — green r4+r5 — rotates past 50 in r6; the
-    # sketch family keeps quantile_hist, cms, cms_windowed, hll,
-    # hll_windowed and heavy_hitters in-window)
     "decontam_fuzzy": QuerySpec(
         lambda spark, sf_dir: pipeline_ops.decontaminate_fuzzy(
             _t(spark, sf_dir, "documents")
@@ -3088,13 +3044,10 @@ REGISTRY: dict[str, QuerySpec] = {
     "bpe_fertility": QuerySpec(
         lambda spark, sf_dir: bpe.bpe_fertility(_t(spark, sf_dir, "documents")),
         bpe.bpe_fertility_oracle(),
-        doc="per-language tokenizer-efficiency report under the learned "
-        "BPE: fertility (tokens/word) and compression vs the zero-merge "
-        "character bound, integer bp; the vocabulary-commit eval a "
-        "multilingual pretraining run tracks; NEW r11, rotated into the "
-        "window same round (text_unigram_ppl, green r5-r10, parks past "
-        "50 — text family keeps text_repetition + text_bm25_topk "
-        "in-window)",
+        doc="per-language tokenizer-efficiency report under the learned BPE: "
+        "fertility (tokens/word) and compression vs the zero-merge character "
+        "bound, integer bp; the vocabulary-commit eval a multilingual "
+        "pretraining run tracks",
     ),
     "sample_weighted_topk": QuerySpec(
         lambda spark, sf_dir: pipeline_ops.weighted_sample_topk(
@@ -3104,105 +3057,63 @@ REGISTRY: dict[str, QuerySpec] = {
         doc="Efraimidis-Spirakis weighted sampling WITHOUT replacement, "
         "k per stratum; WindowGroupLimit-prunable rank",
     ),
-    # (quality_classifier, green r2+r3, rotates past 50)
-    # (text_novelty rotates past 50 in r7 — parked below; text family
-    # keeps text_unigram_ppl and text_bm25_topk in-window)
-    # (r3 cohort — dedup_simhash_clusters, dedup_embedding_strict,
-    # kv_sink_roundtrip, iq_store_dump, source_cap, resample_by_score —
-    # green r3+r4, rotate past 50 per the documented plan)
-    # --- the r5 tail inventory moves INSIDE the window (documented r4
-    # --- rotation): the analytics/sketch/dedup/bpe rows that first-gate
-    # --- this round ---
-    # (trend_ols, cohort_retention, markov_transitions — green r5-r7 —
-    # rotate past 50 in r8; the analytics family keeps dq_audit_events,
-    # ab_test_zscore, group_variance, skew_report, outlier_report
-    # in-window)
     "pack_stream": QuerySpec(
         q_pack_stream,
         _oracle_pack_stream(),
         doc="INCREMENTAL sequence packing: two ingest waves through the "
-        "delta+marker commit log with a carried PER-LANG total table "
-        "(the keyed generalization of shard_stream's scalar); each batch "
-        "continues every language's open sequence through the batch "
-        "packer's bucketed prefix sum; oracle = pack_sequences' "
-        "single-window twin under wave-major order per language; NEW "
-        "r11 (dq_audit_events, green r5-r10, rotates past 50 — "
-        "timeseries family keeps outlier_report in-window)",
+        "delta+marker commit log with a carried PER-LANG total table (the "
+        "keyed generalization of shard_stream's scalar); each batch "
+        "continues every language's open sequence through the batch packer's "
+        "bucketed prefix sum; oracle = pack_sequences' single-window twin "
+        "under wave-major order per language",
     ),
-    # (rotated out r13, all green r12: pack_stream_ids,
-    # bm25_stream_hybrid, decontam_stream, mixture_stream,
-    # envelope_audit_stream, json_envelope_audit, knn_label_purity_ivf —
-    # every family keeps in-window coverage: pack ids via
-    # bpe_token_ids/pack_token_ids, BM25 via bm25_stream_stats/
-    # text_bm25_topk, decontam via decontam_fuzzy, mixture via
-    # mixture_resample_tokens/mixture_temperature, envelope via
-    # json_props_rollup, knn via knn_label_purity)
-    # (rotated out r14, green r13: dup_span_stream, strip_spans_stream —
-    # the span family keeps dup_span_report + dedup_strip_spans
-    # in-window; the two streamed rows park in the past-50 block)
     "decontam_decision_stream": QuerySpec(
         q_decontam_decision_stream,
         pipeline_ops.decontaminate_oracle(),
-        doc="incrementally-MAINTAINED contamination decision table (the "
-        "r13 verdict's O(new-work) ask): versioned base rebuilt only "
-        "when a benchmark registers, wave-sized handoff deltas "
-        "otherwise; the gate drives BOTH paths and proves base+deltas "
-        "equals the full derived report (batch oracle verbatim); NEW "
-        "gate r14",
+        doc="incrementally-MAINTAINED contamination decision table "
+        "(O(new work) per wave): versioned base rebuilt only when a "
+        "benchmark registers, wave-sized handoff deltas otherwise; the gate "
+        "drives BOTH paths and proves base+deltas equals the full derived "
+        "report (batch oracle verbatim)",
     ),
     "decontam_stream": QuerySpec(
         q_decontam_stream,
         pipeline_ops.decontaminate_oracle(),
-        doc="STREAMING decontamination fingerprints: corpus and "
-        "benchmark docs shingled ONCE at ingest into maintained "
-        "postings (zero aggregation state — the tables are the state); "
-        "report() is the batch aggregation over them, automatically "
-        "RETROACTIVE when a new benchmark wave lands; oracle = the "
-        "batch decontaminate oracle verbatim; NEW gate r12, slid back "
-        "in-window r14 (the decontam lane gained the decision "
-        "maintenance this round — its report row re-gates beside it)",
+        doc="STREAMING decontamination fingerprints: corpus and benchmark "
+        "docs shingled ONCE at ingest into maintained postings (zero "
+        "aggregation state — the tables are the state); report() is the "
+        "batch aggregation over them, automatically RETROACTIVE when a new "
+        "benchmark wave lands; oracle = the batch decontaminate oracle "
+        "verbatim"
     ),
     "bm25_stream_stats": QuerySpec(
         q_bm25_stream_stats,
         textops.bm25_topk_oracle(),
         doc="incrementally-maintained BM25 statistics: postings tokenized "
-        "once at ingest (stateless), df via a stateful streaming agg into "
-        "a KV table, corpus scalars via a 1-row complete-mode agg; topk "
-        "scores from the maintained tables with the identical integer "
-        "expression as text_bm25_topk (batch oracle verbatim); NEW r11, "
-        "rotated into the window same round (ab_test_zscore, green "
-        "r5-r10, parks past 50 — timeseries family keeps dq_audit_events "
-        "+ outlier_report in-window)",
+        "once at ingest (stateless), df via a stateful streaming agg into a "
+        "KV table, corpus scalars via a 1-row complete-mode agg; topk scores "
+        "from the maintained tables with the identical integer expression as "
+        "text_bm25_topk (batch oracle verbatim)",
     ),
     "sketch_hll_windowed": QuerySpec(
         lambda spark, sf_dir: sketches.hll_distinct_windowed(
             _t(spark, sf_dir, "events")
         ),
         sketches.hll_distinct_windowed_oracle(),
-        doc="HLL composed with event-time windows (distinct per week "
-        "per group) — the register key gains a window column, all "
-        "sketch properties inherited; first-gates r5",
+        doc="HLL composed with event-time windows (distinct per week per "
+        "group) — the register key gains a window column, all sketch "
+        "properties inherited",
     ),
     "json_props_rollup": QuerySpec(
         lambda spark, sf_dir: timeseries.json_props_rollup(
             _t(spark, sf_dir, "events")
         ),
         timeseries.json_props_rollup_oracle(),
-        doc="semi-structured surface: the props JSON envelope parsed "
-        "with get_json_object (JVM codegen, no Python) into a per-"
-        "event_type integer rollup — one keyed agg with map-side "
-        "partials; malformed payloads degrade to counted NULLs, never "
-        "errors; NEW r11 (dedup_keep_best, green r5-r10, rotates past "
-        "50 — the dedup family keeps containment/span/stream rows "
-        "in-window)",
+        doc="semi-structured surface: the props JSON envelope parsed with "
+        "get_json_object (JVM codegen, no Python) into a per-event_type "
+        "integer rollup — one keyed agg with map-side partials; malformed "
+        "payloads degrade to counted NULLs, never errors",
     ),
-    # --- NEW in r8 (r7 VERDICT task 2): greedy first-arrival near-dup
-    # --- verdicts — the batch twin of the STREAMING near-dup lane
-    # --- (streaming/dedup_stream.NearDupStreaming; replay parity +
-    # --- checkpointed-restart + TTL tests in tests/test_dedup_stream.py).
-    # --- OUT past 50: cohort_retention (green r5-r7; analytics family
-    # --- keeps dq_audit_events / ab_test_zscore / group_variance /
-    # --- trend_ols in-window) ---
     "dedup_stream_greedy": QuerySpec(
         lambda spark, sf_dir: dedup.greedy_keep(
             _t(spark, sf_dir, "documents")
@@ -3211,38 +3122,24 @@ REGISTRY: dict[str, QuerySpec] = {
         doc="greedy first-arrival near-dup keep/drop verdicts (drop on "
         "DIRECT verified edge to any earlier doc) — the semantics a "
         "single-pass streaming deduper guarantees; batch twin of the "
-        "FACT-store streaming lane (ResponsiveStores.java:79-96); "
-        "NEW gate r8",
+        "FACT-store streaming lane (ResponsiveStores.java:79-96)",
     ),
-    # --- NEW in r8 (r7 VERDICT task 4): the incremental-ANN retrain
-    # --- trigger — per-centroid residual drift over the inverted lists
-    # --- (streaming twin: streaming/ann_stream.IvfIncremental.drift()
-    # --- over its stored ingest-time assignments; parity + recall tests
-    # --- in tests/test_ann_incremental.py). OUT past 50: trend_ols
-    # --- (green r5-r7; analytics family keeps dq_audit_events /
-    # --- ab_test_zscore / group_variance in-window) ---
     "ann_ivf_drift": QuerySpec(
         lambda spark, sf_dir: similarity.ivf_drift_report(
             _t(spark, sf_dir, "embeddings")
         ),
         similarity.ivf_drift_report_oracle(),
-        doc="per-centroid assignment-residual drift (base vs recent "
-        "cohort, portable integer basis points, per-mille ratio + "
-        "retrain flag) — the retrain trigger of the incremental IVF "
-        "index; NEW gate r8",
+        doc="per-centroid assignment-residual drift (base vs recent cohort, "
+        "portable integer basis points, per-mille ratio + retrain flag) — "
+        "the retrain trigger of the incremental IVF index",
     ),
-    # (bpe_vocab — green r5-r7 — rotates past 50 in r8; the BPE family
-    # is gated in-window by the two NEW encode-pass rows below, and
-    # bpe_merges/bpe_vocab stay oracle-checked in the full pytest sweep)
-    # --- NEW in r8 (r7 VERDICT task 1): the BPE ENCODE/APPLY pass — the
-    # --- engine can now TOKENIZE with the tokenizer it learns ---
     "bpe_encode": QuerySpec(
         lambda spark, sf_dir: bpe.bpe_encode(_t(spark, sf_dir, "documents")),
         bpe.bpe_encode_oracle(),
         doc="BPE encode/apply: per-doc REAL-BPE token counts via the "
         "broadcast vocab-sized segmentation map (one corpus scan, no "
-        "corpus-sized shuffle); oracle = carried-word unrolled-merge "
-        "DuckDB segmentation; NEW gate r8",
+        "corpus-sized shuffle); oracle = carried-word unrolled-merge DuckDB "
+        "segmentation",
     ),
     "pack_bpe_budget": QuerySpec(
         lambda spark, sf_dir: bpe.pack_sequences_bpe(
@@ -3250,20 +3147,17 @@ REGISTRY: dict[str, QuerySpec] = {
         ),
         bpe.pack_sequences_bpe_oracle(),
         doc="sequence packing budgeted on LEARNED-BPE token counts — the "
-        "encode pass composed with pack_sequences' concat-then-split "
-        "integer packing; NEW gate r8",
+        "encode pass composed with pack_sequences' concat-then-split integer "
+        "packing",
     ),
     "bpe_token_ids": QuerySpec(
         lambda spark, sf_dir: bpe.bpe_token_ids(
             _t(spark, sf_dir, "documents")
         ),
         bpe.bpe_token_ids_oracle(),
-        doc="the tokenizer's FULL output: every corpus token as a vocab "
-        "id at explicit (word_idx, sub_idx) positions — broadcast "
-        "segmentation + broadcast lexicographic vocab ids over ONE "
-        "corpus explode; NEW gate r8 (OUT past 50: group_variance, "
-        "green r5-r7; analytics family keeps dq_audit_events and "
-        "ab_test_zscore in-window)",
+        doc="the tokenizer's FULL output: every corpus token as a vocab id "
+        "at explicit (word_idx, sub_idx) positions — broadcast segmentation "
+        "+ broadcast lexicographic vocab ids over ONE corpus explode",
     ),
     "pack_token_ids": QuerySpec(
         lambda spark, sf_dir: bpe.pack_token_ids(
@@ -3273,17 +3167,11 @@ REGISTRY: dict[str, QuerySpec] = {
         doc="packed training sequences WITH their token ids: one row per "
         "corpus token at (lang, seq_id, pos), pos ALWAYS in [0, budget) — "
         "budget-spanning docs roll over into the next sequence (global "
-        "position DIV/mod budget), so every sequence is a dense fixed-"
-        "length slice; single tokenization (the ranked id stream is "
-        "pooled and feeds both the per-doc counts and the output join), "
-        "no per-sequence window; NEW gate r8 (OUT past "
-        "50: heavy_hitters, green r4-r7; sketches family keeps "
-        "sketch_cms / sketch_hll_windowed / sketch_cms_windowed "
-        "in-window)",
+        "position DIV/mod budget), so every sequence is a dense fixed-length "
+        "slice; single tokenization (the ranked id stream is pooled and "
+        "feeds both the per-doc counts and the output join), no per-sequence "
+        "window",
     ),
-    # --- new in r4 (driver rows required, r3 VERDICT tasks 5-6): the
-    # --- streaming FK-join lane, Repartitioned co-location, and
-    # --- approximateNumEntries — the last §2 rows with no driver evidence
     "fk_join_streaming": QuerySpec(q_fk_join_streaming, ORACLE_FK_JOIN_CHANGELOG),
     "papi_tws_running_count": QuerySpec(
         q_papi_tws_running_count, ORACLE_PAPI_RUNNING_COUNT
@@ -3291,18 +3179,12 @@ REGISTRY: dict[str, QuerySpec] = {
     "repartition_colocate": QuerySpec(
         q_repartition_colocate, ORACLE_REPARTITION_COLOCATE
     ),
-    # --- new in r4: sliding-window chunking, target-mixture resampling,
-    # --- SemDeDup semantic dedup (join_table_table, dedup_embedding,
-    # --- pii_redact — all multi-round green — park past 50)
     "chunk_text_sliding": QuerySpec(
         lambda spark, sf_dir: pipeline_ops.chunk_text(
             _t(spark, sf_dir, "documents")
         ),
         pipeline_ops.chunk_text_oracle(),
     ),
-    # (mixture_resample / dedup_semantic — green r2-r10 — rotate past 50;
-    # the mixture family upgrades to the token-mass variant below, the
-    # dedup family keeps keep_best/stream_greedy/containment/strip in-window)
     "mixture_resample_tokens": QuerySpec(
         lambda spark, sf_dir: pipeline_ops.mixture_resample_tokens(
             _t(spark, sf_dir, "documents")
@@ -3312,22 +3194,18 @@ REGISTRY: dict[str, QuerySpec] = {
         "actually specify) — same integer downsample-only formula as "
         "mixture_resample over per-lang token sums; counts= takes a "
         "precomputed (doc_id, n_tokens) frame so mixture, packing, and "
-        "sharding all budget in one learned-BPE token definition; first "
-        "gate r11",
+        "sharding all budget in one learned-BPE token definition",
     ),
     "mixture_temperature": QuerySpec(
         lambda spark, sf_dir: pipeline_ops.mixture_temperature(
             _t(spark, sf_dir, "documents")
         ),
         pipeline_ops.mixture_temperature_oracle(),
-        doc="temperature-based mixture sampling (mT5/XLM-R): kept token "
-        "mass proportional to mass^alpha, alpha=0.5 pinned through an "
-        "EXACT integer floor-sqrt (one-step-corrected IEEE sqrt — "
-        "engine-portable where pow()'s floor boundaries are not); "
-        "downsample-only, smallest language keeps everything, corpus "
-        "never shuffles; NEW r11 (sketch_cms_windowed, green r6-r10, "
-        "rotates past 50 — sketch family keeps sketch_hll_windowed "
-        "in-window)",
+        doc="temperature-based mixture sampling (mT5/XLM-R): kept token mass "
+        "proportional to mass^alpha, alpha=0.5 pinned through an EXACT "
+        "integer floor-sqrt (one-step-corrected IEEE sqrt — engine-portable "
+        "where pow()'s floor boundaries are not); downsample-only, smallest "
+        "language keeps everything, corpus never shuffles",
     ),
     "hybrid_rerank": QuerySpec(
         lambda spark, sf_dir: similarity.hybrid_rerank(
@@ -3335,44 +3213,33 @@ REGISTRY: dict[str, QuerySpec] = {
         ),
         similarity.hybrid_rerank_oracle(),
         doc="two-stage retrieval (the production stack): BM25 lexical "
-        "candidates -> embedding-cosine re-rank anchored on the rank-1 "
-        "doc's vector (pseudo-relevance feedback); stage 2 touches only "
-        "n_queries*n_cand candidate rows — corpus sides never shuffle "
-        "for the re-rank; first gate r11",
+        "candidates -> embedding-cosine re-rank anchored on the rank-1 doc's "
+        "vector (pseudo-relevance feedback); stage 2 touches only "
+        "n_queries*n_cand candidate rows — corpus sides never shuffle for "
+        "the re-rank",
     ),
-    # --- r7 rotation IN (r6 VERDICT tasks 1 + 2): the two NEW-surface
-    # --- rows — Kafka record headers end-to-end and the window-store
-    # --- key-range fetch.  OUT (parked below position 50): sketch_hll
-    # --- and trending_decay, multi-round green (r4-r6), their families
-    # --- keeping >= 2 in-window rows each (sketches: quantile_hist, cms,
-    # --- hll_windowed, cms_windowed; analytics: trend_ols, cohort,
-    # --- dq_audit, markov, ab_test, group_variance, skew/outlier). ---
     "kafka_headers_route": QuerySpec(
         q_kafka_headers_route,
         ORACLE_KAFKA_HEADERS_ROUTE,
-        doc="Kafka record headers end-to-end: typed -> wire headers "
-        "column -> file-broker sink round trip -> header-routed branch "
-        "counts via the JVM lastHeader accessors; NEW surface, "
-        "first-gates in r7",
+        doc="Kafka record headers end-to-end: typed -> wire headers column "
+        "-> file-broker sink round trip -> header-routed branch counts via "
+        "the JVM lastHeader accessors",
     ),
     "papi_window_key_range": QuerySpec(
         q_papi_window_key_range,
         ORACLE_PAPI_WINDOW_KEY_RANGE,
         doc="window-store fetch(keyFrom, keyTo, tFrom, tTo) "
-        "(RemoteWindowOperations.java:333): gated output IS the key-range "
-        "+ time-range scan over the WindowedKey layout; NEW surface, "
-        "first-gates in r7",
+        "(RemoteWindowOperations.java:333): gated output IS the key-range + "
+        "time-range scan over the WindowedKey layout",
     ),
     "text_repetition": QuerySpec(
         lambda spark, sf_dir: textops.repetition_report(
             _t(spark, sf_dir, "documents")
         ),
         textops.repetition_report_oracle(),
-        doc="Gopher-style within-doc repetition filter: duplicated 2/3-"
-        "gram shares in integer basis points + keep flag; zero-shuffle "
-        "JVM scan — the cheapest curation pre-filter; NEW inventory, "
-        "first-gates in r7 (OUT: sketch_quantile_hist, text_novelty — "
-        "multi-round green, families keep >= 2 in-window rows)",
+        doc="Gopher-style within-doc repetition filter: duplicated 2/3-gram "
+        "shares in integer basis points + keep flag; zero-shuffle JVM scan — "
+        "the cheapest curation pre-filter",
     ),
     "boilerplate_chunks": QuerySpec(
         lambda spark, sf_dir: pipeline_ops.boilerplate_chunks(
@@ -3380,38 +3247,27 @@ REGISTRY: dict[str, QuerySpec] = {
         ),
         pipeline_ops.boilerplate_chunks_oracle(),
         doc="cross-doc boilerplate detection (C4/CCNet repeated-passage "
-        "analog): non-overlapping 16-token chunk hashes, document "
-        "frequency >= 3 flags boilerplate, per-doc share in bp; one "
-        "keyed shuffle + left-semi join back; NEW inventory, first-gates "
-        "in r7",
+        "analog): non-overlapping 16-token chunk hashes, document frequency "
+        ">= 3 flags boilerplate, per-doc share in bp; one keyed shuffle + "
+        "left-semi join back",
     ),
-    # --- r6 rotation IN (r5 VERDICT task 1): the seven first-gating
-    # --- tail rows — NEW r5 inventory, judge-oracle-verified at sf0.01
-    # --- in the r5 session, pytest-oracle green at sf0.001 AND sf0.01,
-    # --- most also at sf0.1.  Once these gate green, all 132 registry
-    # --- queries carry a driver-green CORRECTNESS row at least once. ---
     "text_bm25_topk": QuerySpec(
         lambda spark, sf_dir: textops.bm25_topk(
             _t(spark, sf_dir, "documents")
         ),
         textops.bm25_topk_oracle(),
         bench=True,
-        doc="BM25 top-10 docs per query term (k1=1.2, b=0.75); ranking "
-        "by the all-integer tf-saturation statistic (idf constant within "
-        "a term) so the cutoff is bit-deterministic; NEW inventory, "
-        "first-gates in r6; joins the bench headline set in r6 (r5 "
-        "VERDICT task 5 — retrieval scoring is the most user-visible "
-        "r5 family; the legacy-15 + tpch_q3 set is unchanged for "
-        "round-over-round comparability)",
+        doc="BM25 top-10 docs per query term (k1=1.2, b=0.75); ranking by "
+        "the all-integer tf-saturation statistic (idf constant within a "
+        "term) so the cutoff is bit-deterministic",
     ),
     "skew_report": QuerySpec(
         lambda spark, sf_dir: timeseries.skew_report(
             _t(spark, sf_dir, "events")
         ),
         timeseries.skew_report_oracle(),
-        doc="hot-key audit before a big shuffle: top-10 heaviest key "
-        "values with integer-bp share — the plan/salt/broadcast decision "
-        "input; NEW inventory, first-gates in r6",
+        doc="hot-key audit before a big shuffle: top-10 heaviest key values "
+        "with integer-bp share — the plan/salt/broadcast decision input",
     ),
     "shard_balanced": QuerySpec(
         lambda spark, sf_dir: pipeline_ops.shard_balanced(
@@ -3419,47 +3275,35 @@ REGISTRY: dict[str, QuerySpec] = {
         ),
         pipeline_ops.shard_balanced_oracle(),
         doc="deterministic balanced shard export (seeded epoch-shuffle "
-        "order, greedy token-budget cut) — the tokenize->pack->SHARD "
-        "tail of the training chain; global running sum WITHOUT a "
-        "global sort: range-bucketed permutation hash + two-pass "
-        "prefix sum (the only single-partition window is the <=1025-row "
-        "bucket aggregate, a scale constant); NEW gate r8 (OUT past 50: "
-        "outlier_report, green r6-r7; analytics family keeps "
-        "dq_audit_events / ab_test_zscore / skew_report in-window)",
+        "order, greedy token-budget cut) — the tokenize->pack->SHARD tail of "
+        "the training chain; global running sum WITHOUT a global sort: "
+        "range-bucketed permutation hash + two-pass prefix sum (the only "
+        "single-partition window is the <=1025-row bucket aggregate, a scale "
+        "constant)",
     ),
     "shard_bpe_budget": QuerySpec(
         lambda spark, sf_dir: bpe.shard_bpe(_t(spark, sf_dir, "documents")),
         bpe.shard_bpe_oracle(),
         doc="balanced shard export budgeted on LEARNED-BPE token counts "
         "(doc_bpe_counts -> shard_balanced_counts) — the token-definition "
-        "unification of the tokenize->pack->shard chain (r9 VERDICT task "
-        "3): the same counts pack_token_ids packs on now cut the export "
-        "shards; NEW gate r10",
+        "unification of the tokenize->pack->shard chain: the same counts "
+        "pack_token_ids packs on now cut the export shards",
     ),
-    # (r15 window repair, VERDICT r14 item 1: the r14 rotation that
-    # parked dup_span_stream / strip_spans_stream / versioned_kv_asof
-    # was inherited partial-BUILD work; the three driver-verified rows
-    # return here. dup_span_report / dedup_strip_spans park past 50 —
-    # their oracles stay driver-verified VERBATIM via the streamed
-    # twins below, which share the identical oracle SQL and the batch
-    # aggregation tail. No further rotation during optimization rounds.)
     "dup_span_stream": QuerySpec(
         q_dup_span_stream,
         pipeline_ops.dup_span_report_oracle(),
         doc="STREAMED duplicated-span report: gram postings maintained "
         "incrementally (gram-once per doc, the decontam_stream posture "
         "applied to w-grams), report served from the shared batch "
-        "aggregation tail; oracle = the batch oracle verbatim; NEW "
-        "gate r13, restored to the window r15 (r14 VERDICT item 1)",
+        "aggregation tail; oracle = the batch oracle verbatim",
     ),
     "strip_spans_stream": QuerySpec(
         q_strip_spans_stream,
         pipeline_ops.strip_dup_spans_oracle(),
-        doc="STREAMED span strip: the canonical-first strip decision "
-        "served at read from the maintained gram postings (only the "
-        "text-rebuild token stream re-reads the docs topic); oracle = "
-        "the batch oracle verbatim; NEW gate r13, restored to the "
-        "window r15 (r14 VERDICT item 1)",
+        doc="STREAMED span strip: the canonical-first strip decision served "
+        "at read from the maintained gram postings (only the text-rebuild "
+        "token stream re-reads the docs topic); oracle = the batch oracle "
+        "verbatim",
     ),
     "pack_sequences": QuerySpec(
         lambda spark, sf_dir: pipeline_ops.pack_sequences(_t(spark, sf_dir, "documents")),
@@ -3472,11 +3316,10 @@ REGISTRY: dict[str, QuerySpec] = {
         ),
         bpe.apply_tokenizer_counts_oracle(),
         doc="per-doc counts under a FROZEN tokenizer: the k-row merge "
-        "artifact (control-plane-sized) replayed over the target "
-        "corpus's own unique-word table — real OOV segmentation by "
-        "merge replay, zero-word docs kept at 0; save/load + replay "
-        "parity pinned in tests/test_tokenizer_artifact.py; NEW r10 "
-        "(pytest-oracled tail row)",
+        "artifact (control-plane-sized) replayed over the target corpus's "
+        "own unique-word table — real OOV segmentation by merge replay, "
+        "zero-word docs kept at 0; save/load + replay parity pinned in "
+        "tests/test_tokenizer_artifact.py",
     ),
     "knn_label_purity": QuerySpec(
         lambda spark, sf_dir: similarity.knn_label_purity(
@@ -3485,94 +3328,43 @@ REGISTRY: dict[str, QuerySpec] = {
         similarity.knn_label_purity_oracle(),
         doc="kNN LABEL-AGREEMENT probe (embedding-quality audit): for a "
         "deterministic vec_id%10 probe sample, the share of the 10 "
-        "exact-cosine nearest neighbors carrying the query's own label, "
-        "in integer basis points; probes broadcast, corpus scanned once "
-        "and never shuffled (brute_force_topk posture); NEW r11 "
-        "(embed_pca_power, green r6-r10, rotates past 50 — the embedding "
-        "family keeps ann_ivf_drift in-window)",
+        "exact-cosine nearest neighbors carrying the query's own label, in "
+        "integer basis points; probes broadcast, corpus scanned once and "
+        "never shuffled (brute_force_topk posture)",
     ),
     "shard_stream": QuerySpec(
         q_shard_stream,
         _oracle_shard_stream(),
-        doc="INCREMENTAL balanced shard export: two ingest waves through "
-        "a checkpointed commit log (delta + marker per micro-batch, "
-        "carried corpus-total scalar, the CommitBuffer offset-fencing "
-        "posture); each batch continues the open shard through the batch "
-        "exporter's audited two-pass prefix sum; oracle = shard_balanced "
-        "single-window twin under wave-major order; NEW r11 "
-        "(stateless_peek, green r6-r10, rotates past 50 — identity-"
-        "through-peek stays pinned by the suite)",
+        doc="INCREMENTAL balanced shard export: two ingest waves through a "
+        "checkpointed commit log (delta + marker per micro-batch, carried "
+        "corpus-total scalar, the CommitBuffer offset-fencing posture); each "
+        "batch continues the open shard through the batch exporter's audited "
+        "two-pass prefix sum; oracle = shard_balanced single-window twin "
+        "under wave-major order",
     ),
-    # ------------------------------------------------------------------
-    # position 51+ — outside the driver's 50-row window.  Everything
-    # below has at least one driver-green round; the full-registry pytest
-    # oracle (test_registry_oracle.py) keeps the identical check.
-    # r6 rotations executed: IN = the 7 first-gating tail rows above
-    # (dedup_containment, text_bm25_topk, skew_report, outlier_report,
-    # sketch_cms_windowed, embed_pca_power, stateless_peek); OUT = 7
-    # multi-round-green rows whose families keep >= 2 in-window rows
-    # (text_entropy, bpe_merges, olap_cube_pricing, sketch_lc_distinct,
-    # join_range, corpus_stats, text_collocations — parked directly
-    # below).
-    # r5 rotations executed: IN = the 10 first-gating tail rows
-    # (trend_ols, cohort_retention, dq_audit_events, markov_transitions,
-    # heavy_hitters, ab_test_zscore, group_variance, sketch_hll_windowed,
-    # dedup_keep_best, bpe_vocab) + the 4 new gate rows
-    # (suppress_emit_final, join_versioned_stream, dedup_stream_first,
-    # table_regroup_streaming); OUT = the r3 cohort with r3+r4 green
-    # (sim_search_ivf_trained, iq_store_dump, kv_sink_roundtrip,
-    # source_cap, resample_by_score, dedup_simhash_clusters,
-    # dedup_embedding_strict) + 7 r4-green rows whose families keep
-    # in-window coverage (sketch_hll_setops, split_leakage_safe,
-    # zorder_layout, bloom_semi_join, snapshot_diff, text_oov_rate,
-    # text_tfidf_top).  async_enrich and multimodal_decode_features stay
-    # — sole rows of their families.
-    # ------------------------------------------------------------------
-    # --- r12 rotation OUT (multi-round green; families keep in-window
-    # --- coverage — joins via join_versioned_stream/fk_join_streaming,
-    # --- suppress via suppress_emit_final, PAPI via papi_tws_running_
-    # --- count/papi_window_key_range/approx_num_entries, dedup via the
-    # --- stream/span rows). IN: json_envelope_audit, pack_stream_ids,
-    # --- bm25_stream_hybrid, knn_label_purity_ivf (all first-gating). ---
-    # --- r8 rotation OUT (multi-round green r5-r7; families keep
-    # --- in-window coverage — analytics via dq_audit_events/
-    # --- ab_test_zscore/skew_report, BPE via the NEW
-    # --- bpe_encode/pack_bpe_budget gate rows) ---
     "outlier_report": QuerySpec(
         lambda spark, sf_dir: timeseries.outlier_report(
             _t(spark, sf_dir, "events")
         ),
         timeseries.outlier_report_oracle(),
         doc="per-group p99 exceedance report with thresholds from the "
-        "mergeable histogram-quantile sketch broadcast onto one corpus "
-        "scan — sketch-composed DQ monitoring; first-gated r6, green "
-        "r6-r7, parked for the r8 shard_balanced gate row",
+        "mergeable histogram-quantile sketch broadcast onto one corpus scan "
+        "— sketch-composed DQ monitoring",
     ),
-    # (versioned_kv_asof — green r4-r11 — parked in the r12 third
-    # rotation for the mixture_stream gate row; the versioned-store
-    # family keeps join_versioned_stream in-window)
-    # (versioned_kv_asof — green r4-r13 — rotates past 50 in r14 for the
-    # strip_stream_materialized gate row; the versioned family keeps
-    # join_versioned_stream in-window)
     "strip_stream_materialized": QuerySpec(
         q_strip_stream_materialized,
         pipeline_ops.strip_dup_spans_oracle(),
         doc="MAINTAINED stripped-text table: per-wave handoff deltas "
-        "re-strip only the wave's docs plus their gram-collision "
-        "partners (retroactive canonical flips re-emit the old doc); "
-        "stripped() = last-writer-wins over the deltas; oracle = the "
-        "batch strip_dup_spans oracle verbatim; NEW gate r14",
+        "re-strip only the wave's docs plus their gram-collision partners "
+        "(retroactive canonical flips re-emit the old doc); stripped() = "
+        "last-writer-wins over the deltas; oracle = the batch "
+        "strip_dup_spans oracle verbatim",
     ),
-    # (table_history_scd2 — green r4-r14, ten driver-verified rounds —
-    # parks past 50 in the r15 window repair so versioned_kv_asof
-    # returns (r14 VERDICT item 1); the asof/history family keeps
-    # versioned_kv_asof + join_versioned_stream in-window)
     "versioned_kv_asof": QuerySpec(
         q_versioned_kv_asof,
         ORACLE_VERSIONED_KV_ASOF,
         doc="KS 3.5 VersionedKeyValueStore: timestamped puts/tombstones, "
-        "get(key, asOfTimestamp) probes at now/-1h/-1d per key; green "
-        "r4-r13, restored to the window r15 (r14 VERDICT item 1)",
+        "get(key, asOfTimestamp) probes at now/-1h/-1d per key",
     ),
     "join_stream_stream_outer": QuerySpec(
         q_join_stream_stream_outer, ORACLE_JOIN_STREAM_STREAM_OUTER
@@ -3596,126 +3388,104 @@ REGISTRY: dict[str, QuerySpec] = {
                event_id, event_type, value, props
         FROM b WHERE rn = 1
         """,
-        doc="suppress(untilTimeLimit) analog: rate-limit a changelog to "
-        "one update per key per interval, latest wins, emitted at the "
-        "interval close — KS-API completeness beyond the reference's own "
-        "usage (grid-aligned delta documented in api.py); one keyed "
-        "shuffle batch-side, watermarked window max_by APPEND streaming-"
-        "side; NEW inventory late-r8, queued for the r9 rotation",
+        doc="suppress(untilTimeLimit) analog: rate-limit a changelog to one "
+        "update per key per interval, latest wins, emitted at the interval "
+        "close — KS-API completeness beyond the reference's own usage "
+        "(grid-aligned delta documented in api.py); one keyed shuffle "
+        "batch-side, watermarked window max_by APPEND streaming-side",
     ),
     "papi_partition_stream_time": QuerySpec(
         q_papi_partition_stream_time, ORACLE_PAPI_PARTITION_STREAM_TIME
     ),
-    # (r13 rotation-OUT park: the seven r12 first-gating rows, all
-    # driver-green r12 and still pytest-oracled; the five veterans
-    # above slid back into the window to keep it at 50)
     "pack_stream_ids": QuerySpec(
         q_pack_stream_ids,
         bpe.pack_token_ids_oracle(order_sql="doc_id % 2, doc_id"),
-        doc="STREAMED pack_token_ids: frozen-tokenizer artifact + "
-        "per-batch tokenize of arriving docs only + carried per-lang "
-        "totals through the compacting delta+marker commit log; oracle "
-        "is the batch unrolled-merge twin under wave-major order; NEW "
-        "gate r12 (r11 VERDICT task 6)",
+        doc="STREAMED pack_token_ids: frozen-tokenizer artifact + per-batch "
+        "tokenize of arriving docs only + carried per-lang totals through "
+        "the compacting delta+marker commit log; oracle is the batch "
+        "unrolled-merge twin under wave-major order",
     ),
     "bm25_stream_hybrid": QuerySpec(
         q_bm25_stream_hybrid,
         similarity.hybrid_rerank_oracle(),
         doc="hybrid retrieval from MAINTAINED BM25 statistics: stage-1 "
-        "candidates from the incrementally-kept postings/df/stats "
-        "tables via hybrid_rerank's cands= injection, stage-2 cosine "
-        "re-rank unchanged — row-identical to the batch recompute by "
-        "construction; NEW gate r12 (r11 VERDICT task 2)",
+        "candidates from the incrementally-kept postings/df/stats tables via "
+        "hybrid_rerank's cands= injection, stage-2 cosine re-rank unchanged "
+        "— row-identical to the batch recompute by construction",
     ),
-    # (r15 window-repair parks: the three veterans below made room for
-    # the returning driver-verified rows — every one stays pytest-
-    # oracled via test_registry_oracle.py, and the span rows' oracles
-    # remain driver-verified verbatim through their streamed twins)
     "table_history_scd2": QuerySpec(
         q_scd2_history,
         asof.scd2_history_events_oracle(),
-        doc="SCD2 changelog history: versioned [valid_from, valid_to) "
-        "rows; green r4-r14, parked in the r15 window repair (the "
-        "asof/history family keeps versioned_kv_asof + "
-        "join_versioned_stream in-window)",
+        doc="SCD2 changelog history: versioned [valid_from, valid_to) rows",
     ),
     "dup_span_report": QuerySpec(
         lambda spark, sf_dir: pipeline_ops.dup_span_report(
             _t(spark, sf_dir, "documents")
         ),
         pipeline_ops.dup_span_report_oracle(),
-        doc="substring-level dedup signal (Lee et al. 2022 shape): "
-        "stride-1 w-token windows, corpus-wide occurrence counts via "
-        "keyed agg + equi-join (NEVER a per-gram window — AQE splits hot "
-        "grams), per-doc union-of-spans duplicated-token fraction in "
-        "integer bp; grams shuffle as xxhash64 BIGINTs, never as text "
-        "(r11); catches boilerplate spans that doc-level minhash "
-        "and non-overlapping chunk_dedup both miss; green r10-r14, "
-        "parked in the r15 window repair (same oracle stays in-window "
-        "via dup_span_stream)",
+        doc="substring-level dedup signal (Lee et al. 2022 shape): stride-1 "
+        "w-token windows, corpus-wide occurrence counts via keyed agg + "
+        "equi-join (NEVER a per-gram window — AQE splits hot grams), per-doc "
+        "union-of-spans duplicated-token fraction in integer bp; grams "
+        "shuffle as xxhash64 BIGINTs, never as text; catches "
+        "boilerplate spans that doc-level minhash and non-overlapping "
+        "chunk_dedup both miss",
     ),
     "dedup_strip_spans": QuerySpec(
         lambda spark, sf_dir: pipeline_ops.strip_dup_spans(
             _t(spark, sf_dir, "documents")
         ),
         pipeline_ops.strip_dup_spans_oracle(),
-        doc="the ACTION to dup_span_report: remove all-but-first copies "
-        "of every duplicated w-token span (canonical = globally first by "
-        "(doc_id, pos), picked by ONE keyed min(struct(doc_id, pos)) agg "
-        "— lexicographic struct order IS the election, no per-gram "
-        "window, no packed-key arithmetic, no second gram pass); grams "
-        "shuffle as xxhash64 BIGINTs, never as text (r11); drop set is "
-        "one (doc, pos) max(is_canon) agg; first copies survive "
-        "verbatim, later copies are cut, rebuilt text per doc; green "
-        "r10-r14, parked in the r15 window repair (same oracle stays "
-        "in-window via strip_spans_stream + strip_stream_materialized)",
+        doc="the ACTION to dup_span_report: remove all-but-first copies of "
+        "every duplicated w-token span (canonical = globally first by "
+        "(doc_id, pos), picked by ONE keyed min(struct(doc_id, pos)) agg — "
+        "lexicographic struct order IS the election, no per-gram window, no "
+        "packed-key arithmetic, no second gram pass); grams shuffle as "
+        "xxhash64 BIGINTs, never as text; drop set is one (doc, pos) "
+        "max(is_canon) agg; first copies survive verbatim, later copies are "
+        "cut, rebuilt text per doc",
     ),
     "mixture_stream": QuerySpec(
         q_mixture_stream,
         pipeline_ops.mixture_resample_tokens_oracle(),
         doc="STREAMING mixture statistics: per-lang token masses kept "
         "current by one update-mode keyed agg (KV-table upsert, "
-        "lang-cardinality state); resample() serves the decision from "
-        "the maintained table via mixture_resample_tokens' masses= "
-        "injection — no corpus-wide re-aggregation at decision time; "
-        "oracle = the batch oracle verbatim (order-independent sums); "
-        "NEW gate r12",
+        "lang-cardinality state); resample() serves the decision from the "
+        "maintained table via mixture_resample_tokens' masses= injection — "
+        "no corpus-wide re-aggregation at decision time; oracle = the batch "
+        "oracle verbatim (order-independent sums)",
     ),
     "envelope_audit_stream": QuerySpec(
         q_envelope_audit_stream,
         timeseries.json_envelope_audit_oracle(),
         doc="STREAMING twin of json_envelope_audit: per-row variant "
-        "expressions at ingest + ONE update-mode (event_type, key)-"
-        "keyed streaming agg upserted into the KV table sink — the "
-        "inventory stays current without re-scanning history; state is "
-        "schema-sized; oracle = the batch audit oracle verbatim "
-        "(order-independent sums); NEW gate r12",
+        "expressions at ingest + ONE update-mode (event_type, key)-keyed "
+        "streaming agg upserted into the KV table sink — the inventory stays "
+        "current without re-scanning history; state is schema-sized; oracle "
+        "= the batch audit oracle verbatim (order-independent sums)",
     ),
     "json_envelope_audit": QuerySpec(
         lambda spark, sf_dir: timeseries.json_envelope_audit(
             _t(spark, sf_dir, "events")
         ),
         timeseries.json_envelope_audit_oracle(),
-        doc="schema-on-read envelope AUDIT (r11 VERDICT task 5 — the "
-        "generalization past json_props_rollup's fixed $.k path): per "
-        "(event_type, key) presence, JSON-null count, and type "
-        "histogram via Spark 4 VARIANT expressions (try_parse_json + "
-        "json_object_keys + variant_get/schema_of_variant, all "
-        "JVM-side, one keyed agg); DuckDB oracle via json_keys/"
-        "json_type behind a json_valid guard; NEW gate r12",
+        doc="schema-on-read envelope AUDIT: per (event_type, key) presence, "
+        "JSON-null count, and type histogram via Spark 4 VARIANT expressions "
+        "(try_parse_json + json_object_keys + variant_get/schema_of_variant, "
+        "all JVM-side, one keyed agg); DuckDB oracle via json_keys/json_type "
+        "behind a json_valid guard",
     ),
     "knn_label_purity_ivf": QuerySpec(
         lambda spark, sf_dir: similarity.knn_label_purity_ivf(
             _t(spark, sf_dir, "embeddings")
         ),
         similarity.knn_label_purity_ivf_oracle(),
-        doc="IVF-probed label-purity audit (r11 VERDICT stretch): the "
-        "same audit run on inverted lists — probes restricted to their "
-        "3 nearest of 8 pinned-centroid cells, so each probe scores "
-        "~corpus*3/8 candidates instead of the corpus; missed "
-        "neighbors read as mismatches (denominator stays k, never "
-        "inflated); recall referee >= 0.95 on a clustered corpus in "
-        "tests/test_embedding_recall.py; NEW gate r12",
+        doc="IVF-probed label-purity audit: the same audit run on inverted "
+        "lists — probes restricted to their 3 nearest of 8 pinned-centroid "
+        "cells, so each probe scores ~corpus*3/8 candidates instead of the "
+        "corpus; missed neighbors read as mismatches (denominator stays k, "
+        "never inflated); recall referee >= 0.95 on a clustered corpus in "
+        "tests/test_embedding_recall.py",
     ),
     "dedup_containment": QuerySpec(
         lambda spark, sf_dir: dedup.containment_pairs(
@@ -3724,17 +3494,9 @@ REGISTRY: dict[str, QuerySpec] = {
         dedup.containment_pairs_oracle(),
         doc="directed near-containment pairs (|A∩B|/|A| >= 0.9) via "
         "rare-shingle prefix-filter blocking — the quote-expansion case "
-        "Jaccard misses; recall EXACT at containment 1.0; NEW inventory, "
-        "first-gates in r6",
+        "Jaccard misses; recall EXACT at containment 1.0",
     ),
-    # (approx_num_entries — green r4-r11 — parked in the r12 fourth
-    # rotation for the decontam_stream gate row; the PAPI-store family
-    # keeps papi_tws_running_count and papi_window_key_range in-window)
     "approx_num_entries": QuerySpec(q_approx_num_entries, ORACLE_APPROX_NUM_ENTRIES),
-    # --- r11 rotation-OUT: green r6-r10, parked past 50 for the
-    # --- mixture_temperature and shard_stream gate rows (sketch family
-    # --- keeps sketch_hll_windowed in-window; peek identity stays pinned
-    # --- by the suite) ---
     "stateless_peek": QuerySpec(
         lambda spark, sf_dir: (
             KStream(_t(spark, sf_dir, "events"), key=["user_id"])
@@ -3749,23 +3511,20 @@ REGISTRY: dict[str, QuerySpec] = {
         SELECT event_id, user_id, epoch_us(ts) AS ts_us
         FROM ev WHERE event_type = 'click'
         """,
-        doc="peek is observation-only (STJoinExample.java:81-88): the "
-        "gated contract is stream IDENTITY through the peek — rows equal "
-        "the un-peeked plan's; first-gated r6, green r6-r10, parked for "
-        "the r11 shard_stream gate row",
+        doc="peek is observation-only (STJoinExample.java:81-88): the gated "
+        "contract is stream IDENTITY through the peek — rows equal the "
+        "un-peeked plan's",
     ),
     "embed_pca_power": QuerySpec(
         lambda spark, sf_dir: quantize.pca_power_top(
             _t(spark, sf_dir, "embeddings")
         ),
         quantize.pca_power_top_oracle(),
-        doc="fixed-point integer power iteration toward the top "
-        "principal direction (3 unrolled rounds, L-inf renormalized; "
-        "bit-identical across engines — the gated contract is the "
-        "fixed-round iterate, like graph_pagerank) — the "
-        "centering/whitening primitive of an embedding pipeline; "
-        "first-gated r6, green r6-r10, parked for the r11 "
-        "knn_label_purity gate row",
+        doc="fixed-point integer power iteration toward the top principal "
+        "direction (3 unrolled rounds, L-inf renormalized; bit-identical "
+        "across engines — the gated contract is the fixed-round iterate, "
+        "like graph_pagerank) — the centering/whitening primitive of an "
+        "embedding pipeline",
     ),
     "text_unigram_ppl": QuerySpec(
         lambda spark, sf_dir: textops.unigram_logppl(
@@ -3773,19 +3532,16 @@ REGISTRY: dict[str, QuerySpec] = {
         ),
         textops.unigram_logppl_oracle(),
         doc="unigram-LM perplexity quality score: broadcast log-probs, "
-        "position-sorted fold for bit-stable float sums; first-gated r5, "
-        "green r5-r10, parked for the r11 bpe_fertility gate row",
+        "position-sorted fold for bit-stable float sums",
     ),
     "ab_test_zscore": QuerySpec(
         lambda spark, sf_dir: timeseries.ab_test(
             _t(spark, sf_dir, "events")
         ),
         timeseries.ab_test_oracle(),
-        doc="two-proportion z-test per metric under a deterministic "
-        "50/50 user-hash A/A assignment (|z| small = the harness is "
-        "unbiased); degenerate pooled rates are NULL-guarded; "
-        "first-gated r5, green r5-r10, parked for the r11 "
-        "bm25_stream_stats gate row",
+        doc="two-proportion z-test per metric under a deterministic 50/50 "
+        "user-hash A/A assignment (|z| small = the harness is unbiased); "
+        "degenerate pooled rates are NULL-guarded",
     ),
     "dedup_keep_best": QuerySpec(
         lambda spark, sf_dir: dedup.keep_best(
@@ -3793,18 +3549,15 @@ REGISTRY: dict[str, QuerySpec] = {
         ),
         dedup.keep_best_oracle(),
         doc="quality-aware dedup: clusters elect the LONGEST member as "
-        "keeper (rank-1 WindowGroupLimit per cluster), not the lowest "
-        "id; first-gated r5, green r5-r10, parked for the r11 "
-        "json_props_rollup gate row",
+        "keeper (rank-1 WindowGroupLimit per cluster), not the lowest id",
     ),
     "dq_audit_events": QuerySpec(
         lambda spark, sf_dir: timeseries.dq_audit(
             _t(spark, sf_dir, "events")
         ),
         timeseries.dq_audit_oracle(),
-        doc="column-level data-quality audit (nulls/distincts/fixed-"
-        "point min-max) in ONE scan; first-gated r5, green r5-r10, "
-        "parked for the r11 pack_stream gate row",
+        doc="column-level data-quality audit (nulls/distincts/fixed-point "
+        "min-max) in ONE scan",
     ),
     "sketch_cms_windowed": QuerySpec(
         lambda spark, sf_dir: sketches.cms_frequencies_windowed(
@@ -3814,58 +3567,51 @@ REGISTRY: dict[str, QuerySpec] = {
         doc="Count-Min composed with event-time windows (per-window "
         "frequency estimates; fixed D x W counters per window, one-sided "
         "bound inherited — the sketch-window composition rule, like "
-        "sketch_hll_windowed); first-gated r6, green r6-r10, parked for "
-        "the r11 mixture_temperature gate row",
+        "sketch_hll_windowed)",
     ),
-    # --- new inventory late-r8 (tail row, queued for the r9 rotation) ---
     "trend_ols": QuerySpec(
         lambda spark, sf_dir: timeseries.trend_ols(
             _t(spark, sf_dir, "events")
         ),
         timeseries.trend_ols_oracle(),
         doc="per-key OLS value trend from integer sums — one integer "
-        "division per key; first-gated r5",
+        "division per key",
     ),
     "cohort_retention": QuerySpec(
         lambda spark, sf_dir: timeseries.cohort_retention(
             _t(spark, sf_dir, "events")
         ),
         timeseries.cohort_retention_oracle(),
-        doc="signup-week cohort retention matrix in integer basis "
-        "points; first-gated r5",
+        doc="signup-week cohort retention matrix in integer basis points",
     ),
     "group_variance": QuerySpec(
         lambda spark, sf_dir: timeseries.group_variance(
             _t(spark, sf_dir, "events")
         ),
         timeseries.group_variance_oracle(),
-        doc="one-pass parallel variance from three BIGINT sums (no "
-        "Welford state, sums merge by addition); first-gates r5",
+        doc="one-pass parallel variance from three BIGINT sums (no Welford "
+        "state, sums merge by addition)",
     ),
     "heavy_hitters": QuerySpec(
         q_heavy_hitters,
         ORACLE_HEAVY_HITTERS,
-        doc="theta-frequent items via CMS prefilter (no false negatives) "
-        "+ exact verify of candidates only — theta folded into the plan "
-        "as a broadcast 1-row aggregate (r4 VERDICT task 4); "
-        "first-gates r5",
+        doc="theta-frequent items via CMS prefilter (no false negatives) + "
+        "exact verify of candidates only — theta folded into the plan as a "
+        "broadcast 1-row aggregate",
     ),
     "markov_transitions": QuerySpec(
         lambda spark, sf_dir: timeseries.markov_transitions(
             _t(spark, sf_dir, "events")
         ),
         timeseries.markov_transitions_oracle(),
-        doc="first-order event-type transition matrix (counts + integer "
-        "bp probabilities) from one lag-window pass; first-gated r5",
+        doc="first-order event-type transition matrix (counts + integer bp "
+        "probabilities) from one lag-window pass",
     ),
     "bpe_vocab": QuerySpec(
         lambda spark, sf_dir: bpe.bpe_vocab(_t(spark, sf_dir, "documents")),
         bpe.bpe_vocab_oracle(),
-        doc="learned BPE segmentation applied: corpus symbol inventory; "
-        "first-gated r5 (bpe_merges gates the mechanism since r4)",
+        doc="learned BPE segmentation applied: corpus symbol inventory",
     ),
-    # --- r7 rotation OUT (multi-round green r4-r6; identical oracles
-    # --- remain gated by the full-registry pytest sweep) ---
     "sketch_quantile_hist": QuerySpec(
         lambda spark, sf_dir: sketches.hist_quantiles(
             _t(spark, sf_dir, "orders")
@@ -3898,8 +3644,6 @@ REGISTRY: dict[str, QuerySpec] = {
         "— all-integer bit-shift weights, so top-k cutoffs are "
         "bit-deterministic",
     ),
-    # --- r6 rotation OUT (multi-round green; identical oracles remain
-    # --- gated by the full-registry pytest sweep) ---
     "join_range": QuerySpec(
         lambda spark, sf_dir: range_join.error_attribution(
             _t(spark, sf_dir, "events")
@@ -4017,12 +3761,7 @@ REGISTRY: dict[str, QuerySpec] = {
         ),
         pipeline_ops.resample_by_score_oracle(),
     ),
-    # r4-final rotations out (multi-round green; identical oracles still
-    # gated by the pytest sweep, and the FK/PAPI oracles ALSO stay
-    # in-window via fk_join_streaming / papi_tws_running_count):
     "fk_join_changelog": QuerySpec(q_fk_join_changelog, ORACLE_FK_JOIN_CHANGELOG, bench=True),
-    # --- r10 rotations out (multi-round green r4-r9; oracles still in the
-    # --- pytest sweep) ---
     "tpch_q3_shipping": QuerySpec(
         q_tpch_q3,
         ORACLE_TPCH_Q3,
@@ -4093,10 +3832,6 @@ REGISTRY: dict[str, QuerySpec] = {
     "multimodal_frame_sample": QuerySpec(
         q_multimodal_frames, multimodal.sample_frames_oracle()
     ),
-    # (bpe_fertility and bm25_stream_stats — NEW r11 — were rotated INTO
-    # the 50-row window the same round rather than waiting as never-gated
-    # tail rows; their entries live in the window block above)
-    # (rotated out of the gate window r11, all multi-round green:)
     "multimodal_decode_features": QuerySpec(
         q_multimodal_decode, multimodal.decode_features_long_oracle(), bench=True
     ),

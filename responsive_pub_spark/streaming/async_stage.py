@@ -114,13 +114,15 @@ def async_process_stateful(
     ``AsyncProcessorSupplier`` analog for processors with store writes
     (api/async/AsyncProcessorSupplier.java:34-115).
 
-    Each key gets its own processor + store instance running sequentially
-    on one pool worker (same-key order + read-your-writes within the key,
-    exactly the async store contract); KEYS execute concurrently. Because
-    stores are per-key, delayed-write finalization reduces to the batch
-    barrier: the task emits all keys' forwards in deterministic key order
-    only after every key's replay completes (FinalizingQueue drain at the
-    commit barrier, internal/async/AsyncProcessor.java:62-67).
+    Each key gets its own processor + store instance running the batch
+    per-key body of :mod:`~responsive_pub_spark.streaming.state`
+    sequentially on one pool worker (same-key order + read-your-writes
+    within the key, exactly the async store contract); KEYS execute
+    concurrently. Because stores are per-key, delayed-write finalization
+    reduces to the batch barrier: the task emits all keys' forwards in
+    deterministic key order only after every key's replay completes
+    (FinalizingQueue drain at the commit barrier,
+    internal/async/AsyncProcessor.java:62-67).
 
     Output is identical to ``state.process`` with the same processor
     (asserted in tests/test_async.py) — async changes the SCHEDULE, never
@@ -132,7 +134,7 @@ def async_process_stateful(
     from responsive_pub_spark.streaming.state import (
         KeyValueStore,
         ProcessorContext,
-        _replay,
+        _run_key,
     )
 
     keys = list(key)
@@ -147,12 +149,8 @@ def async_process_stateful(
             key_vals, gpdf = item
             if not isinstance(key_vals, tuple):
                 key_vals = (key_vals,)
-            proc = processor_factory()
-            store = KeyValueStore(ttl_seconds)
-            ctx = ProcessorContext(key_vals, store)
-            proc.init(ctx)
-            _replay(proc, ctx, gpdf, ts_col, order_by)
-            proc.close(ctx)
+            ctx = ProcessorContext(key_vals, KeyValueStore(ttl_seconds))
+            _run_key(processor_factory(), ctx, [gpdf], ts_col, order_by)
             return ctx._to_pdf()
 
         with ThreadPoolExecutor(max_workers=max_workers) as pool:

@@ -8,19 +8,32 @@ WITHOUT stopping the stream (the remote-store "shared state" advantage the
 reference gets from Cassandra/Mongo, we get from the checkpoint).
 
 For ``process_streaming`` operators the per-key GroupState holds the
-pickled :class:`~responsive_pub_spark.streaming.state.KeyValueStore`
-payload; :func:`read_processor_state` decodes it back into one row per
-(group key, store key) — the IQ ``store.all()`` surface; filter for
-``get``/``range``/``prefix``.
+named-store payload described in the
+:mod:`~responsive_pub_spark.streaming.state` module docstring;
+:func:`query_processor_state`, :func:`query_window_store` and
+:func:`query_session_store` open one store of it per group key and decode
+it into rows — the IQ ``store.all()`` surface plus keyed, range and
+prefix lookups. :func:`query_tws_map_state` reads the TWS MapState lane,
+one checkpoint row per store entry.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+import pickle
+from collections.abc import Callable, Iterable
+from functools import reduce
+from operator import and_, or_
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+
+from responsive_pub_spark.streaming.segstore import SegmentedKeyValueStore
+from responsive_pub_spark.streaming.state import (
+    TwsMapStateStore,
+    VersionedKeyValueStore,
+    _open_store_blob,
+)
 
 
 def read_state(spark: SparkSession, checkpoint: str, **options) -> DataFrame:
@@ -31,6 +44,72 @@ def read_state(spark: SparkSession, checkpoint: str, **options) -> DataFrame:
     for k, v in options.items():
         reader = reader.option(k, str(v))
     return reader.load(checkpoint)
+
+
+def _group_key_cond(key_cols: list[str], group_keys: list) -> Column:
+    """JVM-side filter keeping ``group_keys`` (each one value, or a tuple
+    over ``key_cols``): rows of other keys never reach ``mapInPandas``."""
+    from pyspark.sql import functions as F
+
+    gks = [gk if isinstance(gk, tuple) else (gk,) for gk in group_keys]
+    return reduce(or_, [
+        reduce(and_, [F.col(c) == F.lit(v) for c, v in zip(key_cols, gk)])
+        for gk in gks
+    ])
+
+
+def _decode(
+    flat: DataFrame,
+    key_cols: list[str],
+    fields: str,
+    rows_of: Callable[[tuple], Iterable[tuple]],
+) -> DataFrame:
+    """``mapInPandas`` over ``flat``: every tuple ``rows_of(row)`` yields
+    becomes one output row, led by the input row's ``key_cols``; ``fields``
+    is the DDL of the tuples' columns."""
+    names = [*key_cols, *(f.split()[0] for f in fields.split(","))]
+
+    def decode(batches: Iterable[pd.DataFrame]):
+        for pdf in batches:
+            out = []
+            for row in pdf.itertuples(index=False):
+                kv = tuple(getattr(row, k) for k in key_cols)
+                out.extend(kv + rec for rec in rows_of(row))
+            yield pd.DataFrame(out, columns=names)
+
+    key_schema = ", ".join(f"{k} LONG" for k in key_cols)
+    return flat.mapInPandas(decode, f"{key_schema}, {fields}")
+
+
+def _query_store_blobs(
+    spark: SparkSession,
+    checkpoint: str,
+    key_cols: list[str],
+    group_keys: "list | None",
+    store_name: str,
+    fields: str,
+    rows_of_store: Callable[[bytes], Iterable[tuple]],
+    options: dict,
+) -> DataFrame:
+    """Shared body of the blob-lane readers: select each group key's
+    GroupState blob, prune to ``group_keys`` before the Python boundary,
+    open ``store_name`` in each blob (keys that never wrote that store
+    give no rows) and decode it with ``rows_of_store``."""
+    raw = read_state(spark, checkpoint, **options)
+    flat = raw.select(
+        *[raw["key"][k].alias(k) for k in key_cols],
+        raw["value"]["groupState"]["blob"].alias("blob"),
+    )
+    if group_keys is not None:
+        flat = flat.filter(_group_key_cond(key_cols, group_keys))
+
+    def rows_of(row) -> Iterable[tuple]:
+        if row.blob is None:
+            return ()
+        blob = _open_store_blob(bytes(row.blob), store_name)
+        return () if blob is None else rows_of_store(blob)
+
+    return _decode(flat, key_cols, fields, rows_of)
 
 
 def query_processor_state(
@@ -69,103 +148,40 @@ def query_processor_state(
     key/value (store contents are arbitrary pickled Python values —
     SURVEY.md §1.1 opaque-bytes model)."""
 
-    raw = read_state(spark, checkpoint, **options)
-    flat = raw.select(
-        *[raw["key"][k].alias(k) for k in key_cols],
-        raw["value"]["groupState"]["blob"].alias("blob"),
+    def rows_of_store(blob: bytes) -> Iterable[tuple]:
+        if blob[:4] == VersionedKeyValueStore.BLOB_MAGIC:
+            # versioned store: one IQ row per (key, version) — store_key
+            # renders as (key, valid_from); tombstones surface as value
+            # None (the full history IS the queryable surface of a
+            # versioned store)
+            vst = VersionedKeyValueStore.load(blob)
+            for vk, versions in sorted(vst._versions.items()):
+                if store_key is None or vk == store_key:
+                    for vts, vv in versions:
+                        yield repr((vk, vts)), repr(vv), float(vts)
+            return
+        store, _fires, _wc = SegmentedKeyValueStore.from_blob(blob)
+        if store_key is not None:
+            v = store.get(store_key)
+            items = [] if v is None else [(store_key, v)]
+        elif store_key_from is not None or store_key_to is not None:
+            items = store.scan(store_key_from, store_key_to)
+        elif store_key_prefix is not None:
+            if isinstance(store_key_prefix, tuple):
+                items = store.prefix_tuple(store_key_prefix)
+            else:
+                items = store.prefix(store_key_prefix)
+        else:
+            items = store.all()
+        for sk, sv in items:
+            ts = store.write_ts(sk)
+            yield repr(sk), repr(sv), float("nan") if ts is None else float(ts)
+
+    return _query_store_blobs(
+        spark, checkpoint, key_cols, group_keys, store_name,
+        "store_key STRING, store_value STRING, write_ts DOUBLE",
+        rows_of_store, options,
     )
-    if group_keys is not None:
-        gks = [gk if isinstance(gk, tuple) else (gk,) for gk in group_keys]
-        from pyspark.sql import functions as F
-
-        cond = None
-        for gk in gks:
-            c = None
-            for col, v in zip(key_cols, gk):
-                cc = F.col(col) == F.lit(v)
-                c = cc if c is None else (c & cc)
-            cond = c if cond is None else (cond | c)
-        flat = flat.filter(cond)
-
-    def decode(batches: Iterable[pd.DataFrame]):
-        import pickle
-
-        from responsive_pub_spark.streaming.segstore import SegmentedKeyValueStore
-
-        for pdf in batches:
-            out = {k: [] for k in key_cols} | {
-                "store_key": [], "store_value": [], "write_ts": []
-            }
-            for row in pdf.itertuples(index=False):
-                blob = row.blob
-                if blob is None:
-                    continue
-                raw = bytes(blob)
-                if raw[:4] == b"MST1":  # multi-store wrapper
-                    primary, extras = pickle.loads(raw[4:])
-                    if store_name == "default":
-                        raw = primary
-                    elif store_name in extras:
-                        raw = extras[store_name]
-                    else:
-                        continue  # this key never touched that store
-                elif store_name != "default":
-                    continue
-                from responsive_pub_spark.streaming.state import (
-                    VersionedKeyValueStore,
-                )
-
-                if raw[:4] == VersionedKeyValueStore.BLOB_MAGIC:
-                    # versioned store: one IQ row per (key, version) —
-                    # store_key renders as (key, valid_from); tombstones
-                    # surface as value None (the full history IS the
-                    # queryable surface of a versioned store)
-                    vst = VersionedKeyValueStore.load(raw)
-                    for vk, versions in sorted(vst._versions.items()):
-                        if store_key is not None and vk != store_key:
-                            continue
-                        for vts, vv in versions:
-                            for k in key_cols:
-                                out[k].append(getattr(row, k))
-                            out["store_key"].append(repr((vk, vts)))
-                            out["store_value"].append(repr(vv))
-                            out["write_ts"].append(float(vts))
-                    continue
-                store, _fires, _wc = SegmentedKeyValueStore.from_blob(raw)
-                if store_key is not None:
-                    v = store.get(store_key)
-                    items = [] if v is None else [(store_key, v)]
-                elif store_key_from is not None or store_key_to is not None:
-                    items = list(store.scan(store_key_from, store_key_to))
-                elif store_key_prefix is not None:
-                    if isinstance(store_key_prefix, tuple):
-                        items = list(store.prefix_tuple(store_key_prefix))
-                    else:
-                        items = list(store.prefix(store_key_prefix))
-                else:
-                    items = list(store.all())
-                for sk, sv in items:
-                    for k in key_cols:
-                        out[k].append(getattr(row, k))
-                    out["store_key"].append(repr(sk))
-                    out["store_value"].append(repr(sv))
-                    ts = store.write_ts(sk)
-                    out["write_ts"].append(float("nan") if ts is None else float(ts))
-            yield pd.DataFrame(out)
-
-    key_schema = ", ".join(f"{k} LONG" for k in key_cols)
-    return flat.mapInPandas(
-        decode, f"{key_schema}, store_key STRING, store_value STRING, write_ts DOUBLE"
-    )
-
-
-def read_processor_state(
-    spark: SparkSession, checkpoint: str, key_cols: list[str], **options
-) -> DataFrame:
-    """``store.all()`` across all processor keys (the full-scan IQ view);
-    use :func:`query_processor_state` for keyed/range/prefix lookups that
-    prune before unpickling."""
-    return query_processor_state(spark, checkpoint, key_cols, **options)
 
 
 def query_window_store(
@@ -205,89 +221,39 @@ def query_window_store(
     (same pruning as :func:`query_processor_state`). Output: one row per
     (group key, window): ``window_key STRING, window_start DOUBLE,
     store_value STRING``."""
-    raw = read_state(spark, checkpoint, **options)
-    flat = raw.select(
-        *[raw["key"][k].alias(k) for k in key_cols],
-        raw["value"]["groupState"]["blob"].alias("blob"),
-    )
-    if group_keys is not None:
-        from pyspark.sql import functions as F
 
-        gks = [gk if isinstance(gk, tuple) else (gk,) for gk in group_keys]
-        cond = None
-        for gk in gks:
-            c = None
-            for col, v in zip(key_cols, gk):
-                cc = F.col(col) == F.lit(v)
-                c = cc if c is None else (c & cc)
-            cond = c if cond is None else (cond | c)
-        flat = flat.filter(cond)
-
-    def decode(batches: Iterable[pd.DataFrame]):
-        import pickle
-
-        from responsive_pub_spark.streaming.segstore import SegmentedKeyValueStore
-
-        for pdf in batches:
-            out = {k: [] for k in key_cols} | {
-                "window_key": [], "window_start": [], "store_value": []
-            }
-            for row in pdf.itertuples(index=False):
-                blob = row.blob
-                if blob is None:
-                    continue
-                raw_b = bytes(blob)
-                if raw_b[:4] == b"MST1":
-                    primary, extras = pickle.loads(raw_b[4:])
-                    if store_name == "default":
-                        raw_b = primary
-                    elif store_name in extras:
-                        raw_b = extras[store_name]
-                    else:
-                        continue
-                elif store_name != "default":
-                    continue
-                store, _fires, _wc = SegmentedKeyValueStore.from_blob(raw_b)
-                if window_key is not None:
-                    items = store.prefix_tuple((window_key,))
-                elif window_key_from is not None or window_key_to is not None:
-                    if window_key_from is None or window_key_to is None:
-                        raise ValueError(
-                            "key-range fetch needs BOTH window_key_from "
-                            "and window_key_to (inclusive bounds)"
-                        )
-                    items = store.range(
-                        (window_key_from, float("-inf")),
-                        (window_key_to, float("inf")),
-                    )
-                else:
-                    items = store.all()
-                # only WindowedKey-shaped (key, window_start) entries: a
-                # composition may hold other key shapes (counters, 3-tuple
-                # SessionKeys) in the same store
-                items = (
-                    e
-                    for e in items
-                    if isinstance(e[0], tuple) and len(e[0]) == 2
+    def rows_of_store(blob: bytes) -> Iterable[tuple]:
+        store, _fires, _wc = SegmentedKeyValueStore.from_blob(blob)
+        if window_key is not None:
+            items = store.prefix_tuple((window_key,))
+        elif window_key_from is not None or window_key_to is not None:
+            if window_key_from is None or window_key_to is None:
+                raise ValueError(
+                    "key-range fetch needs BOTH window_key_from "
+                    "and window_key_to (inclusive bounds)"
                 )
-                for sk, sv in items:
-                    wk, ws = sk
-                    if ts_from is not None and ws < ts_from:
-                        continue
-                    if ts_to is not None and ws > ts_to:
-                        continue
-                    for k in key_cols:
-                        out[k].append(getattr(row, k))
-                    out["window_key"].append(repr(wk))
-                    out["window_start"].append(float(ws))
-                    out["store_value"].append(repr(sv))
-            yield pd.DataFrame(out)
+            items = store.range(
+                (window_key_from, float("-inf")),
+                (window_key_to, float("inf")),
+            )
+        else:
+            items = store.all()
+        # only WindowedKey-shaped (key, window_start) entries: a
+        # composition may hold other key shapes (counters, 3-tuple
+        # SessionKeys) in the same store
+        for sk, sv in items:
+            if not (isinstance(sk, tuple) and len(sk) == 2):
+                continue
+            wk, ws = sk
+            if (ts_from is None or ws >= ts_from) and (
+                ts_to is None or ws <= ts_to
+            ):
+                yield repr(wk), float(ws), repr(sv)
 
-    key_schema = ", ".join(f"{k} LONG" for k in key_cols)
-    return flat.mapInPandas(
-        decode,
-        f"{key_schema}, window_key STRING, window_start DOUBLE, "
-        "store_value STRING",
+    return _query_store_blobs(
+        spark, checkpoint, key_cols, group_keys, store_name,
+        "window_key STRING, window_start DOUBLE, store_value STRING",
+        rows_of_store, options,
     )
 
 
@@ -313,80 +279,29 @@ def query_session_store(
     probes. Output: one row per (group key, session): ``session_key
     STRING, session_start DOUBLE, session_end DOUBLE, store_value
     STRING``."""
-    raw = read_state(spark, checkpoint, **options)
-    flat = raw.select(
-        *[raw["key"][k].alias(k) for k in key_cols],
-        raw["value"]["groupState"]["blob"].alias("blob"),
-    )
-    if group_keys is not None:
-        from pyspark.sql import functions as F
 
-        gks = [gk if isinstance(gk, tuple) else (gk,) for gk in group_keys]
-        cond = None
-        for gk in gks:
-            c = None
-            for col, v in zip(key_cols, gk):
-                cc = F.col(col) == F.lit(v)
-                c = cc if c is None else (c & cc)
-            cond = c if cond is None else (cond | c)
-        flat = flat.filter(cond)
+    def rows_of_store(blob: bytes) -> Iterable[tuple]:
+        store, _fires, _wc = SegmentedKeyValueStore.from_blob(blob)
+        if session_key is not None:
+            items = store.prefix_tuple((session_key,))
+        else:
+            items = store.all()
+        # only SessionKey-shaped (key, start, end) entries (see the
+        # WindowedKey note in query_window_store)
+        for sk, sv in items:
+            if not (isinstance(sk, tuple) and len(sk) == 3):
+                continue
+            skey, ss, se = sk
+            if (earliest_end is None or se >= earliest_end) and (
+                latest_start is None or ss <= latest_start
+            ):
+                yield repr(skey), float(ss), float(se), repr(sv)
 
-    def decode(batches: Iterable[pd.DataFrame]):
-        import pickle
-
-        from responsive_pub_spark.streaming.segstore import SegmentedKeyValueStore
-
-        for pdf in batches:
-            out = {k: [] for k in key_cols} | {
-                "session_key": [], "session_start": [],
-                "session_end": [], "store_value": [],
-            }
-            for row in pdf.itertuples(index=False):
-                blob = row.blob
-                if blob is None:
-                    continue
-                raw_b = bytes(blob)
-                if raw_b[:4] == b"MST1":
-                    primary, extras = pickle.loads(raw_b[4:])
-                    if store_name == "default":
-                        raw_b = primary
-                    elif store_name in extras:
-                        raw_b = extras[store_name]
-                    else:
-                        continue
-                elif store_name != "default":
-                    continue
-                store, _fires, _wc = SegmentedKeyValueStore.from_blob(raw_b)
-                if session_key is not None:
-                    items = store.prefix_tuple((session_key,))
-                else:
-                    items = store.all()
-                # only SessionKey-shaped (key, start, end) entries (see the
-                # WindowedKey note in query_window_store)
-                items = (
-                    e
-                    for e in items
-                    if isinstance(e[0], tuple) and len(e[0]) == 3
-                )
-                for sk, sv in items:
-                    skey, ss, se = sk
-                    if earliest_end is not None and se < earliest_end:
-                        continue
-                    if latest_start is not None and ss > latest_start:
-                        continue
-                    for k in key_cols:
-                        out[k].append(getattr(row, k))
-                    out["session_key"].append(repr(skey))
-                    out["session_start"].append(float(ss))
-                    out["session_end"].append(float(se))
-                    out["store_value"].append(repr(sv))
-            yield pd.DataFrame(out)
-
-    key_schema = ", ".join(f"{k} LONG" for k in key_cols)
-    return flat.mapInPandas(
-        decode,
-        f"{key_schema}, session_key STRING, session_start DOUBLE, "
-        "session_end DOUBLE, store_value STRING",
+    return _query_store_blobs(
+        spark, checkpoint, key_cols, group_keys, store_name,
+        "session_key STRING, session_start DOUBLE, session_end DOUBLE, "
+        "store_value STRING",
+        rows_of_store, options,
     )
 
 
@@ -423,8 +338,6 @@ def query_tws_map_state(
     """
     from pyspark.sql import functions as F
 
-    from responsive_pub_spark.streaming.state import TwsMapStateStore
-
     raw = read_state(spark, checkpoint, stateVarName=state_var, **options)
     flat = raw.select(
         *[raw["key"][k].alias(k) for k in key_cols],
@@ -433,48 +346,30 @@ def query_tws_map_state(
         raw["user_map_value"]["ts"].alias("write_ts"),
     )
     if group_keys is not None:
-        gks = [gk if isinstance(gk, tuple) else (gk,) for gk in group_keys]
-        cond = None
-        for gk in gks:
-            c = None
-            for col, v in zip(key_cols, gk):
-                cc = F.col(col) == F.lit(v)
-                c = cc if c is None else (c & cc)
-            cond = c if cond is None else (cond | c)
-        flat = flat.filter(cond)
+        flat = flat.filter(_group_key_cond(key_cols, group_keys))
     if store_key is not None:
         flat = flat.filter(F.col("kb") == F.lit(TwsMapStateStore._k(store_key)))
 
-    def decode(batches: Iterable[pd.DataFrame]):
-        import pickle
+    def rows_of(row) -> Iterable[tuple]:
+        sk = pickle.loads(bytes(row.kb))
+        if store_key is not None and sk != store_key:
+            return ()
+        if store_key_from is not None and sk < store_key_from:
+            return ()
+        if store_key_to is not None and sk > store_key_to:
+            return ()
+        if store_key_prefix is not None:
+            if isinstance(store_key_prefix, tuple):
+                n = len(store_key_prefix)
+                if not (isinstance(sk, tuple) and sk[:n] == store_key_prefix):
+                    return ()
+            elif not str(sk).startswith(store_key_prefix):
+                return ()
+        return [
+            (repr(sk), repr(pickle.loads(bytes(row.vb))), float(row.write_ts))
+        ]
 
-        for pdf in batches:
-            out = {k: [] for k in key_cols} | {
-                "store_key": [], "store_value": [], "write_ts": []
-            }
-            for row in pdf.itertuples(index=False):
-                sk = pickle.loads(bytes(row.kb))
-                if store_key is not None and sk != store_key:
-                    continue
-                if store_key_from is not None and sk < store_key_from:
-                    continue
-                if store_key_to is not None and sk > store_key_to:
-                    continue
-                if store_key_prefix is not None:
-                    if isinstance(store_key_prefix, tuple):
-                        n = len(store_key_prefix)
-                        if not (isinstance(sk, tuple) and sk[:n] == store_key_prefix):
-                            continue
-                    elif not str(sk).startswith(store_key_prefix):
-                        continue
-                for k in key_cols:
-                    out[k].append(getattr(row, k))
-                out["store_key"].append(repr(sk))
-                out["store_value"].append(repr(pickle.loads(bytes(row.vb))))
-                out["write_ts"].append(float(row.write_ts))
-            yield pd.DataFrame(out)
-
-    key_schema = ", ".join(f"{k} LONG" for k in key_cols)
-    return flat.mapInPandas(
-        decode, f"{key_schema}, store_key STRING, store_value STRING, write_ts DOUBLE"
+    return _decode(
+        flat, key_cols, "store_key STRING, store_value STRING, write_ts DOUBLE",
+        rows_of,
     )

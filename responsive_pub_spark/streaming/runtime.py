@@ -132,11 +132,13 @@ def run_concurrent(*thunks: Callable[[], None]) -> None:
     streaming query with its own checkpoint; Spark's scheduler runs the
     queries' jobs concurrently, so the fixed per-query-start machinery
     (source listing, planning, python-worker spawn) overlaps instead of
-    serializing. ``inheritable_thread_target`` carries the driver
-    thread's JVM-local properties (job group/description) into the
-    worker threads, per the PySpark docs. After all thunks settle — a
-    crashed sibling never leaves a query silently running — it raises an
-    ``ExceptionGroup`` holding every failure, in thunk order."""
+    serializing. ``inheritable_thread_target``, given the caller's active
+    session, carries the driver thread's JVM-local properties (job
+    group/description) and its session tags (``SparkSession.addTag``, so
+    ``interruptTag`` reaches every drain) into the worker threads; with
+    no active session only the properties travel. After all thunks
+    settle — a crashed sibling never leaves a query silently running — it
+    raises an ``ExceptionGroup`` holding every failure, in thunk order."""
     if len(thunks) == 1:
         thunks[0]()
         return
@@ -144,8 +146,14 @@ def run_concurrent(*thunks: Callable[[], None]) -> None:
 
     from pyspark import inheritable_thread_target
 
+    session = SparkSession.getActiveSession()
+    wrap = (
+        inheritable_thread_target
+        if session is None
+        else inheritable_thread_target(session)
+    )
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        futures = [pool.submit(wrap(t)) for t in thunks]
         errs = []
         for f in futures:
             try:

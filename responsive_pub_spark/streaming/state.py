@@ -38,12 +38,38 @@ definitions coincide. ``process_partitioned`` (batch) and
 task model exactly (r4): one processor per partition, the store shared
 across every key in the partition (cross-key range/all scans work), and
 stream time advancing per partition.
+
+The per-key body (``_run_key``) is the same in every lane — batch
+``process``/``process_partitioned``, ``async_stage.async_process_stateful``,
+the GroupState lane ``process_streaming`` and the TWS MapState lane
+``process_streaming_tws_map``:
+
+1. ``proc.init(ctx)``;
+2. restore the timer fire lists (stream-time, then wall-clock) saved by
+   the previous micro-batch;
+3. replay each input frame through ``_replay`` (stream-time punctuators
+   fire as event time advances);
+4. fire due wall-clock punctuators — streaming only: a batch replay has
+   no processing time, so they never fire there;
+5. ``proc.close(ctx)`` and hand the fire lists back to the lane.
+
+A lane owns only how it builds or restores the store and how it persists
+it: nothing in batch, the segstore blob in the GroupState lane, the
+MapState flush plus the ``meta`` pickle in the TWS lane.
+
+Named-store blob layout (GroupState lane; read by ``iq``): a key whose
+processor never named a store persists the primary store's blob alone;
+otherwise ``b"MST1" + pickle((primary_blob, {name: blob}))``. A named
+store the batch never opened keeps its restored bytes unchanged.
+``_pack_store_blobs`` writes the layout and ``_open_store_blob`` reads one
+store's blob out of it.
 """
 
 from __future__ import annotations
 
 import bisect
 import pickle
+import time
 from collections.abc import Callable, Iterable, Iterator, Sequence
 from dataclasses import dataclass
 
@@ -625,6 +651,8 @@ class ProcessorContext:
         batch period fires once at the first batch boundary past due.
         Pinned by tests/test_streaming.py::test_wall_clock_punctuator_coalescing."""
         for t in self._wc_timers:
+            if t.next_fire == float("inf"):  # cancelled
+                continue
             if t.interval_s <= 0:
                 t.callback(self, now)
                 continue
@@ -739,6 +767,83 @@ def _na_last(v) -> tuple:
     return (0, v)
 
 
+def _run_key(
+    proc: Processor,
+    ctx: ProcessorContext,
+    frames: Iterable[pd.DataFrame],
+    ts_col: str,
+    order_by: Sequence[str],
+    arrival_col: str | None = None,
+    fires: tuple = ((), ()),
+    now: float | None = None,
+) -> tuple[list, list]:
+    """The per-key body of every lane (module docstring). ``fires`` holds
+    the restored (stream-time, wall-clock) next-fire lists; ``now`` is
+    the processing time of a streaming batch, ``None`` in batch replay
+    (wall-clock punctuators then never fire). Returns the new fire
+    lists."""
+    proc.init(ctx)
+    for timers, saved in zip((ctx._timers, ctx._wc_timers), fires):
+        for t, nf in zip(timers, saved):
+            t.next_fire = nf
+    for pdf in frames:
+        _replay(proc, ctx, pdf, ts_col, order_by, arrival_col)
+    if now is not None:
+        ctx._fire_wall_clock(now)
+    proc.close(ctx)
+    return (
+        [t.next_fire for t in ctx._timers],
+        [t.next_fire for t in ctx._wc_timers],
+    )
+
+
+_MULTI_STORE_MAGIC = b"MST1"
+
+
+def _pack_store_blobs(primary: bytes, ctx: ProcessorContext) -> bytes:
+    """The GroupState payload of one key (layout in the module docstring):
+    ``primary`` alone, or wrapped with the named stores' blobs. Stores the
+    batch opened serialize afresh; restored blobs it never opened pass
+    through as the same bytes objects."""
+    if not (ctx._extra_stores or ctx._extra_blobs):
+        return primary
+    extras = dict(ctx._extra_blobs)
+    extras.update({n: st.to_blob() for n, st in ctx._extra_stores.items()})
+    return _MULTI_STORE_MAGIC + pickle.dumps(
+        (primary, extras), protocol=pickle.HIGHEST_PROTOCOL
+    )
+
+
+def _unpack_store_blobs(raw: bytes) -> tuple[bytes, dict]:
+    """Inverse of :func:`_pack_store_blobs`: (primary blob, {name: blob})."""
+    if raw[:4] == _MULTI_STORE_MAGIC:
+        primary, extras = pickle.loads(raw[4:])
+        return primary, dict(extras)
+    return raw, {}
+
+
+def _open_store_blob(raw: bytes, name: str = "default") -> bytes | None:
+    """One store's blob out of a key's payload: the primary for
+    ``"default"``, else the named store's blob, or ``None`` when the key
+    never wrote that store."""
+    primary, extras = _unpack_store_blobs(raw)
+    return primary if name == "default" else extras.get(name)
+
+
+def _tag_partitions(
+    df: DataFrame, keys: list[str], num_partitions: int, partitioner
+) -> DataFrame:
+    """``df`` with the task-model partition id in ``_PART_COL``:
+    ``partitioner``, or ``pmod(hash(keys), num_partitions)`` by default."""
+    from pyspark.sql import functions as F  # local: keep module import-light
+
+    if partitioner is None:
+        partitioner = F.pmod(
+            F.hash(*[F.col(k) for k in keys]), F.lit(int(num_partitions))
+        )
+    return df.withColumn(_PART_COL, partitioner.cast("int"))
+
+
 def process(
     df: DataFrame,
     key: Sequence[str],
@@ -769,12 +874,8 @@ def process(
     df = df.repartition(n, *[F.col(k) for k in keys])
 
     def run(key_vals: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        proc = processor_factory()
-        store = KeyValueStore(ttl_seconds)
-        ctx = ProcessorContext(key_vals, store)
-        proc.init(ctx)
-        _replay(proc, ctx, pdf, ts_col, order_by, arrival_col)
-        proc.close(ctx)
+        ctx = ProcessorContext(key_vals, KeyValueStore(ttl_seconds))
+        _run_key(processor_factory(), ctx, [pdf], ts_col, order_by, arrival_col)
         return ctx._to_pdf()
 
     return df.groupBy(*keys).applyInPandas(run, output_schema)
@@ -812,21 +913,12 @@ def process_partitioned(
     parallelism); keep N >= the cluster's core count for batch replays."""
     from pyspark.sql import functions as F  # local: keep module import-light
 
-    keys = list(key)
-    if partitioner is None:
-        partitioner = F.pmod(
-            F.hash(*[F.col(k) for k in keys]), F.lit(int(num_partitions))
-        )
-    df2 = df.withColumn(_PART_COL, partitioner.cast("int"))
+    df2 = _tag_partitions(df, list(key), num_partitions, partitioner)
     df2 = df2.repartition(int(num_partitions), F.col(_PART_COL))
 
     def run(key_vals: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        proc = processor_factory()
-        store = KeyValueStore(ttl_seconds)
-        ctx = ProcessorContext((int(key_vals[0]),), store)
-        proc.init(ctx)
-        _replay(proc, ctx, pdf, ts_col, order_by, arrival_col)
-        proc.close(ctx)
+        ctx = ProcessorContext((int(key_vals[0]),), KeyValueStore(ttl_seconds))
+        _run_key(processor_factory(), ctx, [pdf], ts_col, order_by, arrival_col)
         return ctx._to_pdf()
 
     return df2.groupBy(_PART_COL).applyInPandas(run, output_schema)
@@ -883,8 +975,8 @@ def process_streaming(
     through, so a 1-row update to a huge store is O(delta), not O(store).
     Recovery comes from Spark's checkpoint (SURVEY.md §3.2). Within each
     micro-batch the key's records replay in event-time order; across
-    batches the store persists. Stream-time punctuators fire during replay
-    exactly as in batch mode.
+    batches the store persists. The per-key body and the named-store blob
+    layout are described in the module docstring.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -894,48 +986,19 @@ def process_streaming(
     empty = _empty_output(output_schema)
 
     def run(key_vals, pdf_iter: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        raw = state.get[0] if (state.exists and state.get[0]) else None
-        extra_blobs: dict = {}
-        if raw is not None:
-            # multi-store wrapper (written only when a processor used
-            # get_store): b"MST1" + pickle((primary_blob, {name: blob}))
-            if raw[:4] == b"MST1":
-                raw, extra_blobs = pickle.loads(raw[4:])
-                extra_blobs = dict(extra_blobs)
-            store, fires, wc_fires = SegmentedKeyValueStore.from_blob(
-                raw, ttl_seconds
-            )
+        if state.exists and state.get[0]:
+            raw, extra_blobs = _unpack_store_blobs(state.get[0])
+            store, *fires = SegmentedKeyValueStore.from_blob(raw, ttl_seconds)
         else:
-            store, fires, wc_fires = SegmentedKeyValueStore(ttl_seconds), [], []
-        proc = processor_factory()
+            store, fires = SegmentedKeyValueStore(ttl_seconds), ((), ())
+            extra_blobs = {}
         ctx = ProcessorContext(key_vals, store)
         ctx._extra_blobs = extra_blobs
-        proc.init(ctx)
-        for t, nf in zip(ctx._timers, fires):
-            t.next_fire = nf
-        for t, nf in zip(ctx._wc_timers, wc_fires):
-            t.next_fire = nf
-        for pdf in pdf_iter:
-            _replay(proc, ctx, pdf, ts_col, order_by)
-        import time as _time
-
-        ctx._fire_wall_clock(_time.time())
-        proc.close(ctx)
-        payload = store.to_blob(
-            [t.next_fire for t in ctx._timers],
-            [t.next_fire for t in ctx._wc_timers],
+        fires = _run_key(
+            processor_factory(), ctx, pdf_iter, ts_col, order_by,
+            fires=fires, now=time.time(),
         )
-        # named stores: untouched restored blobs pass through byte-for-byte
-        # (delta-flush across stores, not just within one)
-        if ctx._extra_stores or ctx._extra_blobs:
-            extras = dict(ctx._extra_blobs)
-            extras.update(
-                {n: st.to_blob() for n, st in ctx._extra_stores.items()}
-            )
-            payload = b"MST1" + pickle.dumps(
-                (payload, extras), protocol=pickle.HIGHEST_PROTOCOL
-            )
-        state.update((payload,))
+        state.update((_pack_store_blobs(store.to_blob(*fires), ctx),))
         out = ctx._to_pdf()
         yield empty if out.empty else out
 
@@ -1230,12 +1293,10 @@ def process_streaming_tws_map(
 
         def handleInputRows(self, key_vals, rows, timer_values):
             store = TwsMapStateStore(self._map, ttl)
-            fires: list = []
-            wc_fires: list = []
+            fires = ((), ())
             meta = self._meta.get()
             if meta is not None and meta[0]:
-                store.stream_time, fires, wc_fires = pickle.loads(meta[0])
-            proc = factory()
+                store.stream_time, *fires = pickle.loads(meta[0])
             ctx = ProcessorContext(tuple(key_vals), store)
             # pre-register the declared named stores as live map adapters:
             # ctx.get_store(name) returns these instead of creating a
@@ -1244,7 +1305,12 @@ def process_streaming_tws_map(
                 st = TwsMapStateStore(ms, ttl)
                 st.stream_time = store.stream_time
                 ctx._extra_stores[n] = st
-            proc.init(ctx)
+            fires = _run_key(
+                factory(), ctx, rows, ts_col, order_by,
+                fires=fires, now=time.time(),
+            )
+            # _extra_stores only grows, so one check after close also
+            # covers a store named in init
             undeclared = set(ctx._extra_stores) - set(extra_names)
             if undeclared:
                 raise NotImplementedError(
@@ -1253,36 +1319,15 @@ def process_streaming_tws_map(
                     "store_names=[...] (the KS addStateStore shape) or use "
                     "the blob lanes"
                 )
-            for t, nf in zip(ctx._timers, fires):
-                t.next_fire = nf
-            for t, nf in zip(ctx._wc_timers, wc_fires):
-                t.next_fire = nf
-            for pdf in rows:
-                _replay(proc, ctx, pdf, ts_col, order_by)
-            import time as _time
-
-            ctx._fire_wall_clock(_time.time())
-            proc.close(ctx)
-            undeclared = set(ctx._extra_stores) - set(extra_names)
-            if undeclared:
-                raise NotImplementedError(
-                    f"store(s) {sorted(undeclared)} not declared: pass "
-                    "store_names=[...] or use the blob lanes"
-                )
             # write-back flush: each touched entry hits the state server
             # ONCE with its final value (the per-record get/put round
             # trips were absorbed by the cache)
-            store.flush()
-            for st in ctx._extra_stores.values():
+            for st in ctx._all_stores():
                 st.flush()
             self._meta.update(
                 (
                     pickle.dumps(
-                        (
-                            store.stream_time,
-                            [t.next_fire for t in ctx._timers],
-                            [t.next_fire for t in ctx._wc_timers],
-                        ),
+                        (store.stream_time, *fires),
                         protocol=pickle.HIGHEST_PROTOCOL,
                     ),
                 )
@@ -1324,16 +1369,8 @@ def process_streaming_partitioned(
     still reads the partition's segments; size partitions accordingly
     (this is exactly the reference's per-partition state shape). ctx.key
     is ``(partition_id,)``; records carry their own key columns."""
-    from pyspark.sql import functions as F  # local: keep module import-light
-
-    keys = list(key)
-    if partitioner is None:
-        partitioner = F.pmod(
-            F.hash(*[F.col(k) for k in keys]), F.lit(int(num_partitions))
-        )
-    tagged = sdf.withColumn(_PART_COL, partitioner.cast("int"))
     return process_streaming(
-        tagged,
+        _tag_partitions(sdf, list(key), num_partitions, partitioner),
         key=[_PART_COL],
         processor_factory=processor_factory,
         output_schema=output_schema,

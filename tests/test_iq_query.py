@@ -94,7 +94,7 @@ def test_point_range_prefix_queries(spark, workdir):
     assert [(r.user_id, r.store_value) for r in other] == [(2, "40")]
 
     # full-scan view still works (store.all() across keys)
-    allrows = iq.read_processor_state(spark, ck, ["user_id"]).collect()
+    allrows = iq.query_processor_state(spark, ck, ["user_id"]).collect()
     assert len(allrows) == 4 + 2  # key1: n + 3 buckets; key2: n + 1 bucket
     drv.close()
 

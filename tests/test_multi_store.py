@@ -102,10 +102,13 @@ def test_streaming_multi_store_restarts_and_iq(spark, tmp_path):
     drv.close()
 
 
-def test_untouched_named_store_blob_passes_through():
-    """Multi-store delta property at the blob level: a batch that only
-    touches the default store re-emits the named store's restored blob
-    byte-for-byte (no unpickle/re-pickle of the untouched store)."""
+def test_untouched_named_store_blob_passes_through(monkeypatch):
+    """Multi-store delta property at the blob level: a batch of the
+    GroupState lane that only touches the default store re-emits the
+    named store's restored blob byte-for-byte, without decoding it (no
+    unpickle/re-pickle of the untouched store)."""
+    import pandas as pd
+
     from responsive_pub_spark.streaming.segstore import SegmentedKeyValueStore
 
     big = SegmentedKeyValueStore()
@@ -113,19 +116,63 @@ def test_untouched_named_store_blob_passes_through():
         big.put(i, i, ts=0.0)
     big.compact()
     big_blob = big.to_blob()
+    primary = SegmentedKeyValueStore().to_blob()
 
-    ctx = state.ProcessorContext(("k",), SegmentedKeyValueStore())
-    ctx._extra_blobs = {"big": big_blob}
-    ctx.store.put("n", 1)
-    # simulate the runner's flush: only touched stores serialize
-    extras = dict(ctx._extra_blobs)
-    extras.update({n: st.to_blob() for n, st in ctx._extra_stores.items()})
-    assert extras["big"] is big_blob  # identity: zero bytes re-pickled
+    class _Capture:  # stands in for the streaming DataFrame
+        def groupBy(self, *keys):  # noqa: N802
+            return self
+
+        def applyInPandasWithState(self, fn, *args):  # noqa: N802
+            self.fn = fn
+
+    class _State:
+        exists = True
+
+        def __init__(self, blob):
+            self.get = (blob,)
+
+        def update(self, value):
+            self.get = value
+
+    class _DefaultOnly(state.Processor):
+        def process(self, ctx, rec):
+            ctx.store.put("n", (ctx.store.get("n") or 0) + 1)
+
+    decoded = []
+    from_blob = SegmentedKeyValueStore.from_blob.__func__
+
+    def counting_from_blob(cls, blob, *a):
+        decoded.append(blob)
+        return from_blob(cls, blob, *a)
+
+    monkeypatch.setattr(
+        SegmentedKeyValueStore, "from_blob", classmethod(counting_from_blob)
+    )
+    cap = _Capture()
+    state.process_streaming(
+        cap, ["k"], _DefaultOnly, "k STRING", ts_col="ts"
+    )
+    gs = _State(
+        state._pack_store_blobs(primary, _ctx_with_blobs({"big": big_blob}))
+    )
+    list(cap.fn(("a",), iter([pd.DataFrame({"k": ["a"], "ts": [1.0]})]), gs))
+    assert decoded == [primary]  # only the default store was restored
+    assert state._open_store_blob(gs.get[0], "big") == big_blob
+    monkeypatch.undo()
 
     # and once touched, it restores lazily and round-trips
+    ctx = _ctx_with_blobs({"big": big_blob})
     st = ctx.get_store("big")
     assert st.get(42) == 42
     assert "big" not in ctx._extra_blobs  # blob consumed by the restore
+
+
+def _ctx_with_blobs(blobs: dict) -> "state.ProcessorContext":
+    from responsive_pub_spark.streaming.segstore import SegmentedKeyValueStore
+
+    ctx = state.ProcessorContext(("k",), SegmentedKeyValueStore())
+    ctx._extra_blobs = dict(blobs)
+    return ctx
 
 
 def test_get_store_default_is_primary():

@@ -5,6 +5,7 @@ empty table fails with a clear message."""
 from __future__ import annotations
 
 import threading
+import warnings
 
 import pytest
 from pyspark.errors import StreamingQueryException
@@ -32,6 +33,29 @@ def test_run_concurrent_raises_every_failed_thunk(spark):
     assert [str(e) for e in errs] == ["drain a", "drain b"]
     assert "2 of 3" in str(info.value)
     assert ran.is_set()  # the healthy sibling still ran to completion
+
+
+def test_run_concurrent_threads_inherit_session_tags(spark):
+    """Each drain thread sees the driver thread's session tags, so
+    ``interruptTag`` reaches concurrent drains, and PySpark's
+    "no session, tags not inherited" warning is not raised."""
+    seen: list[set] = []
+
+    def record():
+        seen.append(set(spark.getTags()))
+
+    spark.addTag("drain-tag")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            run_concurrent(record, record, record)
+    finally:
+        spark.removeTag("drain-tag")
+    assert len(seen) == 3
+    assert all("drain-tag" in tags for tags in seen), seen
+    assert not [
+        w for w in caught if "Tags will not be inherited" in str(w.message)
+    ]
 
 
 def test_run_concurrent_single_thunk_raises_its_own_error():

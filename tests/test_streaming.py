@@ -259,7 +259,7 @@ def test_interactive_query_reads_live_store(spark, workdir):
         ]
     )
     drv.advance()
-    st = iq.read_processor_state(spark, drv.checkpoint, ["user_id"])
+    st = iq.query_processor_state(spark, drv.checkpoint, ["user_id"])
     rows = {(r.user_id, r.store_key): r.store_value for r in st.collect()}
     assert rows == {(1, "'n'"): "2", (2, "'n'"): "1"}
     drv.close()
