@@ -72,7 +72,10 @@ from pyspark.sql import functions as F
 from responsive_pub_spark.operators.pipeline_ops import (
     mixture_resample_tokens,
 )
-from responsive_pub_spark.streaming.commitlog import publish_pointer
+from responsive_pub_spark.streaming.commitlog import (
+    chaos_kill_hook,
+    publish_pointer,
+)
 from responsive_pub_spark.streaming.decontam_stream import DecontamStreaming
 from responsive_pub_spark.streaming.dedup_stream import (
     DOCS_SCHEMA,
@@ -87,12 +90,9 @@ from responsive_pub_spark.streaming.handoff import (
 from responsive_pub_spark.streaming.mixture_stream import MixtureStreaming
 from responsive_pub_spark.streaming.pack_ids_stream import PackIdsStreaming
 from responsive_pub_spark.streaming.pack_stream import PackStreaming
-from responsive_pub_spark.streaming.shard_stream import (
-    ShardStreaming,
-    _chaos_kill_env,
-)
+from responsive_pub_spark.streaming.shard_stream import ShardStreaming
 
-_chaos_kill = _chaos_kill_env("SPARK_GRAFT_HANDOFF_KILL")
+_chaos_kill = chaos_kill_hook("SPARK_GRAFT_HANDOFF_KILL")
 
 
 def _leg_chaos(leg: str):

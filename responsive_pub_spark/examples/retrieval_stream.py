@@ -60,16 +60,18 @@ from responsive_pub_spark.streaming.dedup_stream import (
     DOCS_SCHEMA,
     NearDupStreaming,
 )
-from responsive_pub_spark.streaming.commitlog import publish_pointer
+from responsive_pub_spark.streaming.commitlog import (
+    chaos_kill_hook,
+    publish_pointer,
+)
 from responsive_pub_spark.streaming.handoff import (
     StampedTopic,
     assert_handoff_layout,
     read_marker,
     ship,
 )
-from responsive_pub_spark.streaming.shard_stream import _chaos_kill_env
 
-_chaos_kill = _chaos_kill_env("SPARK_GRAFT_HANDOFF_KILL")
+_chaos_kill = chaos_kill_hook("SPARK_GRAFT_HANDOFF_KILL")
 
 
 def _leg_chaos(leg: str):

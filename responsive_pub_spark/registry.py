@@ -3469,7 +3469,8 @@ REGISTRY: dict[str, QuerySpec] = {
             _t(spark, sf_dir, "events")
         ),
         timeseries.json_envelope_audit_oracle(),
-        doc="schema-on-read envelope AUDIT: per (event_type, key) presence, "
+        doc="schema-on-read envelope AUDIT (the generalization past "
+        "json_props_rollup's fixed $.k path): per (event_type, key) presence, "
         "JSON-null count, and type histogram via Spark 4 VARIANT expressions "
         "(try_parse_json + json_object_keys + variant_get/schema_of_variant, "
         "all JVM-side, one keyed agg); DuckDB oracle via json_keys/json_type "

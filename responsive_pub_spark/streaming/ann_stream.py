@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from responsive_pub_spark.operators import similarity
 from responsive_pub_spark.streaming.commitlog import (
     VersionedSnapshot,
+    chaos_kill_hook,
     maintenance_lock,
 )
 from responsive_pub_spark.streaming.runtime import run_to_sink
@@ -57,20 +58,7 @@ LISTS_SCHEMA = "vec_id BIGINT, embedding ARRAY<FLOAT>, cid BIGINT, ccos DOUBLE"
 CODES_SCHEMA = "vec_id BIGINT, n2 DOUBLE, m INT, code BIGINT, cid BIGINT"
 
 
-def _chaos_kill(label: str) -> None:
-    """SIGKILL self at a named retrain stage — DOUBLE opt-in (the
-    dedup_stream._chaos_gate contract): requires BOTH
-    SPARK_GRAFT_CHAOS_ENABLE=1 and SPARK_GRAFT_ANN_KILL=<label>, so a
-    leftover env var alone can never kill a production run. Used by
-    tests/test_chaos_sigkill.py to land a crash inside every window of
-    the retrain publish protocol."""
-    if (
-        os.environ.get("SPARK_GRAFT_CHAOS_ENABLE") == "1"
-        and os.environ.get("SPARK_GRAFT_ANN_KILL") == label
-    ):
-        import signal
-
-        os.kill(os.getpid(), signal.SIGKILL)
+_chaos_kill = chaos_kill_hook("SPARK_GRAFT_ANN_KILL")
 
 
 class IvfIncremental:

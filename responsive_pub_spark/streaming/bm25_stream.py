@@ -67,11 +67,11 @@ from responsive_pub_spark.operators.textops import (
 )
 from responsive_pub_spark.streaming.commitlog import (
     VersionedSnapshot,
+    chaos_kill_hook,
     maintenance_lock,
 )
 from responsive_pub_spark.streaming.kv_sink import KeyValueTableSink
 from responsive_pub_spark.streaming.runtime import run_concurrent, run_to_sink
-from responsive_pub_spark.streaming.shard_stream import _chaos_kill_env
 
 DOCS_SCHEMA = "doc_id BIGINT, text STRING"
 POSTINGS_SCHEMA = "doc_id BIGINT, w STRING, tf BIGINT, dl BIGINT"
@@ -79,7 +79,7 @@ POSTINGS_SCHEMA = "doc_id BIGINT, w STRING, tf BIGINT, dl BIGINT"
 #: the same whitespace tokenization as textops.bm25_topk
 _ARR = "filter(split(text, '\\\\s+'), x -> x != '')"
 
-_chaos_kill = _chaos_kill_env("SPARK_GRAFT_BM25_KILL")
+_chaos_kill = chaos_kill_hook("SPARK_GRAFT_BM25_KILL")
 
 
 class Bm25Streaming:

@@ -1,4 +1,5 @@
-"""Crash-safe publish primitives shared by every maintained table.
+"""Crash-safe commit primitives shared by every maintained table, sink and
+topic.
 
 **Versioned-snapshot publish** (:class:`VersionedSnapshot`). A
 maintained table that is rewritten as a whole (a compacted base, a
@@ -31,18 +32,46 @@ Publish and GC are single-maintainer BY MECHANISM: callers hold
 never GC (a reader collecting while a maintainer has a version staged
 would delete it right before the flip).
 
+**Staged-rename commit** (:func:`staged_rename`). An entry whose NAME is
+its commit point — a commit-log marker, a KV-sink delta or compaction
+fold, a handoff wave directory, the frozen tokenizer — is committed in
+the same steps everywhere:
+
+1. clear the stage (a crashed attempt's leftover);
+2. the caller writes the entry into the stage;
+3. ``fsync_tree`` the stage; the caller's chaos hook fires;
+4. ``os.rename`` the stage onto the target name (run through the
+   caller's ``place`` when the rename must hold a lock, as a handoff into
+   a stamped topic does), then ``fsync_dir`` the target's parent.
+
+A crash lands in one of two windows. Before the rename (mid-write or
+staged, steps 2-3) the target does not exist, readers never look at the
+stage, and the rerun clears it and writes the same entry again. After
+the rename the entry exists complete — step 3 makes that hold across
+power loss as well, so the committed name never outlives torn contents
+— and only the caller's own later steps (a handoff's marker publish)
+are left for the replay, which the committed name lets it skip.
+
 **Delta+marker commit log** (:class:`DeltaCommitLog`), the exactly-once
 substrate of the incremental exporters (``shard_stream``,
 ``pack_stream``, ``pack_ids_stream``): each micro-batch writes
 ``delta-{batch}`` and then commits ``total-{batch}`` (the carried
-totals) by an fsynced ``.tmp`` write and one ``os.rename`` — the marker
-is the commit point, a redelivered batch whose marker exists is
-skipped, and a torn attempt is overwritten on replay. ``compact()``
-folds the committed tail into a ``base-vNNNNNN`` snapshot through the
-versioned publish above, so readers list one base plus the tail instead
-of one path per batch ever committed. Reference anchor: changelog
-truncation after flush and offset fencing
-(kafka-client internal/stores/CommitBuffer.java:97,340-423,480).
+totals) through the staged-rename commit above, staged at
+``total-{batch}.parquet.tmp`` — the marker is the commit point, a
+redelivered batch whose marker exists is skipped, and a torn attempt is
+overwritten on replay. ``compact()`` folds the committed tail into a
+``base-vNNNNNN`` snapshot through the versioned publish above, so
+readers list one base plus the tail instead of one path per batch ever
+committed. Reference anchor: changelog truncation after flush and
+offset fencing (kafka-client internal/stores/CommitBuffer.java:97,
+340-423,480).
+
+**Exclusive flock** (:func:`exclusive_flock`): the non-blocking lock
+behind both single-writer contracts, the maintenance side
+(:func:`maintenance_lock`) and a file topic's ingest. **Chaos hooks**:
+:func:`chaos_kill_hook` builds a lane's SIGKILL-self hook for the named
+windows above, and :func:`chaos_stall` parks a Python worker mid-batch;
+both are double opt-in behind ``SPARK_GRAFT_CHAOS_ENABLE=1``.
 """
 
 from __future__ import annotations
@@ -51,6 +80,8 @@ import fcntl
 import os
 import re
 import shutil
+import signal
+import time
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -86,12 +117,10 @@ def fsync_tree(path: str) -> None:
 
 
 @contextmanager
-def maintenance_lock(lock_path: str, what: str):
-    """Exclusive non-blocking maintenance flock (the _FileTopicMixin
-    ingest-lock posture applied to the MAINTENANCE side): compaction /
-    GC / versioned publish is single-maintainer BY MECHANISM, not by
-    convention — a second concurrent maintainer fails LOUDLY instead of
-    interleaving writes into the same staged version. Reference anchor:
+def exclusive_flock(lock_path: str, busy: str):
+    """Exclusive non-blocking flock on ``lock_path`` for the body: a
+    second holder fails LOUDLY with ``RuntimeError(busy)`` instead of
+    interleaving its writes with the first. Reference anchor:
     internal/db/LwtWriter.java:29-95 (fencing is mechanical, never
     documentation)."""
     fd = os.open(lock_path, os.O_CREAT | os.O_RDWR)
@@ -99,15 +128,87 @@ def maintenance_lock(lock_path: str, what: str):
         try:
             fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
         except OSError:
-            raise RuntimeError(
-                f"concurrent {what}: another maintainer holds "
-                f"{lock_path}; compaction/GC is single-maintainer "
-                "(two racers would interleave writes into the same "
-                "staged version)"
-            )
+            raise RuntimeError(busy)
         yield
     finally:
         os.close(fd)  # releases the flock
+
+
+def maintenance_lock(lock_path: str, what: str):
+    """The maintenance side's :func:`exclusive_flock`: compaction / GC /
+    versioned publish is single-maintainer BY MECHANISM, not by
+    convention — a second concurrent maintainer fails instead of
+    interleaving writes into the same staged version."""
+    return exclusive_flock(
+        lock_path,
+        f"concurrent {what}: another maintainer holds "
+        f"{lock_path}; compaction/GC is single-maintainer "
+        "(two racers would interleave writes into the same "
+        "staged version)",
+    )
+
+
+def chaos_kill_hook(env_var: str):
+    """Build a lane's SIGKILL-self hook (label -> None) for the chaos
+    e2e suites. DOUBLE opt-in: it kills only when BOTH
+    ``SPARK_GRAFT_CHAOS_ENABLE=1`` and ``env_var=<label>`` are set, so a
+    leftover env var alone can never kill a production run. Each lane
+    has its OWN ``env_var`` (e.g. ``SPARK_GRAFT_SHARD_KILL``,
+    ``SPARK_GRAFT_PACK_KILL``), so a composed pipeline running several
+    lanes in one process arms exactly the lane under test."""
+
+    def chaos(label: str) -> None:
+        if (
+            os.environ.get("SPARK_GRAFT_CHAOS_ENABLE") == "1"
+            and os.environ.get(env_var) == label
+        ):
+            os.kill(os.getpid(), signal.SIGKILL)
+
+    return chaos
+
+
+def chaos_stall() -> None:
+    """Worker-side fault injection for the chaos e2e suites, called at
+    the top of a stateful stage's per-group function. DOUBLE opt-in:
+    with ``SPARK_GRAFT_CHAOS_ENABLE=1`` and
+    ``SPARK_GRAFT_CHAOS_STALL=<workdir>``, once ``<workdir>/armed``
+    exists the worker touches ``<workdir>/inflight`` and sleeps, so the
+    test can SIGKILL the process group while the stage is MID-BATCH (the
+    reference's examples inject failures mid-processing,
+    STJoinExample.java:81-88). The ``exists`` probe runs only once both
+    variables are set; in production the cost per group is one
+    getenv."""
+    if os.environ.get("SPARK_GRAFT_CHAOS_ENABLE") != "1":
+        return
+    workdir = os.environ.get("SPARK_GRAFT_CHAOS_STALL")
+    if workdir and os.path.exists(os.path.join(workdir, "armed")):
+        open(os.path.join(workdir, "inflight"), "a").close()
+        time.sleep(300)
+
+
+@contextmanager
+def staged_rename(target: str, stage: str, chaos=None, label=None,
+                  place=None):
+    """The staged-rename commit of ``target`` (see module docstring).
+    Clears ``stage`` and yields it; the body writes the entry there.
+    When the body returns: ``fsync_tree(stage)``, ``chaos(label)`` (if a
+    hook is given), ``os.rename(stage, target)`` — called as
+    ``place(rename)`` when ``place`` is given — and ``fsync_dir`` of the
+    target's parent. A body that raises renames nothing."""
+    shutil.rmtree(stage, ignore_errors=True)
+    yield stage
+    fsync_tree(stage)
+    if chaos is not None:
+        chaos(label)
+
+    def rename() -> None:
+        os.rename(stage, target)
+
+    if place is None:
+        rename()
+    else:
+        place(rename)
+    fsync_dir(os.path.dirname(target) or ".")
 
 
 def publish_pointer(path: str, value: str) -> None:
@@ -304,18 +405,15 @@ class DeltaCommitLog:
         )
 
     def commit_marker(self, batch_id: int, totals: DataFrame) -> None:
-        """ATOMIC marker commit: stage the totals under ``.tmp``, then
-        one ``os.rename`` into the final name. The rename is the commit
-        point — a SIGKILL anywhere before it leaves the batch
-        uncommitted (the tmp dir is never counted and is GC'd)."""
+        """ATOMIC marker commit through :func:`staged_rename`, staged
+        under ``.tmp``. The rename is the commit point — a SIGKILL
+        anywhere before it leaves the batch uncommitted (the tmp dir is
+        never counted and is GC'd)."""
         final = self.marker_path(batch_id)
-        tmp = final + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        totals.coalesce(1).write.mode("overwrite").parquet(tmp)
-        fsync_tree(tmp)  # contents durable BEFORE the name (power loss)
-        self.chaos("mid-marker")
-        os.rename(tmp, final)
-        fsync_dir(self.log_dir)
+        with staged_rename(
+            final, final + ".tmp", self.chaos, "mid-marker"
+        ) as stage:
+            totals.coalesce(1).write.mode("overwrite").parquet(stage)
 
     def latest_totals(self, batch_id: int) -> "DataFrame | None":
         """The carried-totals snapshot as of the latest commit below

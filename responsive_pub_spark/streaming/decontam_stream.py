@@ -80,6 +80,7 @@ from responsive_pub_spark.functions import text as T
 from responsive_pub_spark.functions.portable import pround
 from responsive_pub_spark.streaming.commitlog import (
     VersionedSnapshot,
+    chaos_kill_hook,
     fsync_dir,
     maintenance_lock,
     publish_pointer,
@@ -92,12 +93,11 @@ from responsive_pub_spark.streaming.handoff import (
     ship,
 )
 from responsive_pub_spark.streaming.runtime import run_concurrent, run_to_sink
-from responsive_pub_spark.streaming.shard_stream import _chaos_kill_env
 
 #: SIGKILL-self hook for the decision-rebuild chaos e2e
 #: (tests/test_chaos_r14.py) — double opt-in, own label env var so a
 #: composed pipeline arms exactly the lane under test
-_chaos_kill = _chaos_kill_env("SPARK_GRAFT_DECONTAM_KILL")
+_chaos_kill = chaos_kill_hook("SPARK_GRAFT_DECONTAM_KILL")
 
 DOCS_SCHEMA = "doc_id BIGINT, text STRING"
 CORPUS_POSTINGS_SCHEMA = "doc_id BIGINT, n_shingles BIGINT, h BIGINT"
@@ -156,11 +156,7 @@ class DecontamStreaming:
         writes then costs at worst one spurious rebuild, where the
         reverse order would leave the decision table silently stale for
         this benchmark."""
-        with open(self.rebuild_flag, "w") as f:
-            f.write("1")
-            f.flush()
-            os.fsync(f.fileno())
-        fsync_dir(self.decision_dir)
+        publish_pointer(self.rebuild_flag, "1")
         evals.select("doc_id", "text").write.mode("append").parquet(
             self.evals_dir
         )

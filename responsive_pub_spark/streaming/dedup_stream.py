@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from responsive_pub_spark.operators import dedup
+from responsive_pub_spark.streaming.commitlog import chaos_stall
 from responsive_pub_spark.streaming.runtime import run_to_sink
 
 DOCS_SCHEMA = "doc_id BIGINT, text STRING, ts DOUBLE"
@@ -119,26 +120,6 @@ def _bucket_stage(
     )
 
 
-def _chaos_gate() -> None:
-    """Test-only fault-injection hook, OUT of the bucket fn's body (r8
-    ADVICE): a separately patchable module function. DOUBLE opt-in (the
-    regroup stage-B pattern): both the explicit enable flag AND the
-    workdir env var must be set; tests/test_chaos_sigkill.py arms this to
-    SIGKILL the process group while the bucket stage is MID-BATCH, after
-    query S committed this advance's signatures. In production neither
-    env var exists, so the cost per GROUP batch is one getenv."""
-    chaos = (
-        os.environ.get("SPARK_GRAFT_CHAOS_STALL")
-        if os.environ.get("SPARK_GRAFT_CHAOS_ENABLE") == "1"
-        else None
-    )
-    if chaos and os.path.exists(os.path.join(chaos, "armed")):
-        open(os.path.join(chaos, "inflight"), "a").close()
-        import time as _time
-
-        _time.sleep(300)
-
-
 def _make_bucket_fn(
     retention: float | None,
     probe_depth: int | None,
@@ -158,7 +139,7 @@ def _make_bucket_fn(
         )
 
     def run(key_vals, pdf_iter, state_h):
-        _chaos_gate()
+        chaos_stall()
         if continuous and state_h.hasTimedOut:
             # the watermark passed (bucket_max_ts + retention) with no new
             # arrival: reap the whole bucket — the continuous-runner twin

@@ -17,16 +17,15 @@ r12 verdict. This module replaces that with a CARRIED HANDOFF WATERMARK
 - an advance ships ONLY the source files with stamp > upto — the
   handoff reads O(new-work) files, never wave-1 data again — as ONE
   deterministic destination DIRECTORY ``part-handoff-{S}.parquet/``
-  (S = the highest source stamp covered), placed by an atomic
-  ``os.rename`` of a multi-part staged write (r13 verdict task 2: the
-  wave's build and write run at full parallelism — the previous
-  protocol funneled every wave through ``coalesce(1)``, one writer
-  task for a potentially backfill-sized wave);
+  (S = the highest source stamp covered), placed by the staged-rename
+  commit of the ``commitlog`` module docstring over a multi-part staged
+  write (r13 verdict task 2: the wave's build and write run at full
+  parallelism — the previous protocol funneled every wave through
+  ``coalesce(1)``, one writer task for a potentially backfill-sized
+  wave);
 - exactly-once across a crash ANYWHERE: the destination directory
-  either exists complete (the rename is the commit point; every staged
-  data file and the staging directory are fsynced BEFORE the rename,
-  so the committed name can never outlive torn contents even across
-  power loss) or not at all. A replay recomputes the effective
+  either exists complete (the rename is the commit point, durable
+  across power loss) or not at all. A replay recomputes the effective
   watermark as ``max(marker, highest S among existing part-handoff
   names)`` — so a crash between the rename and the marker publish
   skips the re-ship (the directory's name proves its coverage), and a
@@ -80,12 +79,14 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from responsive_pub_spark.streaming.commitlog import (
-    fsync_dir,
-    fsync_tree,
     publish_pointer,
     read_pointer,
+    staged_rename,
 )
-from responsive_pub_spark.streaming.shard_stream import _FileTopicMixin
+from responsive_pub_spark.streaming.shard_stream import (
+    _FileTopicMixin,
+    _stamp_inner,
+)
 
 __all__ = [
     "StampedTopic",
@@ -165,14 +166,9 @@ def _assert_leg_owner(dest_dir: str, marker_path: str) -> None:
     every later ship asserts it matches."""
     owner_path = os.path.join(dest_dir, ".leg-owner")
     leg = os.path.basename(marker_path)
-    try:
-        with open(owner_path) as f:
-            owner = f.read().strip()
-    except FileNotFoundError:
-        owner = ""
-    if not owner:
-        with open(owner_path, "w") as f:
-            f.write(leg)
+    owner = read_pointer(owner_path)
+    if owner is None:
+        publish_pointer(owner_path, leg)
         return
     if owner != leg:
         raise RuntimeError(
@@ -271,19 +267,20 @@ def ship(
         os.path.dirname(dest_dir.rstrip("/")),
         f".handoff-stage-{S:020d}",
     )
-    rows.write.mode("overwrite").parquet(stage)
-    fsync_tree(stage)
-    chaos("handoff-staged")
+    # the staged write runs outside any lock; only the rename goes
+    # through the destination topic's ingest lock + stamp sequence (one
+    # handoff directory == one wave for every lane reading the shared
+    # topic) — a concurrent ingest would fail on the non-blocking lock
+    with staged_rename(
+        target,
+        stage,
+        chaos,
+        "handoff-staged",
+        place=None if dest_topic is None else dest_topic.append,
+    ):
+        rows.write.mode("overwrite").parquet(stage)
     if dest_topic is not None:
-        # placement goes through the destination topic's ingest lock +
-        # stamp sequence (one handoff directory == one wave for every
-        # lane reading the shared topic)
-        dest_topic.append(lambda: os.rename(stage, target))
         _stamp_inner(target)
-    else:
-        os.rename(stage, target)
-    fsync_dir(dest_dir)
-    shutil.rmtree(stage, ignore_errors=True)  # replay leftovers only
     chaos("handoff-placed")
     publish_pointer(marker_path, str(S))
     return {
@@ -292,19 +289,3 @@ def ship(
         "source_files": [p for _, p in new],
     }
 
-
-def _stamp_inner(target: str) -> None:
-    """Stamp a committed handoff directory's inner part files onto the
-    directory's own stamp (+1ms per file in name order) so a
-    file-granular streaming consumer (``maxFilesPerTrigger=1`` with
-    ``recursiveFileLookup``) processes waves in stamp order with a
-    deterministic within-wave file order. ``_FileTopicMixin._restamp_all``
-    re-applies the same normalization at construction, healing a crash
-    between the rename and this loop."""
-    base = os.path.getmtime(target)
-    inner = sorted(n for n in os.listdir(target) if n.startswith("part-"))
-    for i, n in enumerate(inner, start=1):
-        stamp = base + i * 0.001
-        p = os.path.join(target, n)
-        if os.path.getmtime(p) != stamp:
-            os.utime(p, (stamp, stamp))

@@ -8,7 +8,8 @@ the same guarded batch, and uses that offset to make redelivery a no-op
 Spark-first analog for `update`-mode streaming output (a KTable changelog):
 
 - each micro-batch's rows are written as ONE immutable delta file
-  ``delta-{batch_id}.parquet`` (the flushed write batch);
+  ``delta-{batch_id}.parquet`` (the flushed write batch), committed by
+  the staged-rename commit of the ``commitlog`` module docstring;
 - the batch id doubles as the committed offset: a redelivered batch id is
   detected (its delta file already exists) and skipped — same observable
   semantics as the reference's offset check, no epoch CAS needed because the
@@ -37,9 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from responsive_pub_spark.streaming.commitlog import (
-    fsync_dir,
-    fsync_tree,
     maintenance_lock,
+    staged_rename,
 )
 
 
@@ -82,18 +82,12 @@ class KeyValueTableSink:
             return
         target = self._delta_dir(batch_id)
         cols = self.key_cols + self.value_cols + ([self.ts_col] if self.ts_col else [])
-        staged = target + ".staging"
-        shutil.rmtree(staged, ignore_errors=True)
-        bdf.select(*cols).withColumn("_batch_id", F.lit(int(batch_id))).write.mode(
-            "overwrite"
-        ).parquet(staged)
-        # atomic publish: the rename IS the commit point; a crash before it
-        # leaves only staging, which the retry overwrites deterministically.
-        # Contents durable first, so a power loss never keeps the name
-        # over torn data
-        fsync_tree(staged)
-        os.rename(staged, target)
-        fsync_dir(self.path)
+        # the rename IS the commit point; a crash before it leaves only
+        # staging, which the retry clears and rewrites deterministically
+        with staged_rename(target, target + ".staging") as staged:
+            bdf.select(*cols).withColumn(
+                "_batch_id", F.lit(int(batch_id))
+            ).write.mode("overwrite").parquet(staged)
 
     # -- read side -------------------------------------------------------
 
@@ -193,8 +187,6 @@ class KeyValueTableSink:
             target = os.path.join(
                 self.path, f"delta-{max_id:020d}.g{gen}.parquet"
             )
-            staged = target + ".compacting"
-            shutil.rmtree(staged, ignore_errors=True)
             out = self._latest(spark, files).withColumn(
                 "_batch_id", F.lit(max_id)
             )
@@ -203,9 +195,8 @@ class KeyValueTableSink:
                 out = out.withColumn(
                     self.ts_col, F.lit(None).cast(ts_type)
                 )
-            out.write.mode("overwrite").parquet(staged)
-            fsync_tree(staged)
-            os.rename(staged, target)  # commit point: fold now visible
-            fsync_dir(self.path)
+            # commit point on exit: the fold becomes visible
+            with staged_rename(target, target + ".compacting") as staged:
+                out.write.mode("overwrite").parquet(staged)
             for f in files:
                 shutil.rmtree(f, ignore_errors=True)

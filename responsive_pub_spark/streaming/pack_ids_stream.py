@@ -11,7 +11,8 @@ composing the FROZEN-tokenizer replay (``bpe.segment_tokens_with_merges``
 
 - the tokenizer is FROZEN at construction (the IvfIncremental centroids
   pattern): the merge table, the fit vocab's segmentation map, and the
-  token->id vocab table are written once under ``workdir/tokenizer``;
+  token->id vocab table are written once under ``workdir/tokenizer``
+  through the staged-rename commit (``commitlog`` module docstring);
   restarts read the frozen copy. Ids are ``bpe_token_ids``'s contract —
   contiguous ranks in symbol lexicographic order over the learned
   inventory — so they are stable across waves by construction.
@@ -44,7 +45,6 @@ is the per-lang totals table; the commit log compacts.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,14 +57,11 @@ from responsive_pub_spark.operators.pipeline_ops import (
 )
 from responsive_pub_spark.streaming.commitlog import (
     DeltaCommitLog,
-    fsync_dir,
-    fsync_tree,
+    chaos_kill_hook,
+    staged_rename,
 )
 from responsive_pub_spark.streaming.runtime import run_to_sink
-from responsive_pub_spark.streaming.shard_stream import (
-    _chaos_kill_env,
-    _FileTopicMixin,
-)
+from responsive_pub_spark.streaming.shard_stream import _FileTopicMixin
 
 DOCS_SCHEMA = "doc_id BIGINT, lang STRING, text STRING"
 IDS_SCHEMA = "lang STRING, seq_id BIGINT, pos BIGINT, token_id BIGINT"
@@ -75,7 +72,7 @@ MERGES_SCHEMA = "step BIGINT, left STRING, right STRING, pair_count BIGINT"
 
 _WORDS = "filter(split(text, '\\\\s+'), x -> x != '')"
 
-_chaos_kill = _chaos_kill_env("SPARK_GRAFT_PACKIDS_KILL")
+_chaos_kill = chaos_kill_hook("SPARK_GRAFT_PACKIDS_KILL")
 
 
 class PackIdsStreaming(_FileTopicMixin):
@@ -123,44 +120,46 @@ class PackIdsStreaming(_FileTopicMixin):
         (vocab-sized), and the token->id table (bpe_token_ids's
         lexicographic-rank contract).
 
-        ATOMIC publish: the three pieces are staged under
-        ``tokenizer.staging`` and the COMPLETE directory is renamed into
-        place in one ``os.rename`` — Spark creates output directories
-        before job commit, so a bare-existence check on a directly
-        written ``tokenizer/`` dir was the torn-artifact hazard: a
-        SIGKILL during the vocab write would leave merges+seg complete
+        ATOMIC publish through ``commitlog.staged_rename``: the three
+        pieces are staged under ``tokenizer.staging`` and the COMPLETE
+        directory is renamed into place — Spark creates output
+        directories before job commit, so a bare-existence check on a
+        directly written ``tokenizer/`` dir was the torn-artifact hazard:
+        a SIGKILL during the vocab write would leave merges+seg complete
         and vocab empty, a restart would skip the freeze, and every
         token would silently emit as UNK (-1). After the rename the
         artifact either exists complete or not at all; a crash before
-        it leaves only the staging dir, which the retry overwrites."""
-        stage = self.tok_dir + ".staging"
-        shutil.rmtree(stage, ignore_errors=True)
-        merges = bpe.bpe_merges(fit_docs, k)
-        merges.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(stage, "merges")
-        )
-        words = fit_docs.select(F.explode(F.expr(_WORDS)).alias("word"))
-        seg = bpe.segment_spaced_with_merges(words, merges)
-        seg.write.mode("overwrite").parquet(os.path.join(stage, "seg"))
-        vocab = (
-            self.spark.read.schema(SEG_SCHEMA)
-            .parquet(os.path.join(stage, "seg"))
-            .select(F.explode(F.expr("split(trim(s), ' ')")).alias("token"))
-            .distinct()
-            .withColumn(
-                "token_id",
-                (F.row_number().over(Window.orderBy("token")) - 1).cast(
-                    "bigint"
-                ),
+        it leaves only the staging dir, which the retry clears."""
+        with staged_rename(
+            self.tok_dir,
+            self.tok_dir + ".staging",
+            _chaos_kill,
+            "mid-freeze",
+        ) as stage:
+            merges = bpe.bpe_merges(fit_docs, k)
+            merges.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(stage, "merges")
             )
-        )
-        vocab.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(stage, "vocab")
-        )
-        fsync_tree(stage)  # contents durable BEFORE the name
-        _chaos_kill("mid-freeze")
-        os.rename(stage, self.tok_dir)
-        fsync_dir(os.path.dirname(self.tok_dir) or ".")
+            words = fit_docs.select(F.explode(F.expr(_WORDS)).alias("word"))
+            seg = bpe.segment_spaced_with_merges(words, merges)
+            seg.write.mode("overwrite").parquet(os.path.join(stage, "seg"))
+            vocab = (
+                self.spark.read.schema(SEG_SCHEMA)
+                .parquet(os.path.join(stage, "seg"))
+                .select(
+                    F.explode(F.expr("split(trim(s), ' ')")).alias("token")
+                )
+                .distinct()
+                .withColumn(
+                    "token_id",
+                    (F.row_number().over(Window.orderBy("token")) - 1).cast(
+                        "bigint"
+                    ),
+                )
+            )
+            vocab.coalesce(1).write.mode("overwrite").parquet(
+                os.path.join(stage, "vocab")
+            )
 
     def _merges(self) -> DataFrame:
         return self.spark.read.schema(MERGES_SCHEMA).parquet(

@@ -16,8 +16,9 @@ protocol on the SHARED delta+marker commit log
 (``streaming/commitlog.py``): the carried state is a per-lang total
 TABLE (a handful of rows — language cardinality is a scale constant)
 instead of one scalar, committed in the same delta-then-ATOMIC-marker
-order (staged ``.tmp`` + rename — a SIGKILL mid-marker can never leave
-an empty marker that silently resets every language's carried total).
+order (the staged-rename commit of the ``commitlog`` module docstring —
+a SIGKILL mid-marker can never leave an empty marker that silently
+resets every language's carried total).
 A redelivered batch whose marker exists is skipped; a crash between
 delta and marker replays the same rows and overwrites the torn delta;
 languages absent from a batch carry their totals forward unchanged.
@@ -51,12 +52,12 @@ from responsive_pub_spark.operators.pipeline_ops import (
     PACK_BUDGET_TOKENS,
     bucketed_running_sum,
 )
-from responsive_pub_spark.streaming.commitlog import DeltaCommitLog
-from responsive_pub_spark.streaming.runtime import run_to_sink
-from responsive_pub_spark.streaming.shard_stream import (
-    _chaos_kill_env,
-    _FileTopicMixin,
+from responsive_pub_spark.streaming.commitlog import (
+    DeltaCommitLog,
+    chaos_kill_hook,
 )
+from responsive_pub_spark.streaming.runtime import run_to_sink
+from responsive_pub_spark.streaming.shard_stream import _FileTopicMixin
 
 DOCS_SCHEMA = "doc_id BIGINT, lang STRING, text STRING"
 ASSIGN_SCHEMA = (
@@ -65,7 +66,7 @@ ASSIGN_SCHEMA = (
 )
 TOTALS_SCHEMA = "lang STRING, post_total BIGINT"
 
-_chaos_kill = _chaos_kill_env("SPARK_GRAFT_PACK_KILL")
+_chaos_kill = chaos_kill_hook("SPARK_GRAFT_PACK_KILL")
 
 
 class PackStreaming(_FileTopicMixin):

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from responsive_pub_spark.streaming import state
+from responsive_pub_spark.streaming.commitlog import chaos_stall
 from responsive_pub_spark.streaming.runtime import run_to_sink
 
 #: retraction-topic schema (query A -> query B)
@@ -165,24 +166,7 @@ def _reagg_stage_vectorized(deltas: DataFrame) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def run(key_vals, pdf_iter, state_h):
-        # chaos hook — DOUBLE opt-in (r7 ADVICE): requires BOTH the
-        # explicit enable flag AND the workdir env var, so a stale
-        # SPARK_GRAFT_CHAOS_STALL plus a leftover workdir can never stall
-        # a real batch; the exists() probe only runs once both are set.
-        # The reference's examples inject failures mid-processing
-        # (STJoinExample.java:81-88); tests/test_chaos_sigkill.py arms
-        # this to SIGKILL the process while stage B is MID-BATCH —
-        # after stage A committed the retraction topic
-        chaos = (
-            os.environ.get("SPARK_GRAFT_CHAOS_STALL")
-            if os.environ.get("SPARK_GRAFT_CHAOS_ENABLE") == "1"
-            else None
-        )
-        if chaos and os.path.exists(os.path.join(chaos, "armed")):
-            open(os.path.join(chaos, "inflight"), "a").close()
-            import time as _time
-
-            _time.sleep(300)
+        chaos_stall()
         n0 = s0 = e0 = 0
         if state_h.exists and state_h.get[0]:
             n0, s0, e0 = pickle.loads(state_h.get[0])

@@ -24,9 +24,9 @@ the reference's CommitBuffer offset-fencing posture —
 internal/stores/CommitBuffer.java:340-423) with a carried scalar. Each
 micro-batch writes its assignment rows to ``delta-{batch_id}`` and THEN
 commits ``total-{batch_id}`` (one row: the post-batch corpus token
-total) via the log's ATOMIC staged-rename marker — a SIGKILL at any
-instant leaves either a committed batch or an invisible torn one, never
-a half-marker. ``base`` for batch N is the latest committed total below
+total) via the log's ATOMIC marker, the staged-rename commit of the
+``commitlog`` module docstring — a SIGKILL at any instant leaves either
+a committed batch or an invisible torn one, never a half-marker. ``base`` for batch N is the latest committed total below
 N — a single tiny-file read, never a scan of the log.
 
 Log growth is BOUNDED: :meth:`compact` rolls the committed tail into a
@@ -43,9 +43,7 @@ a reducer.
 
 from __future__ import annotations
 
-import fcntl
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,7 +54,11 @@ from responsive_pub_spark.operators.pipeline_ops import (
     shard_balanced_counts,
 )
 from responsive_pub_spark.functions import text as T
-from responsive_pub_spark.streaming.commitlog import DeltaCommitLog
+from responsive_pub_spark.streaming.commitlog import (
+    DeltaCommitLog,
+    chaos_kill_hook,
+    exclusive_flock,
+)
 from responsive_pub_spark.streaming.runtime import run_to_sink
 
 DOCS_SCHEMA = "doc_id BIGINT, text STRING"
@@ -73,28 +75,22 @@ _STAMP_BASE = 1_000_000_000
 _STAMP_MAX = 1_500_000_000
 
 
-def _chaos_kill_env(env_var: str):
-    """Build a SIGKILL-self hook gated on a named commit-protocol stage —
-    DOUBLE opt-in (the ann_stream._chaos_kill contract): requires BOTH
-    SPARK_GRAFT_CHAOS_ENABLE=1 and ``env_var``=<label>, so a leftover
-    env var alone can never kill a production run. Each lane gets its
-    OWN label env var (shard: SPARK_GRAFT_SHARD_KILL, pack:
-    SPARK_GRAFT_PACK_KILL) so a composed pipeline running both lanes in
-    one process arms exactly the lane under test."""
-
-    def chaos(label: str) -> None:
-        if (
-            os.environ.get("SPARK_GRAFT_CHAOS_ENABLE") == "1"
-            and os.environ.get(env_var) == label
-        ):
-            import signal
-
-            os.kill(os.getpid(), signal.SIGKILL)
-
-    return chaos
+_chaos_kill = chaos_kill_hook("SPARK_GRAFT_SHARD_KILL")
 
 
-_chaos_kill = _chaos_kill_env("SPARK_GRAFT_SHARD_KILL")
+def _stamp_inner(path: str) -> None:
+    """Stamp a DIRECTORY part entry's inner part files onto the entry's
+    own stamp (+1ms per file in name order), so a file-granular
+    streaming consumer (``maxFilesPerTrigger=1`` with
+    ``recursiveFileLookup``) processes waves in stamp order with a
+    deterministic within-wave file order."""
+    base = os.path.getmtime(path)
+    inner = sorted(n for n in os.listdir(path) if n.startswith("part-"))
+    for i, n in enumerate(inner, start=1):
+        stamp = base + i * 0.001
+        p = os.path.join(path, n)
+        if os.path.getmtime(p) != stamp:
+            os.utime(p, (stamp, stamp))
 
 
 class _FileTopicMixin:
@@ -105,7 +101,8 @@ class _FileTopicMixin:
     runtime.TopologyTestDriver.pipe).
 
     Single-writer contract: ``ingest`` takes an exclusive non-blocking
-    flock on ``<workdir>/ingest.lock`` — a second concurrent writer
+    flock (``commitlog.exclusive_flock``) on ``<workdir>/ingest.lock`` —
+    a second concurrent writer
     fails LOUDLY instead of silently interleaving stamps and breaking
     the wave-order assumption. Crash hardening: a part file left
     UNSTAMPED by a crash mid-ingest (real mtime, far above the stamp
@@ -123,22 +120,6 @@ class _FileTopicMixin:
         os.makedirs(self.docs_dir, exist_ok=True)
         self._restamp_all()
 
-    @contextmanager
-    def _ingest_lock(self):
-        fd = os.open(self._lock_path, os.O_CREAT | os.O_RDWR)
-        try:
-            try:
-                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-            except OSError:
-                raise RuntimeError(
-                    "concurrent ingest(): another writer holds "
-                    f"{self._lock_path}; the file topic is single-writer "
-                    "(wave order is the mtime stamp sequence)"
-                )
-            yield
-        finally:
-            os.close(fd)  # releases the flock
-
     def _part_files(self) -> "list[str]":
         return [
             n for n in os.listdir(self.docs_dir) if n.startswith("part-")
@@ -150,10 +131,8 @@ class _FileTopicMixin:
         position (distinct stamps sort stably); unstamped leftovers
         (mtime >= _STAMP_MAX) sort last — they were the newest write.
         A DIRECTORY entry (a committed handoff wave) also has its inner
-        part files normalized to the entry stamp (+1ms per file in name
-        order), so a file-granular streaming consumer sees waves in
-        stamp order even after a crash between the handoff rename and
-        its inner-stamp loop."""
+        part files normalized (:func:`_stamp_inner`), healing a crash
+        between the handoff rename and its inner-stamp loop."""
         names = sorted(
             self._part_files(),
             key=lambda n: (
@@ -167,14 +146,7 @@ class _FileTopicMixin:
             if os.path.getmtime(path) != stamp:
                 os.utime(path, (stamp, stamp))
             if os.path.isdir(path):
-                inner = sorted(
-                    f for f in os.listdir(path) if f.startswith("part-")
-                )
-                for j, f in enumerate(inner, start=1):
-                    fstamp = stamp + j * 0.001
-                    fpath = os.path.join(path, f)
-                    if os.path.getmtime(fpath) != fstamp:
-                        os.utime(fpath, (fstamp, fstamp))
+                _stamp_inner(path)
         self._pipe_n = len(names)
 
     def _ingest_files(self, write) -> None:
@@ -182,7 +154,12 @@ class _FileTopicMixin:
         single-writer lock, then stamp ONLY the files it created —
         leftovers from a crashed previous ingest were already folded
         into the sequence at construction and are not re-stamped."""
-        with self._ingest_lock():
+        with exclusive_flock(
+            self._lock_path,
+            "concurrent ingest(): another writer holds "
+            f"{self._lock_path}; the file topic is single-writer "
+            "(wave order is the mtime stamp sequence)",
+        ):
             self._restamp_all()
             before = set(self._part_files())
             write()

@@ -1,5 +1,5 @@
-"""Data durable before the commit point, for every publish that names a
-directory: each test records which paths ``os.fsync`` saw before the
+"""Data durable before the commit point, for every publish or commit that
+names a directory: each test records which paths ``os.fsync`` saw before the
 pointer ``os.replace`` or the commit ``os.rename``, and asserts that
 every file and directory of the published data was among them. Without
 that order a power loss can keep the new name over torn contents (the
@@ -14,6 +14,7 @@ import pytest
 from responsive_pub_spark.streaming.ann_stream import VECS_SCHEMA, IvfIncremental
 from responsive_pub_spark.streaming.bm25_stream import Bm25Streaming
 from responsive_pub_spark.streaming.commitlog import DeltaCommitLog
+from responsive_pub_spark.streaming.handoff import StampedTopic, ship
 from responsive_pub_spark.streaming.kv_sink import KeyValueTableSink
 from responsive_pub_spark.streaming.pack_ids_stream import PackIdsStreaming
 
@@ -99,6 +100,39 @@ def test_commit_log_compaction_fsyncs_base_before_flip(spark, tmp_path, order):
     order.assert_flipped_durably(
         log.pointer, _only_version(log.log_dir, "base-v")
     )
+
+
+def test_commit_log_marker_fsyncs_totals_before_rename(spark, tmp_path, order):
+    log = DeltaCommitLog(
+        spark, str(tmp_path / "log"), "k BIGINT", "total BIGINT"
+    )
+    log.write_delta(0, spark.createDataFrame([(0,)], "k BIGINT"))
+    log.commit_marker(0, spark.createDataFrame([(0,)], "total BIGINT"))
+    order.assert_renamed_durably(log.marker_path(0))
+
+
+def test_handoff_placement_fsyncs_wave_before_rename(spark, tmp_path, order):
+    schema = "doc_id BIGINT, text STRING"
+    src = StampedTopic(str(tmp_path / "src"))
+    src.append(
+        lambda: spark.createDataFrame(
+            [(i, f"doc {i}") for i in range(6)], schema
+        )
+        .repartition(2)
+        .write.mode("append")
+        .parquet(src.docs_dir)
+    )
+    dest = StampedTopic(str(tmp_path / "dest"))
+    out = ship(
+        spark,
+        src,
+        schema,
+        str(tmp_path / "leg.upto"),
+        dest.docs_dir,
+        lambda new: new.repartition(2),
+        dest_topic=dest,
+    )
+    order.assert_renamed_durably(out["shipped"])
 
 
 def _vecs(spark, lane, lo, n):
