@@ -26,8 +26,9 @@ micro-batch writes its assignment rows to ``delta-{batch_id}`` and THEN
 commits ``total-{batch_id}`` (one row: the post-batch corpus token
 total) via the log's ATOMIC marker, the staged-rename commit of the
 ``commitlog`` module docstring — a SIGKILL at any instant leaves either
-a committed batch or an invisible torn one, never a half-marker. ``base`` for batch N is the latest committed total below
-N — a single tiny-file read, never a scan of the log.
+a committed batch or an invisible torn one, never a half-marker.
+``base`` for batch N is the latest committed total below N — a single
+tiny-file read, never a scan of the log.
 
 Log growth is BOUNDED: :meth:`compact` rolls the committed tail into a
 versioned base segment behind an atomic pointer flip (the
@@ -102,13 +103,13 @@ class _FileTopicMixin:
 
     Single-writer contract: ``ingest`` takes an exclusive non-blocking
     flock (``commitlog.exclusive_flock``) on ``<workdir>/ingest.lock`` —
-    a second concurrent writer
-    fails LOUDLY instead of silently interleaving stamps and breaking
-    the wave-order assumption. Crash hardening: a part file left
-    UNSTAMPED by a crash mid-ingest (real mtime, far above the stamp
-    window) is folded back into the sequence at construction — sorted
-    after every stamped wave, the position it held as the last ingest
-    before the crash — so it can never tie with a later wave's stamp.
+    a second concurrent writer fails LOUDLY instead of silently
+    interleaving stamps and breaking the wave-order assumption. Crash
+    hardening: a part file left UNSTAMPED by a crash mid-ingest (real
+    mtime, far above the stamp window) is folded back into the sequence
+    at construction — sorted after every stamped wave, the position it
+    held as the last ingest before the crash — so it can never tie with
+    a later wave's stamp.
     """
 
     docs_dir: str
