@@ -25,5 +25,9 @@ docstrings), not its implementation.
 
 __version__ = "0.1.0"
 
+from responsive_pub_spark.compat import reuse_zip_directories
+
+reuse_zip_directories()
+
 from responsive_pub_spark.api import Pipeline, KStream, KTable  # noqa: F401
 from responsive_pub_spark.windows import TimeWindows, SessionWindows  # noqa: F401

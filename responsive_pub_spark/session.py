@@ -13,6 +13,10 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: JVM unified logging: drop the default stdout output, warnings to stderr
+_JVM_LOG_TO_STDERR = "-Xlog:disable -Xlog:all=warning:stderr"
+
+
 def build_spark(
     app_name: str = "responsive-pub-spark",
     master: str | None = None,
@@ -33,6 +37,11 @@ def build_spark(
       names its new files, and past the default of 32 Spark launched a
       distributed job per batch just to stat them (two 36-task jobs in an
       FK-join advance that picked up 36 files).
+    - JVM unified logging on stderr (``-Xlog:disable
+      -Xlog:all=warning:stderr``): the JVM's default prints its warnings,
+      such as a GC allocation warning, on stdout, where they land ahead of
+      a bench script's JSON line. A caller's own
+      ``spark.driver.extraJavaOptions`` replaces this default.
     """
     # before the JVM launches: local-mode Python workers inherit the driver
     # environment at JVM start, so the transformWithState lane's protobuf
@@ -61,6 +70,7 @@ def build_spark(
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.driver.extraJavaOptions", _JVM_LOG_TO_STDERR)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

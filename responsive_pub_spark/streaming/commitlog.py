@@ -50,7 +50,11 @@ stage, and the rerun clears it and writes the same entry again. After
 the rename the entry exists complete — step 3 makes that hold across
 power loss as well, so the committed name never outlives torn contents
 — and only the caller's own later steps (a handoff's marker publish)
-are left for the replay, which the committed name lets it skip.
+are left for the replay, which the committed name lets it skip. A rerun
+that stages under another name (a compaction whose fold name moved on, a
+handoff whose source stamp did) would leave the crashed stage behind for
+good, so the owner of such stages calls :func:`drop_stale_stages` for its
+own stage pattern, under its lock, before it stages again.
 
 **Delta+marker commit log** (:class:`DeltaCommitLog`), the exactly-once
 substrate of the incremental exporters (``shard_stream``,
@@ -77,6 +81,7 @@ both are double opt-in behind ``SPARK_GRAFT_CHAOS_ENABLE=1``.
 from __future__ import annotations
 
 import fcntl
+import glob
 import os
 import re
 import shutil
@@ -209,6 +214,17 @@ def staged_rename(target: str, stage: str, chaos=None, label=None,
     else:
         place(rename)
     fsync_dir(os.path.dirname(target) or ".")
+
+
+def drop_stale_stages(parent: str, pattern: str) -> int:
+    """Remove the entries of ``parent`` matching the glob ``pattern``: the
+    stages of crashed commits whose rerun stages under another name (see
+    the module docstring). Only the stages' owner calls it, under its
+    lock. Returns how many went."""
+    stale = glob.glob(os.path.join(glob.escape(parent), pattern))
+    for path in stale:
+        shutil.rmtree(path, ignore_errors=True)
+    return len(stale)
 
 
 def publish_pointer(path: str, value: str) -> None:

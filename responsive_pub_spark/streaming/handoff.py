@@ -79,6 +79,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from responsive_pub_spark.streaming.commitlog import (
+    drop_stale_stages,
+    exclusive_flock,
     publish_pointer,
     read_pointer,
     staged_rename,
@@ -239,53 +241,65 @@ def ship(
     directory renamed in, marker not yet published) so a SIGKILL chaos
     e2e can land a crash inside each.
 
+    A leg ships from one process at a time: the step holds an exclusive
+    flock on ``dest_dir/.leg-lock``. Under it, before staging, it removes
+    every ``.handoff-stage-*`` beside ``dest_dir`` — a crashed ship's
+    stage is named after that ship's S, which a later ship need not
+    reuse — so the parent of ``dest_dir`` holds one leg's stages only.
+
     Returns None when there is nothing new (NO Spark job ran), else
     ``{"upto": S, "shipped": dir_path, "source_files": [...]}``.
     """
     chaos = chaos or (lambda label: None)
     os.makedirs(dest_dir, exist_ok=True)
-    _assert_leg_owner(dest_dir, marker_path)
-    upto = max(read_marker(marker_path), _covered_upto(dest_dir))
-    new = [(s, p) for s, p in source.stamped_files() if s > upto]
-    if not new:
-        return None
-    S = new[-1][0]
-    target = os.path.join(dest_dir, f"part-handoff-{S:020d}.parquet")
-    # `target` can never already exist here: if it did, _covered_upto
-    # raised upto >= S, so no source stamp <= S survives in `new` and S
-    # could not have been recomputed as the max. The recovery for the
-    # renamed-but-unmarked crash window is the upto = max(marker,
-    # covered) line above, not a re-check of this name.
-    rows = build(
-        spark.read.schema(source_schema).parquet(*[p for _, p in new])
-    )
-    if wave_files is not None:
-        # repartition, never coalesce: coalesce(1) would collapse the
-        # whole build into the single writer task
-        rows = rows.repartition(int(wave_files))
-    stage = os.path.join(
-        os.path.dirname(dest_dir.rstrip("/")),
-        f".handoff-stage-{S:020d}",
-    )
-    # the staged write runs outside any lock; only the rename goes
-    # through the destination topic's ingest lock + stamp sequence (one
-    # handoff directory == one wave for every lane reading the shared
-    # topic) — a concurrent ingest would fail on the non-blocking lock
-    with staged_rename(
-        target,
-        stage,
-        chaos,
-        "handoff-staged",
-        place=None if dest_topic is None else dest_topic.append,
+    lock = os.path.join(dest_dir, ".leg-lock")
+    with exclusive_flock(
+        lock, f"concurrent handoff ship into {dest_dir}: another process "
+        f"holds {lock}; a leg ships from one process at a time"
     ):
-        rows.write.mode("overwrite").parquet(stage)
-    if dest_topic is not None:
-        _stamp_inner(target)
-    chaos("handoff-placed")
-    publish_pointer(marker_path, str(S))
-    return {
-        "upto": S,
-        "shipped": target,
-        "source_files": [p for _, p in new],
-    }
+        _assert_leg_owner(dest_dir, marker_path)
+        upto = max(read_marker(marker_path), _covered_upto(dest_dir))
+        new = [(s, p) for s, p in source.stamped_files() if s > upto]
+        if not new:
+            return None
+        S = new[-1][0]
+        target = os.path.join(dest_dir, f"part-handoff-{S:020d}.parquet")
+        # `target` can never already exist here: if it did, _covered_upto
+        # raised upto >= S, so no source stamp <= S survives in `new` and S
+        # could not have been recomputed as the max. The recovery for the
+        # renamed-but-unmarked crash window is the upto = max(marker,
+        # covered) line above, not a re-check of this name.
+        rows = build(
+            spark.read.schema(source_schema).parquet(*[p for _, p in new])
+        )
+        if wave_files is not None:
+            # repartition, never coalesce: coalesce(1) would collapse the
+            # whole build into the single writer task
+            rows = rows.repartition(int(wave_files))
+        parent = os.path.dirname(dest_dir.rstrip("/"))
+        stage = os.path.join(parent, f".handoff-stage-{S:020d}")
+        # a crashed ship's stage is named after its own S, which this one
+        # need not reuse once new source files arrived: collect them first
+        drop_stale_stages(parent, ".handoff-stage-*")
+        # the staged write runs outside the destination topic's ingest
+        # lock; only the rename goes through it + the stamp sequence (one
+        # handoff directory == one wave for every lane reading the shared
+        # topic) — a concurrent ingest would fail on the non-blocking lock
+        with staged_rename(
+            target,
+            stage,
+            chaos,
+            "handoff-staged",
+            place=None if dest_topic is None else dest_topic.append,
+        ):
+            rows.write.mode("overwrite").parquet(stage)
+        if dest_topic is not None:
+            _stamp_inner(target)
+        chaos("handoff-placed")
+        publish_pointer(marker_path, str(S))
+        return {
+            "upto": S,
+            "shipped": target,
+            "source_files": [p for _, p in new],
+        }
 

@@ -7,14 +7,17 @@ live store contents of any stateful operator, queryable as a DataFrame
 WITHOUT stopping the stream (the remote-store "shared state" advantage the
 reference gets from Cassandra/Mongo, we get from the checkpoint).
 
-For ``process_streaming`` operators the per-key GroupState holds the
-named-store payload described in the
-:mod:`~responsive_pub_spark.streaming.state` module docstring;
+For ``process_streaming`` operators GroupState holds one row per key
+bucket, mapping each record key to its named-store payload (both layouts
+in the :mod:`~responsive_pub_spark.streaming.state` module docstring);
 :func:`query_processor_state`, :func:`query_window_store` and
-:func:`query_session_store` open one store of it per group key and decode
-it into rows — the IQ ``store.all()`` surface plus keyed, range and
-prefix lookups. :func:`query_tws_map_state` reads the TWS MapState lane,
-one checkpoint row per store entry.
+:func:`query_session_store` open one store of each key's payload and
+decode it into rows — the IQ ``store.all()`` surface plus keyed, range
+and prefix lookups. ``group_keys`` prune by bucket id on the JVM side,
+with the lane's own hash, so only the requested keys' buckets reach
+Python and only those keys' payloads are decoded.
+:func:`query_tws_map_state` reads the TWS MapState lane, one checkpoint
+row per store entry.
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from __future__ import annotations
 import pickle
 from collections.abc import Callable, Iterable
 from functools import reduce
+from itertools import product
 from operator import and_, or_
 
 import pandas as pd
@@ -30,9 +34,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from responsive_pub_spark.streaming.segstore import SegmentedKeyValueStore
 from responsive_pub_spark.streaming.state import (
+    _BUCKET_COL,
     TwsMapStateStore,
     VersionedKeyValueStore,
+    _bucket_of,
+    _canon_key,
     _open_store_blob,
+    _uncanon_key,
+    _unpack_bucket,
 )
 
 
@@ -46,39 +55,82 @@ def read_state(spark: SparkSession, checkpoint: str, **options) -> DataFrame:
     return reader.load(checkpoint)
 
 
+def _key_tuples(group_keys: list) -> list[tuple]:
+    return [gk if isinstance(gk, tuple) else (gk,) for gk in group_keys]
+
+
 def _group_key_cond(key_cols: list[str], group_keys: list) -> Column:
     """JVM-side filter keeping ``group_keys`` (each one value, or a tuple
     over ``key_cols``): rows of other keys never reach ``mapInPandas``."""
     from pyspark.sql import functions as F
 
-    gks = [gk if isinstance(gk, tuple) else (gk,) for gk in group_keys]
     return reduce(or_, [
         reduce(and_, [F.col(c) == F.lit(v) for c, v in zip(key_cols, gk)])
-        for gk in gks
+        for gk in _key_tuples(group_keys)
     ])
+
+
+def _bucket_cond(group_keys: list) -> Column:
+    """JVM-side filter keeping the buckets ``group_keys`` hash to, with
+    the lane's ``_bucket_of``. A Python value does not name its Spark
+    type, and the hash depends on it, so each value stands for every type
+    it may hold: an int for INT (also TINYINT and SMALLINT, which hash
+    alike) and BIGINT, a float for DOUBLE and FLOAT."""
+    from pyspark.sql import functions as F
+
+    def typed(v) -> list[Column]:
+        if isinstance(v, bool) or v is None:
+            return [F.lit(v)]
+        if isinstance(v, int):
+            lits = [F.lit(v).cast("bigint")]
+            return lits + [F.lit(v).cast("int")] if -2**31 <= v < 2**31 else lits
+        if isinstance(v, float):
+            return [F.lit(v).cast("double"), F.lit(v).cast("float")]
+        return [F.lit(v)]
+
+    buckets = [
+        _bucket_of(*combo)
+        for gk in _key_tuples(group_keys)
+        for combo in product(*map(typed, gk))
+    ]
+    return F.col("bucket").isin(*buckets)
+
+
+def _key_ddl(key_cols: list[str], group_keys: "list | None") -> str:
+    """Output DDL of the key columns: STRING, DOUBLE or BOOLEAN where
+    every requested key holds that Python type in the column, else
+    BIGINT (a full scan has no values to go by)."""
+    names = {str: "STRING", float: "DOUBLE", bool: "BOOLEAN"}
+    gks = _key_tuples(group_keys or [])
+    out = []
+    for i, k in enumerate(key_cols):
+        types = {type(gk[i]) for gk in gks if gk[i] is not None}
+        only = types.pop() if len(types) == 1 else None
+        out.append(f"{k} {names.get(only, 'BIGINT')}")
+    return ", ".join(out)
 
 
 def _decode(
     flat: DataFrame,
-    key_cols: list[str],
-    fields: str,
+    names: list[str],
+    schema: str,
     rows_of: Callable[[tuple], Iterable[tuple]],
 ) -> DataFrame:
     """``mapInPandas`` over ``flat``: every tuple ``rows_of(row)`` yields
-    becomes one output row, led by the input row's ``key_cols``; ``fields``
-    is the DDL of the tuples' columns."""
-    names = [*key_cols, *(f.split()[0] for f in fields.split(","))]
+    becomes one output row with columns ``names`` of DDL ``schema``."""
 
     def decode(batches: Iterable[pd.DataFrame]):
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                kv = tuple(getattr(row, k) for k in key_cols)
-                out.extend(kv + rec for rec in rows_of(row))
+                out.extend(rows_of(row))
             yield pd.DataFrame(out, columns=names)
 
-    key_schema = ", ".join(f"{k} LONG" for k in key_cols)
-    return flat.mapInPandas(decode, f"{key_schema}, {fields}")
+    return flat.mapInPandas(decode, schema)
+
+
+def _field_names(fields: str) -> list[str]:
+    return [f.split()[0] for f in fields.split(",")]
 
 
 def _query_store_blobs(
@@ -91,25 +143,50 @@ def _query_store_blobs(
     rows_of_store: Callable[[bytes], Iterable[tuple]],
     options: dict,
 ) -> DataFrame:
-    """Shared body of the blob-lane readers: select each group key's
-    GroupState blob, prune to ``group_keys`` before the Python boundary,
-    open ``store_name`` in each blob (keys that never wrote that store
-    give no rows) and decode it with ``rows_of_store``."""
+    """Shared body of the blob-lane readers. ``process_streaming`` state
+    is one GroupState row per key bucket: requested ``group_keys`` prune
+    to their buckets before the Python boundary, and only their payloads
+    in each bucket map are opened. The partition-keyed state of
+    ``process_streaming_partitioned`` (``key_cols=["__part__"]``) holds
+    one payload per row, pruned by key. In each payload ``store_name`` is
+    opened (keys that never wrote that store give no rows) and decoded
+    with ``rows_of_store``."""
+    from pyspark.sql import functions as F
+
     raw = read_state(spark, checkpoint, **options)
-    flat = raw.select(
-        *[raw["key"][k].alias(k) for k in key_cols],
-        raw["value"]["groupState"]["blob"].alias("blob"),
-    )
-    if group_keys is not None:
-        flat = flat.filter(_group_key_cond(key_cols, group_keys))
+    blob = raw["value"]["groupState"]["blob"].alias("blob")
+    wanted = None
+    if _BUCKET_COL in raw.schema["key"].dataType.names:
+        flat = raw.select(raw["key"][_BUCKET_COL].alias("bucket"), blob)
+        if group_keys is not None:
+            flat = flat.filter(_bucket_cond(group_keys))
+            wanted = {_canon_key(gk) for gk in _key_tuples(group_keys)}
+
+        def payloads(row):
+            for ck, raw_key in _unpack_bucket(bytes(row.blob)).items():
+                if wanted is None or ck in wanted:
+                    yield _uncanon_key(ck), raw_key
+    else:
+        flat = raw.select(*[raw["key"][k].alias(k) for k in key_cols], blob)
+        if group_keys is not None:
+            flat = flat.filter(_group_key_cond(key_cols, group_keys))
+
+        def payloads(row):
+            yield tuple(getattr(row, k) for k in key_cols), bytes(row.blob)
 
     def rows_of(row) -> Iterable[tuple]:
         if row.blob is None:
-            return ()
-        blob = _open_store_blob(bytes(row.blob), store_name)
-        return () if blob is None else rows_of_store(blob)
+            return
+        for kv, payload in payloads(row):
+            store_blob = _open_store_blob(payload, store_name)
+            if store_blob is not None:
+                for rec in rows_of_store(store_blob):
+                    yield kv + rec
 
-    return _decode(flat, key_cols, fields, rows_of)
+    return _decode(
+        flat, [*key_cols, *_field_names(fields)],
+        f"{_key_ddl(key_cols, group_keys)}, {fields}", rows_of,
+    )
 
 
 def query_processor_state(
@@ -129,9 +206,10 @@ def query_processor_state(
     against a live store), WITHOUT the scan-everything-then-filter client
     path:
 
-    - ``group_keys``: prune to these processor keys BEFORE the Python
-      boundary — non-matching keys' blobs are never shipped to Python nor
-      unpickled (the expensive step; a point lookup unpickles ONE blob);
+    - ``group_keys``: prune to these processor keys' buckets BEFORE the
+      Python boundary — other buckets are never shipped to Python, and
+      inside a shipped bucket only the requested keys' payloads are
+      unpickled (the expensive step; a point lookup decodes ONE store);
     - ``store_key``: point ``get`` inside the store;
     - ``store_key_from``/``to``: inclusive ordered ``range`` scan, served
       by the store's sorted keyspace (KeyValueStore.range), not a full
@@ -365,11 +443,14 @@ def query_tws_map_state(
                     return ()
             elif not str(sk).startswith(store_key_prefix):
                 return ()
+        kv = tuple(getattr(row, k) for k in key_cols)
         return [
-            (repr(sk), repr(pickle.loads(bytes(row.vb))), float(row.write_ts))
+            kv + (repr(sk), repr(pickle.loads(bytes(row.vb))), float(row.write_ts))
         ]
 
+    fields = "store_key STRING, store_value STRING, write_ts DOUBLE"
+    key_schema = ", ".join(f"{k} LONG" for k in key_cols)
     return _decode(
-        flat, key_cols, "store_key STRING, store_value STRING, write_ts DOUBLE",
+        flat, [*key_cols, *_field_names(fields)], f"{key_schema}, {fields}",
         rows_of,
     )

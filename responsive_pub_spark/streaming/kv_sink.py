@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from responsive_pub_spark.streaming.commitlog import (
+    drop_stale_stages,
     maintenance_lock,
     staged_rename,
 )
@@ -195,6 +196,9 @@ class KeyValueTableSink:
                 out = out.withColumn(
                     self.ts_col, F.lit(None).cast(ts_type)
                 )
+            # a crashed compaction's stage carries its own fold name, which
+            # this one need not reuse: collect every such stage first
+            drop_stale_stages(self.path, "*.compacting")
             # commit point on exit: the fold becomes visible
             with staged_rename(target, target + ".compacting") as staged:
                 out.write.mode("overwrite").parquet(staged)

@@ -22,9 +22,9 @@ runs in two modes:
   ``KeyValueStore``; stream-time punctuators fire as event time advances.
   Deterministic, so every processor topology can be DuckDB-oracled.
 - **streaming**: ``applyInPandasWithState`` — the store contents live in
-  Spark's per-key GroupState (pickled), restored from the checkpoint on
-  restart; per micro-batch the same replay code runs over the batch's
-  records for that key.
+  Spark's GroupState (pickled), restored from the checkpoint on restart;
+  per micro-batch the same replay code runs over the batch's records for
+  each key.
 
 Arrow moves the batches (vectorized Python boundary); per-record Python work
 happens only inside this deliberately-imperative layer — everything
@@ -54,10 +54,26 @@ the GroupState lane ``process_streaming`` and the TWS MapState lane
 5. ``proc.close(ctx)`` and hand the fire lists back to the lane.
 
 A lane owns only how it builds or restores the store and how it persists
-it: nothing in batch, the segstore blob in the GroupState lane, the
+it: nothing in batch, the segstore blob in the GroupState lanes, the
 MapState flush plus the ``meta`` pickle in the TWS lane.
 
-Named-store blob layout (GroupState lane; read by ``iq``): a key whose
+Key-bucket layout (``process_streaming``; read by ``iq``): GroupState is
+keyed by ``pmod(hash(key columns), _BUCKETS)`` — Spark's Murmur3 ``hash``
+over the record key — so PySpark's per-group cost is paid once per bucket
+and micro-batch, not once per key. A bucket's blob is
+``b"BKT1" + _BUCKETS (4 bytes, big-endian) + pickle({key: payload})``,
+keyed by the record-key tuple (a NaN component stands as ``_NAN_KEY``).
+The lane reads the bucket's frames into row lists once, runs ``_run_key``
+for each key present with that key's own context and payload, and writes
+one output frame per bucket; keys the batch did not touch keep their
+payload bytes unchanged. ``_BUCKETS`` is a layout constant, never a
+session conf; any blob without the marker or with another bucket count —
+a checkpoint of the earlier per-key layout included — is refused with a
+message naming the layout change (MIGRATION.md).
+``process_streaming_partitioned`` shares the ``applyInPandasWithState``
+wrapper and keys GroupState by partition id, one payload per partition.
+
+Named-store payload layout (one key, or one partition): a key whose
 processor never named a store persists the primary store's blob alone;
 otherwise ``b"MST1" + pickle((primary_blob, {name: blob}))``. A named
 store the batch never opened keeps its restored bytes unchanged.
@@ -703,37 +719,18 @@ class Processor:
 _PART_COL = "__part__"
 
 
-def _replay(
-    proc: Processor,
-    ctx: ProcessorContext,
-    pdf: pd.DataFrame,
-    ts_col: str,
-    order_by: Sequence[str],
-    arrival_col: str | None = None,
-) -> None:
-    """Replay records through the processor. Default order is event time
-    (+tiebreaks); ``arrival_col`` replays in ARRIVAL order instead — records
-    may then be out-of-order in event time, exactly like a Kafka partition,
-    which is what KS grace/lateness semantics are defined against.
-
-    The order is that of a stable ``sort_values(order, kind="mergesort")``
-    with missing values last, and each record holds the values
-    ``itertuples`` would give. Most keys bring one or a few records per
-    micro-batch, so the body works on plain row lists: pandas' sort, row
-    iteration and Series access cost far more per key than the records
-    themselves (tests/test_property_state.py pins the equivalence)."""
+def _frame_records(pdf: pd.DataFrame, ts_col: str) -> tuple[list[str], list]:
+    """One input frame as ``(columns, [(ts seconds, row values)])``, the
+    form :func:`_replay` walks. Each row holds the values ``itertuples``
+    would give, and a float64 ``ts`` is read straight from the rows."""
     if _PART_COL in pdf.columns:
         # the task-model lanes' partition tag is routing, not record data
         pdf = pdf.drop(columns=[_PART_COL])
     cols = list(pdf.columns)
-    order = [arrival_col] if arrival_col is not None else [
-        ts_col, *[c for c in order_by if c != ts_col]
-    ]
-    missing = [c for c in order if c not in cols]
-    if missing:
-        raise KeyError(missing[0])
     if pdf.empty:
-        return
+        return cols, []
+    if ts_col not in cols:
+        raise KeyError(ts_col)
     # dtype=object keeps each column's own scalars (int stays int)
     rows = pdf.to_numpy(dtype=object).tolist()
     ti = cols.index(ts_col)
@@ -744,7 +741,38 @@ def _replay(
             # normalize to ns first: datetime64[us] would floor-div wrong
             ts = ts.astype("datetime64[ns]").astype("int64").to_numpy() / 1e9
         ts_vals = ts.astype("float64").tolist()
-    recs = list(zip(ts_vals, rows))
+    return cols, list(zip(ts_vals, rows))
+
+
+def _replay(
+    proc: Processor,
+    ctx: ProcessorContext,
+    records: "pd.DataFrame | tuple[list[str], list]",
+    ts_col: str,
+    order_by: Sequence[str],
+    arrival_col: str | None = None,
+) -> None:
+    """Replay records through the processor. ``records`` is an input
+    frame or its :func:`_frame_records` form. Default order is event time
+    (+tiebreaks); ``arrival_col`` replays in ARRIVAL order instead — records
+    may then be out-of-order in event time, exactly like a Kafka partition,
+    which is what KS grace/lateness semantics are defined against.
+
+    The order is that of a stable ``sort_values(order, kind="mergesort")``
+    with missing values last. Most keys bring one or a few records per
+    micro-batch, so the body works on plain row lists: pandas' sort, row
+    iteration and Series access cost far more per key than the records
+    themselves (tests/test_property_state.py pins the equivalence)."""
+    cols, recs = (
+        records if isinstance(records, tuple)
+        else _frame_records(records, ts_col)
+    )
+    order = [arrival_col] if arrival_col is not None else [
+        ts_col, *[c for c in order_by if c != ts_col]
+    ]
+    missing = [c for c in order if c not in cols]
+    if missing:
+        raise KeyError(missing[0])
     if len(recs) > 1:
         oi = [cols.index(c) for c in order]
         recs.sort(key=lambda tr: [_na_last(tr[1][i]) for i in oi])
@@ -770,14 +798,15 @@ def _na_last(v) -> tuple:
 def _run_key(
     proc: Processor,
     ctx: ProcessorContext,
-    frames: Iterable[pd.DataFrame],
+    frames: Iterable,
     ts_col: str,
     order_by: Sequence[str],
     arrival_col: str | None = None,
     fires: tuple = ((), ()),
     now: float | None = None,
 ) -> tuple[list, list]:
-    """The per-key body of every lane (module docstring). ``fires`` holds
+    """The per-key body of every lane (module docstring). ``frames``
+    holds input frames or their :func:`_frame_records` form. ``fires`` holds
     the restored (stream-time, wall-clock) next-fire lists; ``now`` is
     the processing time of a streaming batch, ``None`` in batch replay
     (wall-clock punctuators then never fire). Returns the new fire
@@ -828,6 +857,158 @@ def _open_store_blob(raw: bytes, name: str = "default") -> bytes | None:
     never wrote that store."""
     primary, extras = _unpack_store_blobs(raw)
     return primary if name == "default" else extras.get(name)
+
+
+#: key buckets of the GroupState lane. A layout constant: a checkpoint's
+#: keys live in the bucket this number hashes them to, so it must never
+#: follow a session conf (a restart under another value would look for
+#: every key in the wrong bucket).
+_BUCKETS = 16
+_BUCKET_COL = "__bucket__"
+_BUCKET_MAGIC = b"BKT1"
+
+_LAYOUT_CHANGED = (
+    "process_streaming state at this checkpoint is not in the key-bucket "
+    "layout ({found}). The lane keeps one GroupState row per key bucket "
+    "({magic}, {buckets} buckets); state written per record key by an "
+    "earlier engine version, or by another operator, cannot be read. "
+    "Rebuild it: stop the query, move the checkpoint aside and replay the "
+    "source topic from its start into a fresh checkpoint (MIGRATION.md)."
+)
+
+
+class _NaNKeyType:
+    """The bucket map's stand-in for a NaN key component: NaN != NaN, so a
+    float NaN key could never be looked up again. Survives pickling as the
+    same object."""
+
+    _instance = None
+
+    def __new__(cls):
+        if cls._instance is None:
+            cls._instance = super().__new__(cls)
+        return cls._instance
+
+    def __reduce__(self):
+        return (_NaNKeyType, ())
+
+    def __repr__(self):
+        return "nan"
+
+
+_NAN_KEY = _NaNKeyType()
+
+
+def _canon_key(key: tuple) -> tuple:
+    """``key`` as the bucket map holds it: NaN components become
+    ``_NAN_KEY``."""
+    return tuple(_NAN_KEY if type(v) is float and v != v else v for v in key)
+
+
+def _uncanon_key(key: tuple) -> tuple:
+    """Inverse of :func:`_canon_key`."""
+    return tuple(float("nan") if v is _NAN_KEY else v for v in key)
+
+
+def _pack_bucket(payloads: dict) -> bytes:
+    """A bucket's GroupState blob: magic, bucket count, then the pickled
+    map of canonical record key -> that key's payload."""
+    return (
+        _BUCKET_MAGIC + _BUCKETS.to_bytes(4, "big")
+        + pickle.dumps(payloads, protocol=pickle.HIGHEST_PROTOCOL)
+    )
+
+
+def _unpack_bucket(blob: bytes) -> dict:
+    """Inverse of :func:`_pack_bucket`; any other blob raises
+    ``ValueError`` naming the layout change."""
+    if blob[:4] != _BUCKET_MAGIC:
+        found = "no bucket marker"
+    elif int.from_bytes(blob[4:8], "big") != _BUCKETS:
+        found = f"{int.from_bytes(blob[4:8], 'big')} buckets"
+    else:
+        return pickle.loads(blob[8:])
+    raise ValueError(
+        _LAYOUT_CHANGED.format(
+            found=found, magic=_BUCKET_MAGIC.decode(), buckets=_BUCKETS
+        )
+    )
+
+
+def _bucket_of(*key_cols):
+    """The bucket id Column of a record key: ``pmod(hash(key), _BUCKETS)``
+    with Spark's Murmur3 ``hash``."""
+    from pyspark.sql import functions as F  # local: keep module import-light
+
+    return F.pmod(F.hash(*key_cols), F.lit(_BUCKETS))
+
+
+def _null_flag(key_col: str) -> str:
+    """Column carrying ``isnull(key_col)`` for a float key: pandas shows
+    both null and NaN as NaN, Spark groups them apart."""
+    return f"__isnull_{key_col}__"
+
+
+def _key_kind(dtype) -> str:
+    """``"i"`` for integral, ``"f"`` for float/double, ``"o"`` for any
+    other key type: how :func:`_frame_keys` turns the column back into the
+    values Spark grouped by."""
+    from pyspark.sql.types import DoubleType, FloatType, IntegralType
+
+    if isinstance(dtype, IntegralType):
+        return "i"
+    return "f" if isinstance(dtype, (FloatType, DoubleType)) else "o"
+
+
+def _frame_keys(pdf: pd.DataFrame, keys: list[str], kinds: list[str]):
+    """(canonical keys, keys) of every row of a bucket frame, each a tuple
+    over ``keys``: the values Spark grouped by, so null is ``None`` (pandas
+    shows it as NaN in numeric columns and NaT in datetime ones), an
+    integral key stays ``int``, and a float NaN stays NaN."""
+    canon, real = [], []
+    for k, kind in zip(keys, kinds):
+        col = pdf[k]
+        vals = col.tolist()
+        if kind == "f":
+            nulls = pdf[_null_flag(k)].tolist()
+            vals = [None if n else v for v, n in zip(vals, nulls)]
+            real.append(vals)
+            canon.append([_NAN_KEY if v != v else v for v in vals])
+            continue
+        if kind == "i" and col.dtype.kind == "f":
+            vals = [None if v != v else int(v) for v in vals]
+        elif kind == "o" and col.hasnans:
+            vals = [None if pd.isna(v) else v for v in vals]
+        real.append(vals)
+        canon.append(vals)
+    return list(zip(*canon)), list(zip(*real))
+
+
+def _merge_outputs(ctxs: Sequence[ProcessorContext]) -> pd.DataFrame:
+    """One output frame for the rows every context forwarded, in context
+    order; a column a context never forwarded is ``None`` in its rows."""
+    cols: dict = {}
+    n = 0
+    for ctx in ctxs:
+        if ctx._out_cols is None:
+            continue
+        for c, vals in zip(ctx._out_cols, ctx._out_data):
+            col = cols.get(c)
+            if col is None:
+                cols[c] = col = [None] * n
+            col.extend(vals)
+        n += len(ctx._out_data[0]) if ctx._out_data else 0
+        for col in cols.values():
+            if len(col) < n:
+                col.extend([None] * (n - len(col)))
+    if not cols:
+        return pd.DataFrame()
+    out = pd.DataFrame(cols, index=pd.RangeIndex(n), copy=False)
+    for c, dtype in out.dtypes.items():
+        # ints beside None infer float64, which rounds ints past 2**53
+        if dtype.kind == "f" and any(type(v) is int for v in cols[c]):
+            out[c] = pd.Series(cols[c], dtype=object)
+    return out
 
 
 def _tag_partitions(
@@ -956,6 +1137,121 @@ def _empty_output(schema: "StructType | str") -> pd.DataFrame:
     )
 
 
+def _restore_key(raw: "bytes | None", ttl_seconds: float | None):
+    """(store, fires, named-store blobs) of one key's payload, or a fresh
+    store when the key has none yet."""
+    from responsive_pub_spark.streaming.segstore import SegmentedKeyValueStore
+
+    if not raw:
+        return SegmentedKeyValueStore(ttl_seconds), ((), ()), {}
+    primary, extra_blobs = _unpack_store_blobs(raw)
+    store, *fires = SegmentedKeyValueStore.from_blob(primary, ttl_seconds)
+    return store, fires, extra_blobs
+
+
+def _run_restored(
+    processor_factory, key, raw, frames, ts_col, order_by, ttl_seconds, now
+) -> tuple[bytes, ProcessorContext]:
+    """Restore one key's payload, run ``_run_key`` over ``frames`` and
+    return the new payload with the key's context."""
+    store, fires, extra_blobs = _restore_key(raw, ttl_seconds)
+    ctx = ProcessorContext(key, store)
+    ctx._extra_blobs = extra_blobs
+    fires = _run_key(
+        processor_factory(), ctx, frames, ts_col, order_by,
+        fires=fires, now=now,
+    )
+    return _pack_store_blobs(store.to_blob(*fires), ctx), ctx
+
+
+def _bucket_body(
+    keys: list[str],
+    kinds: list[str],
+    processor_factory: Callable[[], Processor],
+    ts_col: str,
+    order_by: Sequence[str],
+    ttl_seconds: float | None,
+):
+    """Group body of :func:`process_streaming`: one call per key bucket.
+    The bucket's rows are read into row lists once and split by record
+    key; each key present runs ``_run_key`` with its own context against
+    its own payload in the bucket map, and the bucket yields one output
+    frame."""
+    routing = [_BUCKET_COL] + [
+        _null_flag(k) for k, kind in zip(keys, kinds) if kind == "f"
+    ]
+
+    def body(_bucket, pdf_iter, blob):
+        payloads = {} if blob is None else _unpack_bucket(blob)
+        groups: dict = {}
+        cols: list = []
+        for pdf in pdf_iter:
+            canon, real = _frame_keys(pdf, keys, kinds)
+            drop = [c for c in routing if c in pdf.columns]
+            cols, recs = _frame_records(
+                pdf.drop(columns=drop) if drop else pdf, ts_col
+            )
+            for ck, kv, rec in zip(canon, real, recs):
+                group = groups.get(ck)
+                if group is None:
+                    groups[ck] = group = (kv, [])
+                group[1].append(rec)
+        now = time.time()
+        ctxs = []
+        for ck, (kv, recs) in groups.items():
+            payloads[ck], ctx = _run_restored(
+                processor_factory, kv, payloads.get(ck), [(cols, recs)],
+                ts_col, order_by, ttl_seconds, now,
+            )
+            ctxs.append(ctx)
+        return _pack_bucket(payloads), _merge_outputs(ctxs)
+
+    return body
+
+
+def _partition_body(
+    processor_factory: Callable[[], Processor],
+    ts_col: str,
+    order_by: Sequence[str],
+    ttl_seconds: float | None,
+):
+    """Group body of :func:`process_streaming_partitioned`: the group is a
+    partition, whose one store every key routed there shares."""
+
+    def body(key_vals, pdf_iter, blob):
+        blob, ctx = _run_restored(
+            processor_factory, key_vals, blob, pdf_iter, ts_col, order_by,
+            ttl_seconds, time.time(),
+        )
+        return blob, ctx._to_pdf()
+
+    return body
+
+
+def _group_state_fn(body, output_schema: "StructType | str"):
+    """The ``applyInPandasWithState`` function shared by the GroupState
+    lanes: ``body(group key, frames, blob or None)`` returns the group's
+    new blob and its output frame."""
+    empty = _empty_output(output_schema)
+
+    def run(key_vals, pdf_iter: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
+        blob = state.get[0] if state.exists else None
+        blob, out = body(key_vals, pdf_iter, blob or None)
+        state.update((blob,))
+        yield empty if out.empty else out
+
+    return run
+
+
+def _apply_group_state(grouped, body, output_schema, output_mode: str) -> DataFrame:
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    return grouped.applyInPandasWithState(
+        _group_state_fn(body, output_schema), output_schema, _STATE_SCHEMA,
+        output_mode, GroupStateTimeout.NoTimeout,
+    )
+
+
 def process_streaming(
     sdf: DataFrame,
     key: Sequence[str],
@@ -968,42 +1264,32 @@ def process_streaming(
 ) -> DataFrame:
     """Streaming PAPI: same processor, state checkpointed per key.
 
-    The store lives in GroupState as a segmented delta-log blob
-    (:mod:`responsive_pub_spark.streaming.segstore` — the CommitBuffer.java
-    delta-flush analog): per micro-batch only the batch's writes are
-    pickled as a new delta segment and unchanged segment bytes pass
-    through, so a 1-row update to a huge store is O(delta), not O(store).
-    Recovery comes from Spark's checkpoint (SURVEY.md §3.2). Within each
-    micro-batch the key's records replay in event-time order; across
-    batches the store persists. The per-key body and the named-store blob
-    layout are described in the module docstring.
+    GroupState holds one row per key bucket, ``pmod(hash(key),
+    _BUCKETS)``, so PySpark's per-group cost is paid per bucket, not per
+    key. Each key's payload in the bucket is its own segmented delta-log
+    store (:mod:`responsive_pub_spark.streaming.segstore` — the
+    CommitBuffer.java delta-flush analog): per micro-batch only the
+    batch's writes are pickled as a new delta segment and unchanged bytes
+    pass through, so a 1-row update to a huge store is O(delta), not
+    O(store). Recovery comes from Spark's checkpoint (SURVEY.md §3.2).
+    Within each micro-batch a key's records replay in event-time order
+    with the key's own context, so stream time, punctuators, TTL and named
+    stores stay per key. The bucket layout, the per-key body and the
+    named-store layout are described in the module docstring.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from responsive_pub_spark.streaming.segstore import SegmentedKeyValueStore
+    from pyspark.sql import functions as F  # local: keep module import-light
 
     keys = list(key)
-    empty = _empty_output(output_schema)
-
-    def run(key_vals, pdf_iter: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-        if state.exists and state.get[0]:
-            raw, extra_blobs = _unpack_store_blobs(state.get[0])
-            store, *fires = SegmentedKeyValueStore.from_blob(raw, ttl_seconds)
-        else:
-            store, fires = SegmentedKeyValueStore(ttl_seconds), ((), ())
-            extra_blobs = {}
-        ctx = ProcessorContext(key_vals, store)
-        ctx._extra_blobs = extra_blobs
-        fires = _run_key(
-            processor_factory(), ctx, pdf_iter, ts_col, order_by,
-            fires=fires, now=time.time(),
-        )
-        state.update((_pack_store_blobs(store.to_blob(*fires), ctx),))
-        out = ctx._to_pdf()
-        yield empty if out.empty else out
-
-    return sdf.groupBy(*keys).applyInPandasWithState(
-        run, output_schema, _STATE_SCHEMA, output_mode, GroupStateTimeout.NoTimeout
+    kinds = [_key_kind(sdf.schema[k].dataType) for k in keys]
+    for k, kind in zip(keys, kinds):
+        if kind == "f":
+            sdf = sdf.withColumn(_null_flag(k), F.isnull(k))
+    sdf = sdf.withColumn(_BUCKET_COL, _bucket_of(*[F.col(k) for k in keys]))
+    body = _bucket_body(
+        keys, kinds, processor_factory, ts_col, order_by, ttl_seconds
+    )
+    return _apply_group_state(
+        sdf.groupBy(_BUCKET_COL), body, output_schema, output_mode
     )
 
 
@@ -1369,13 +1655,8 @@ def process_streaming_partitioned(
     still reads the partition's segments; size partitions accordingly
     (this is exactly the reference's per-partition state shape). ctx.key
     is ``(partition_id,)``; records carry their own key columns."""
-    return process_streaming(
-        _tag_partitions(sdf, list(key), num_partitions, partitioner),
-        key=[_PART_COL],
-        processor_factory=processor_factory,
-        output_schema=output_schema,
-        ts_col=ts_col,
-        order_by=order_by,
-        ttl_seconds=ttl_seconds,
-        output_mode=output_mode,
+    body = _partition_body(processor_factory, ts_col, order_by, ttl_seconds)
+    tagged = _tag_partitions(sdf, list(key), num_partitions, partitioner)
+    return _apply_group_state(
+        tagged.groupBy(_PART_COL), body, output_schema, output_mode
     )

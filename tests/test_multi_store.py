@@ -118,13 +118,6 @@ def test_untouched_named_store_blob_passes_through(monkeypatch):
     big_blob = big.to_blob()
     primary = SegmentedKeyValueStore().to_blob()
 
-    class _Capture:  # stands in for the streaming DataFrame
-        def groupBy(self, *keys):  # noqa: N802
-            return self
-
-        def applyInPandasWithState(self, fn, *args):  # noqa: N802
-            self.fn = fn
-
     class _State:
         exists = True
 
@@ -148,16 +141,19 @@ def test_untouched_named_store_blob_passes_through(monkeypatch):
     monkeypatch.setattr(
         SegmentedKeyValueStore, "from_blob", classmethod(counting_from_blob)
     )
-    cap = _Capture()
-    state.process_streaming(
-        cap, ["k"], _DefaultOnly, "k STRING", ts_col="ts"
+    fn = state._group_state_fn(
+        state._bucket_body(["k"], ["o"], _DefaultOnly, "ts", (), None),
+        "k STRING",
     )
-    gs = _State(
-        state._pack_store_blobs(primary, _ctx_with_blobs({"big": big_blob}))
-    )
-    list(cap.fn(("a",), iter([pd.DataFrame({"k": ["a"], "ts": [1.0]})]), gs))
+    gs = _State(state._pack_bucket({
+        ("a",): state._pack_store_blobs(
+            primary, _ctx_with_blobs({"big": big_blob})
+        ),
+    }))
+    list(fn((0,), iter([pd.DataFrame({"k": ["a"], "ts": [1.0]})]), gs))
     assert decoded == [primary]  # only the default store was restored
-    assert state._open_store_blob(gs.get[0], "big") == big_blob
+    payload = state._unpack_bucket(gs.get[0])[("a",)]
+    assert state._open_store_blob(payload, "big") == big_blob
     monkeypatch.undo()
 
     # and once touched, it restores lazily and round-trips

@@ -407,18 +407,11 @@ def test_replay_keeps_the_missing_order_column_error():
 
 
 def test_streaming_lane_shares_one_empty_output_frame():
-    """Keys that forward nothing get the lane's one schema-typed empty
-    frame, built once per closure instead of once per key."""
+    """Buckets whose keys forward nothing get the lane's one schema-typed
+    empty frame, built once per closure instead of once per bucket."""
     import pandas as pd
 
     from responsive_pub_spark.streaming import state as st_mod
-
-    class _Capture:
-        def groupBy(self, *keys):  # noqa: N802
-            return self
-
-        def applyInPandasWithState(self, fn, *args):  # noqa: N802
-            self.fn = fn
 
     class _State:
         exists, blob = False, None
@@ -430,14 +423,13 @@ def test_streaming_lane_shares_one_empty_output_frame():
         def process(self, ctx, rec):
             pass
 
-    cap = _Capture()
-    st_mod.process_streaming(
-        cap, key=["k"], processor_factory=_Silent,
-        output_schema="k STRING, n BIGINT",
+    fn = st_mod._group_state_fn(
+        st_mod._bucket_body(["k"], ["o"], _Silent, "ts", (), None),
+        "k STRING, n BIGINT",
     )
     frame = pd.DataFrame({"k": ["a"], "ts": [1.0]})
-    out1 = list(cap.fn(("a",), iter([frame]), _State()))
-    out2 = list(cap.fn(("b",), iter([frame]), _State()))
+    out1 = list(fn((0,), iter([frame]), _State()))
+    out2 = list(fn((1,), iter([frame]), _State()))
     assert len(out1) == len(out2) == 1
     assert out1[0] is out2[0]
     assert list(out1[0].columns) == ["k", "n"] and out1[0].empty

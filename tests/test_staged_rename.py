@@ -244,3 +244,98 @@ def test_stall_gate_needs_enable_and_the_armed_flag(
     assert (tmp_path / "inflight").exists() == stalls
     assert sleeps == ([300] if stalls else [])
 
+
+
+class _Frame:
+    """The slice of a DataFrame that KV compaction and a handoff ship use:
+    every transform returns the frame, and the write leaves one file."""
+
+    schema = None
+
+    def withColumn(self, *_a):  # noqa: N802 - the DataFrame method name
+        return self
+
+    def repartition(self, *_a):
+        return self
+
+    @property
+    def write(self):
+        return self
+
+    def mode(self, _mode):
+        return self
+
+    def parquet(self, path):
+        _write(path, {"part-0": "rows"})
+
+
+class _Spark:
+    """``spark.read[.schema(...)].parquet(...)`` returning a :class:`_Frame`."""
+
+    @property
+    def read(self):
+        return self
+
+    def schema(self, _ddl):
+        return self
+
+    def parquet(self, *_paths):
+        return _Frame()
+
+
+def test_compaction_collects_a_crashed_compactions_stage(tmp_path, monkeypatch):
+    """A compaction that crashed before its rename left its stage under
+    its own fold name; the next compaction folds more deltas, so it
+    stages under another name and must collect the old stage itself."""
+    from responsive_pub_spark.streaming import kv_sink
+
+    monkeypatch.setattr(kv_sink, "F", type("F", (), {"lit": staticmethod(lambda v: v)}))
+    monkeypatch.setattr(
+        kv_sink.KeyValueTableSink, "_latest", lambda self, spark, files: _Frame()
+    )
+    table = tmp_path / "kv"
+    sink = kv_sink.KeyValueTableSink(str(table), ["k"], ["v"])
+    for b in (1, 2, 3):
+        _write(sink._delta_dir(b), {"part-0": f"delta {b}"})
+    crashed = str(table / f"delta-{2:020d}.g1.parquet.compacting")
+    _write(crashed, {"part-0": "torn fold"})
+
+    sink.compact(_Spark())
+    assert sorted(os.listdir(table)) == [f"delta-{3:020d}.g1.parquet"]
+
+
+def _ship(tmp_path, stamps):
+    from responsive_pub_spark.streaming import handoff
+
+    class _Source:
+        def stamped_files(self):
+            return [(s, str(tmp_path / f"src-{s}")) for s in stamps]
+
+    return handoff.ship(
+        _Spark(), _Source(), "x STRING", str(tmp_path / "marker"),
+        str(tmp_path / "legs" / "dest"), lambda rows: rows,
+    )
+
+
+def test_handoff_collects_a_crashed_ships_stage(tmp_path):
+    """A ship that crashed before its rename left ``.handoff-stage-S``;
+    once new source files move S, the next ship stages under another name
+    and must collect the old stage itself (other entries stay)."""
+    legs = tmp_path / "legs"
+    crashed = str(legs / f".handoff-stage-{3:020d}")
+    _write(crashed, {"part-0": "torn wave"})
+    _write(str(legs / "other"), {"part-0": "not a stage"})
+
+    got = _ship(tmp_path, [3, 5])
+    assert got["upto"] == 5
+    assert sorted(os.listdir(legs)) == ["dest", "other"]
+    assert _read(got["shipped"]) == {"part-0": "rows"}
+    assert commitlog.read_pointer(str(tmp_path / "marker")) == "5"
+
+
+def test_a_second_ship_of_one_leg_raises(tmp_path):
+    dest = tmp_path / "legs" / "dest"
+    os.makedirs(dest)
+    with exclusive_flock(str(dest / ".leg-lock"), "held"):
+        with pytest.raises(RuntimeError, match="concurrent handoff ship"):
+            _ship(tmp_path, [5])
