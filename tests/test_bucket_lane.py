@@ -36,6 +36,18 @@ def _rows(out):
     return sorted((r.key, r.n) for r in out)
 
 
+def _assert_bucket_rows(spark, checkpoint):
+    """The checkpoint holds bucket rows: keyed by the bucket id, each
+    blob led by the bucket marker."""
+    rows = iq.read_state(spark, checkpoint).collect()
+    assert rows and all(
+        list(r.key.asDict()) == ["__bucket__"]
+        and 0 <= r.key["__bucket__"] < state._BUCKETS
+        and bytes(r.value.groupState.blob)[:4] == b"BKT1"
+        for r in rows
+    )
+
+
 def test_null_and_nan_keys_keep_their_own_state(spark, tmp_path):
     """Spark groups a null and a NaN double key apart, and an integral key
     with nulls stays int; pandas shows all three missing shapes as NaN,
@@ -50,6 +62,7 @@ def test_null_and_nan_keys_keep_their_own_state(spark, tmp_path):
     ]
     drv.pipe([{"d": v, "ts": 2.0} for v in (nan, None, 1.5)])
     assert _rows(drv.advance()) == [("(1.5,)", 2), ("(None,)", 3), ("(nan,)", 2)]
+    _assert_bucket_rows(spark, drv.checkpoint)
 
     drv = TopologyTestDriver(
         spark, "i BIGINT, ts DOUBLE", _counting(["i"]), str(tmp_path / "i")
@@ -76,6 +89,7 @@ def test_two_column_key(spark, tmp_path):
     ]
     drv.pipe([{"u": "a", "r": 2, "ts": 3.0}, {"u": None, "r": 2, "ts": 3.0}])
     assert _rows(drv.advance()) == [("('a', 2)", 2), ("(None, 2)", 1)]
+    _assert_bucket_rows(spark, drv.checkpoint)
 
 
 class _Ticker(state.Processor):
@@ -123,6 +137,8 @@ def test_stream_time_and_punctuators_stay_per_key_in_one_bucket(spark, tmp_path)
     assert sorted((r.key, r.what, r.t) for r in drv.advance()) == [
         (b, "fire", 10.0), (b, "time", 12.0)
     ]
+    # both keys live in one bucket row
+    assert len(iq.read_state(spark, drv.checkpoint).collect()) == 1
 
 
 @pytest.mark.parametrize(
