@@ -218,4 +218,6 @@ def test_worker_running_a_batch_has_the_zip_shim(spark, tmp_path):
     )
     drv.pipe([{"k": str(i), "ts": 1.0} for i in range(8)])
     out = drv.advance()
-    assert len(out) == 8 and all(r.patched for r in out)
+    # the shim installs only where invalidate_caches re-reads (< 3.13)
+    expected = sys.version_info < (3, 13)
+    assert len(out) == 8 and all(r.patched is expected for r in out)
