@@ -10,11 +10,19 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
 #: JVM unified logging: drop the default stdout output, warnings to stderr
 _JVM_LOG_TO_STDERR = "-Xlog:disable -Xlog:all=warning:stderr"
+
+#: the fork-free local file system (``jvm/NioLocalFileSystem.java``), built
+#: by ``scripts/build_jvm_shim.py``
+_SHIM_JAR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "nio-local-fs.jar"
+)
+_SHIM_CLASS = "responsive.spark.fs.NioLocalFileSystem"
 
 
 def build_spark(
@@ -42,6 +50,24 @@ def build_spark(
       such as a GC allocation warning, on stdout, where they land ahead of
       a bench script's JSON line. A caller's own
       ``spark.driver.extraJavaOptions`` replaces this default.
+    - Fork-free local checkpoint I/O on ``local`` and ``local[N]``
+      masters. Without the native ``libhadoop`` (not loaded here),
+      Hadoop's local file system runs a ``chmod`` child process for every
+      file and directory it creates, and its link-status lookup runs
+      ``readlink`` on every FileContext rename. Each fork costs the 8g
+      driver JVM about 5 ms, and an FK-join advance made hundreds of them
+      in its WAL, commit-log and state-store writes.
+      ``jvm/NioLocalFileSystem.java`` does the chmod (plain rwx modes) and
+      the symlink probe through ``java.nio`` and leaves every other
+      operation stock, so checkpoints, ``.crc`` sidecars and file modes
+      come out the same and stay readable both ways.
+      ``spark.driver.extraClassPath`` gains its jar (after a caller's own
+      entries), and ``spark.hadoop.fs.file.impl`` and
+      ``spark.hadoop.fs.AbstractFileSystem.file.impl`` name it, unless the
+      caller set them. Only where the driver is the only JVM (not
+      ``local-cluster``, not a cluster master), and only when no
+      SparkContext runs yet: a ``spark.hadoop`` conf reaching a JVM
+      without the jar would fail every file operation.
     """
     # before the JVM launches: local-mode Python workers inherit the driver
     # environment at JVM start, so the transformWithState lane's protobuf
@@ -51,29 +77,25 @@ def build_spark(
     ensure_protobuf_runtime()
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+    if shuffle_partitions is None:
+        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+    conf = {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # events fixture stores TIMESTAMP(NANOS); Spark's parquet reader has
         # no nanos type — read as long and convert (sources/readers.py).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or int(cpus) if str(cpus).isdigit() else 32),
-        )
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.extraJavaOptions", _JVM_LOG_TO_STDERR)
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.driver.extraJavaOptions": _JVM_LOG_TO_STDERR,
+    }
+    conf.update(extra_conf or {})
     # scale-dependent overrides without code edits: every SPARK_GRAFT_CONF_*
     # env var becomes a Spark conf (key = suffix with '__' -> '.'), e.g.
     #   SPARK_GRAFT_CONF_spark__sql__join__preferSortMergeJoin=false
@@ -81,7 +103,44 @@ def build_spark(
     # its own values here instead of forking the session factory.
     for env_k, v in os.environ.items():
         if env_k.startswith("SPARK_GRAFT_CONF_"):
-            builder = builder.config(
-                env_k[len("SPARK_GRAFT_CONF_"):].replace("__", "."), v
-            )
+            conf[env_k[len("SPARK_GRAFT_CONF_"):].replace("__", ".")] = v
+    master = conf.get("spark.master") or master or f"local[{cpus}]"
+    # local-cluster[...] runs executors in JVMs of their own: stock Hadoop
+    driver_only = master == "local" or master.startswith("local[")
+    if driver_only and _jvm_can_take_the_shim():
+        _use_local_fs_shim(conf)
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _jvm_can_take_the_shim() -> bool:
+    """True when the shim's confs cannot reach a JVM that lacks its jar:
+    no SparkContext runs yet, and the driver JVM is either still to be
+    launched (it then starts with the jar) or already loads the shim."""
+    if SparkContext._active_spark_context is not None:
+        return False
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return True
+    try:
+        gateway.jvm.java.lang.Class.forName(_SHIM_CLASS)
+        return True
+    except Exception:
+        return False
+
+
+def _use_local_fs_shim(conf: dict) -> None:
+    """Put the shim's jar on the driver classpath (after a caller's own
+    entries) and register its two classes for ``file:``, unless the
+    caller registered its own."""
+    cp = conf.get("spark.driver.extraClassPath")
+    if not cp:
+        conf["spark.driver.extraClassPath"] = _SHIM_JAR
+    elif _SHIM_JAR not in cp.split(os.pathsep):
+        conf["spark.driver.extraClassPath"] = cp + os.pathsep + _SHIM_JAR
+    conf.setdefault("spark.hadoop.fs.file.impl", _SHIM_CLASS)
+    conf.setdefault(
+        "spark.hadoop.fs.AbstractFileSystem.file.impl", _SHIM_CLASS + "$Fs"
+    )
