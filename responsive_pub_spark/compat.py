@@ -36,6 +36,18 @@ otherwise every importer keeps the cached directory. Python 3.13's
 install there. ``responsive_pub_spark/__init__.py`` installs it, so each
 Python worker that unpickles an engine closure has it from its first task
 on, and workers that never import the engine are left as they are.
+
+The JVM-side shim, ``jvm/NioLocalFileSystem.java``: without the native
+``libhadoop`` (``NativeCodeLoader.isNativeCodeLoaded()`` is false in a
+plain PySpark install), Hadoop's ``RawLocalFileSystem`` sets the mode of
+every file and directory it creates by running ``chmod`` as a child
+process, and ``FileUtil.readLink`` runs ``readlink`` for every symlink
+check, which FileContext (behind Spark's checkpoint file manager) makes
+on every rename. The shim does plain-rwx chmod with
+``Files.setPosixFilePermissions`` and the symlink check with
+``Files.isSymbolicLink``; sticky/setuid/setgid modes and real symlinks
+take the stock path. ``session.build_spark`` registers it for ``file:``
+on ``local``/``local[N]`` masters only, before the driver JVM starts.
 """
 
 from __future__ import annotations

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JError
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
@@ -127,7 +128,7 @@ def _jvm_can_take_the_shim() -> bool:
     try:
         gateway.jvm.java.lang.Class.forName(_SHIM_CLASS)
         return True
-    except Exception:
+    except Py4JError:  # ClassNotFoundException: launched without the jar
         return False
 
 

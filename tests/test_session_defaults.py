@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from py4j.protocol import Py4JError
 
 from responsive_pub_spark import session
 
@@ -137,7 +138,7 @@ class _Jvm:
 
     def forName(self, name):  # noqa: N802 - the Java method name
         if not self.loads_shim:
-            raise RuntimeError(f"ClassNotFoundException: {name}")
+            raise Py4JError(f"ClassNotFoundException: {name}")
 
 
 @pytest.mark.parametrize("loads_shim", [True, False])
